@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.cli.GraftSession
 
 /** Dedup-at-scale micro-benchmark: generates a multi-hundred-MB
   * synthetic corpus ENTIRELY ON EXECUTORS (spark.range → codegen text
@@ -37,12 +39,7 @@ object DedupBench {
     def enabled(stage: String): Boolean = stageFilter.forall(_.contains(stage))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]")
 
     // Synthetic corpus: doc id → 24 words of 8 hex chars each, from a
     // seed shared by every 11th doc and its predecessor (≈9% exact

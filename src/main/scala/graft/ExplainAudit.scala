@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.cli.GraftSession
 
 /** Plan-shape gate over the join-bearing pipeline operators: prints the
   * join lines of every audited plan and exits nonzero if any plan
@@ -78,7 +78,7 @@ object ExplainAudit {
     // not broadcast (corpus-scale side; the factor-26 run died on it
     // once r15's narrower classes shrank its size estimate under the
     // threshold) — the explicit SHUFFLE_HASH trades the broadcast for
-    // one exchange, sf0.1-neutral (OptProbe cov-shj 0.742 s vs
+    // one exchange, sf0.1-neutral (round-16 A/B: cov-shj 0.742 s vs
     // broadcast 0.801 s) and scale-safe
     "p62_repeat_mining" -> (4, 1),
     "p64_ann_ivfpq" -> (2, 3),
@@ -96,9 +96,7 @@ object ExplainAudit {
     "q46_global_offset" -> (2, 0))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.build("local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     val printPins = sys.env.get("SPARK_GRAFT_AUDIT_PRINT").contains("1")

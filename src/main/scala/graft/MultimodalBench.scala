@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
+import graft.cli.GraftSession
 import graft.multimodal.{AudioCodec, ImageCodec, VideoCodec}
 
 /** Scale evidence for the multimodal codec surface (p10/p16/p18/p23),
@@ -43,12 +42,7 @@ object MultimodalBench {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]")
     import spark.implicits._
 
     def timed(name: String, expect: (Long, Long))(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.cli.GraftSession
 
 /** Optimization-round measurement helper: writes `.explain("formatted")`
   * for named declared queries to plans/<tag>/<name>_<suffix>.txt, so a
@@ -23,12 +23,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "/root/repo/plans/r15"))
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (wanted == "all") SparkEntry.queries.keys.toVector.sorted

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.cli.GraftSession
 
 /** sf1.0 testdata synthesis (measurement only — VERDICT r8 ask #2).
   *
@@ -50,13 +52,8 @@ object ScaleUp {
       s"factor must be in [1, 26] (got $factor): the per-copy text/embedding " +
         "rotations repeat past 26 copies and would reintroduce exact-dup clusters")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[${Runtime.getRuntime.availableProcessors()}]")
+    spark.conf.set("spark.sql.shuffle.partitions", 32L)
 
     def tbl(n: String): DataFrame = spark.read.parquet(s"$srcDir/$n.parquet")
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.queries.{QDef, Relational}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -32,9 +33,17 @@ object SparkEntry {
       .orderBy(col("revenue").desc)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs the graft functions and rules on its session first (a
+    * no-op on a session from [[graft.cli.GraftSession.build]]), so a
+    * session built elsewhere runs every operator the same way. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map(q => q.name -> q.fn).toMap
+    defs.map { q =>
+      q.name -> { (s: SparkSession, d: String) =>
+        GraftFunctions.register(s)
+        q.fn(s, d)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+
+import graft.cli.GraftSession
 
 /** Stateful-streaming throughput micro-benchmark: drives N synthetic
   * events through the real Structured Streaming path — MemoryStream
@@ -41,12 +42,8 @@ object StreamBench {
     val batches = 20
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "4") // sized to state
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]")
+    spark.conf.set("spark.sql.shuffle.partitions", 4L) // sized to state
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     var failed = false

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.cli.GraftSession
 
 /** Tokenizer-at-scale micro-benchmark for the p55/p56 shapes:
   * synthesizes an n-doc corpus entirely on executors (the driver never
@@ -35,12 +37,7 @@ object TokenBench {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]")
     import spark.implicits._
 
     var failed = false

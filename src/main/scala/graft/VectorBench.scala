@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.cli.GraftSession
 
 /** ANN-at-scale micro-benchmark: 1M+ synthetic 64-dim vectors
   * generated ON EXECUTORS (seeded SplittableRandom per id — bench
@@ -29,12 +31,7 @@ object VectorBench {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]")
     import spark.implicits._
 
     val nTables = 8

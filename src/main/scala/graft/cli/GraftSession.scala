@@ -17,18 +17,27 @@ import graft.sources._
   */
 object GraftSession {
 
+  /** The one session factory: every main, the CLI and the test
+    * session build through it, so every path runs with the same
+    * functions, optimizer rules and session conf (one shuffle
+    * partition per task slot, UTC, Spark's ANSI default; scripts turn
+    * ANSI off for themselves in [[ScriptRunner.run]]). Callers that
+    * need another value set it on the returned session. */
   def build(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")): SparkSession = {
-    val cpus = Runtime.getRuntime.availableProcessors()
     val spark = SparkSession.builder()
       .appName("sqawk-spark")
       .master(master)
-      .config("spark.sql.shuffle.partitions", math.max(4, cpus).toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      // SQLite is maximally permissive about coercions; ANSI errors on
-      // e.g. comparing 'c' with 10 would break dialect emulation.
-      .config("spark.sql.ansi.enabled", "false")
+      // Spark's generated-class cache holds 100 classes in 4 LRU
+      // segments keyed by a per-JVM hash, so a session that runs a few
+      // dozen plans again and again (script after script, Bench/Verify
+      // sweeps) recompiles a different, random share of them on every
+      // pass. Sized to keep a long-lived session's classes.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toLong)
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(spark)
     spark

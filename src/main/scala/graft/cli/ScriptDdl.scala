@@ -126,7 +126,6 @@ object ScriptDdl {
     * surfaces keep working. */
   private def commitTable(spark: SparkSession, name: String,
       df: org.apache.spark.sql.DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(spark) // marker builder, idempotent
     val wrapped = df.select(df.schema.fields.map { f =>
       val c = col(s"`${f.name}`")
       // tag value: the AffinityKey for numeric/"NONE" columns, "TEXT"

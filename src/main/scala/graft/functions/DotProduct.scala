@@ -104,16 +104,3 @@ final case class DotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_dot"
 }
-
-object DotProduct {
-  /** Register `graft_dot` on the session. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      { children: Seq[Expression] =>
-        if (children.length != 2)
-          throw new IllegalArgumentException("graft_dot expects 2 arguments")
-        DotProduct(children.head, children(1))
-      },
-      "built-in")
-}

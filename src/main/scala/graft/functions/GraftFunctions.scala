@@ -3,7 +3,7 @@ package graft.functions
 import java.util.regex.{Matcher, Pattern}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
 
 /** Compatibility scalar functions the reference registers into SQLite
@@ -97,31 +97,29 @@ object GraftFunctions {
     if (p.matcher(s).matches()) 1 else 0
   }
 
-  /** Register every compat function on the session. Idempotent. */
+  /** The optimizer rules, in the order they must run:
+    *  - AffinityOrdering: SQLite cross-type ordering for affinity
+    *    columns;
+    *  - GlobalRankRewrite: single-row_number empty-partition windows
+    *    range-partition instead of collapsing into one task (after
+    *    AffinityOrdering, so the storage-class key rewrite lands in the
+    *    rank's order first);
+    *  - SortKeyMaterialization: expensive (regex-bearing) sort keys
+    *    evaluate once per row in a projection below the Sort/GlobalRank
+    *    instead of inside the sort comparator (last, after both
+    *    rewrites above have produced the final sort keys). */
+  private val rules = Seq(graft.plans.AffinityOrdering,
+    graft.plans.GlobalRankRewrite, graft.plans.SortKeyMaterialization)
+
+  /** Install every graft function, optimizer rule and planner strategy
+    * on the session. [[graft.cli.GraftSession.build]] calls it for the
+    * sessions it builds, [[graft.SparkEntry.queries]] for sessions built
+    * elsewhere. The rules go in last, so a session that has them has
+    * everything and returns at once. */
   def register(spark: SparkSession): Unit = {
-    // SQLite cross-type ordering for affinity columns; experimental
-    // rules apply to any session, including ones not built by
-    // GraftSession (tests). Guarded for idempotence.
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.AffinityOrdering))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.AffinityOrdering
-    // Distributed global rank: single-row_number empty-partition
-    // windows range-partition instead of collapsing into one task
-    // (graft.plans.GlobalRank — rule AFTER AffinityOrdering so the
-    // storage-class key rewrite lands in the rank's order first).
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.GlobalRankRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.GlobalRankRewrite
-    // Expensive (regex-bearing) sort keys evaluate once per row in a
-    // projection below the Sort/GlobalRank instead of inside the sort
-    // comparator (plans/SortKeyMaterialization.scala — LAST, after
-    // both rewrites above have produced the final sort keys).
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.SortKeyMaterialization))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SortKeyMaterialization
-    if (!spark.experimental.extraStrategies.contains(graft.plans.GlobalRankStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.GlobalRankStrategy
+    val exp = spark.experimental
+    if (rules.forall(exp.extraOptimizations.contains) &&
+        exp.extraStrategies.contains(graft.plans.GlobalRankStrategy)) return
     val u = spark.udf
     // Fixed-arity compat functions as StaticInvoke builders: direct
     // static calls inside whole-stage codegen, no ScalaUDF
@@ -149,28 +147,38 @@ object GraftFunctions {
     registerUnary(spark, "sqlite_cast_text", SqliteCastText)
     registerUnary(spark, "sqlite_cast_numeric", SqliteCastNumeric)
 
-    // Beyond-reference codegen kernels, exposed to scripts too:
-    // graft_dot(array<double>, array<double>) and
-    // graft_rollhash_min(string).
-    DotProduct.register(spark)
-    RollingHashMin.register(spark)
+    // Beyond-reference codegen kernels, exposed to scripts too.
+    registerUnary(spark, "graft_md5longs", Md5Longs(_))
+    registerUnary(spark, "graft_md5min8", Md5Min8(_))
+    registerUnary(spark, "graft_rollhash_min", RollingHashMin(_))
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction("graft_dot", {
+      case Seq(a, b) => DotProduct(a, b)
+      case _ => throw new IllegalArgumentException("graft_dot expects 2 arguments")
+    }, "scala_udf")
+    registry.createOrReplaceTempFunction("graft_kmr_emit", {
+      case Seq(c, Literal(mn: Int, IntegerType), Literal(mx: Int, IntegerType)) =>
+        KmrEmit(c, mn, mx)
+      case _ => throw new IllegalArgumentException(
+        "graft_kmr_emit expects (array<string>, int literal, int literal)")
+    }, "scala_udf")
 
     // Marker builder for AffinityValue (a custom expression cannot be
-    // built through the public Column API; the registry can). Used by
-    // both the ingest pipeline and the script DDL layer so affinity
-    // provenance survives projection collapse. IDEMPOTENT: every DML
-    // rebind re-applies the marker to the column it rebinds, so a
-    // long script used to stack wrappers one level per statement —
+    // built through the public Column API; the registry can). Ingested
+    // and script-DDL tables wrap their affinity columns in it so
+    // affinity provenance survives projection collapse. IDEMPOTENT:
+    // every DML rebind re-applies the marker to the column it rebinds,
+    // so a long script used to stack wrappers one level per statement —
     // and each comparison/sort key rewrite then multiplied the
     // ever-deeper operand into its 6 key slots, growing expression
     // trees exponentially with script length (round-10 fuzz seed
     // 2665 OOMed a 4 GB heap on a 6-row table). A re-wrap now
     // collapses to depth 1, keeping the NEWEST affinity.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    registry.createOrReplaceTempFunction(
       "graft_affinity_value",
       { children =>
         val aff = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(s, _) => s.toString
+          case Literal(s, _) => s.toString
           case other => other.eval(null).toString
         }
         children.head match {
@@ -182,6 +190,11 @@ object GraftFunctions {
       "scala_udf")
     registerStatic(spark, "graft_fold_accents", StringType, 1,
       Class.forName("graft.functions.TextNorm"))
+
+    exp.extraOptimizations = exp.extraOptimizations.filterNot(rules.contains) ++ rules
+    exp.extraStrategies =
+      exp.extraStrategies.filterNot(_ == graft.plans.GlobalRankStrategy) :+
+        graft.plans.GlobalRankStrategy
   }
 
   private def registerUnary(

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -143,18 +143,4 @@ object KmrEmit {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `graft_kmr_emit` on the session. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmr_emit",
-      { children: Seq[Expression] =>
-        children match {
-          case Seq(c, Literal(mn: Int, IntegerType), Literal(mx: Int, IntegerType)) =>
-            KmrEmit(c, mn, mx)
-          case _ => throw new IllegalArgumentException(
-            "graft_kmr_emit expects (array<string>, int literal, int literal)")
-        }
-      },
-      "built-in")
 }

@@ -92,15 +92,4 @@ object Md5Longs {
     new GenericInternalRow(Array[Any](
       h1, h2, be(0, 4), be(4, 4), be(8, 4), be(12, 4)))
   }
-
-  /** Register `graft_md5longs` on the session. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5longs",
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException("graft_md5longs expects 1 argument")
-        Md5Longs(children.head)
-      },
-      "built-in")
 }

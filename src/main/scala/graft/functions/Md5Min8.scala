@@ -110,15 +110,4 @@ object Md5Min8 {
     }
     UTF8String.fromString(new String(out))
   }
-
-  /** Register `graft_md5min8` on the session. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5min8",
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException("graft_md5min8 expects 1 argument")
-        Md5Min8(children.head)
-      },
-      "built-in")
 }

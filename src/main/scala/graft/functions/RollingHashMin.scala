@@ -81,15 +81,4 @@ object RollingHashMin {
     }
     min
   }
-
-  /** Register `graft_rollhash_min` on the session. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rollhash_min",
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException("graft_rollhash_min expects 1 argument")
-        RollingHashMin(children.head)
-      },
-      "built-in")
 }

@@ -482,7 +482,6 @@ object Ingest {
             col("nm"))),
           AwkOptions(), TableOptions(nf = 2))
         df.createOrReplaceTempView("g_aff")
-        graft.functions.GraftFunctions.register(s)
         s.sql("""SELECT a2, CAST(row_number() OVER (ORDER BY a1, a2) AS BIGINT) AS rnk
                 |FROM g_aff""".stripMargin)
       },

@@ -723,7 +723,6 @@ object Pipeline {
         // interpreted HOF paying a lambda dispatch + substring alloc +
         // hex encode per window (functions/Md5Min8.scala; pinned
         // byte-identical to the HOF spelling in FingerprintSpec).
-        graft.functions.Md5Min8.register(s)
         docs(s, d)
           .withColumn("norm", regexp_replace(lower(col("text")), "\\s+", " "))
           .select(
@@ -751,14 +750,11 @@ object Pipeline {
     // values positionally in SQL. Pure projection: zero shuffle.
     QDef(
       "p17_rolling_fingerprint",
-      (s, d) => {
-        graft.functions.RollingHashMin.register(s)
-        docs(s, d)
-          .withColumn("norm", regexp_replace(lower(col("text")), "\\s+", " "))
-          .select(col("doc_id"),
-            expr("graft_rollhash_min(norm)").as("roll_min"),
-            greatest(length(col("norm")) - 7, lit(1)).cast("long").as("n_windows"))
-      },
+      (s, d) => docs(s, d)
+        .withColumn("norm", regexp_replace(lower(col("text")), "\\s+", " "))
+        .select(col("doc_id"),
+          expr("graft_rollhash_min(norm)").as("roll_min"),
+          greatest(length(col("norm")) - 7, lit(1)).cast("long").as("n_windows")),
       Some("""WITH n AS (
              |  SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS norm,
              |         CAST(greatest(length(regexp_replace(lower(text), '\s+', ' ', 'g')) - 7, 1) AS BIGINT) AS n_windows
@@ -791,7 +787,7 @@ object Pipeline {
     QDef(
       "p08_knn_brute",
       (s, d) => {
-        val e = withNorm(s, emb(s, d))
+        val e = withNorm(emb(s, d))
         val q = broadcast(e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn")))
         val c = e.select(col("vec_id").as("nid"), col("v").as("cv"), col("nrm").as("cn"))
@@ -1443,7 +1439,7 @@ object Pipeline {
     QDef(
       "p11_modality_join",
       (s, d) =>
-        docs(s, d).join(withNorm(s, emb(s, d)), col("doc_id") === col("vec_id"))
+        docs(s, d).join(withNorm(emb(s, d)), col("doc_id") === col("vec_id"))
           .select(
             col("doc_id"), col("lang"), col("label").cast("long").as("label"),
             col("n_chars"), round(col("nrm"), 4).as("emb_norm")),
@@ -1687,7 +1683,6 @@ object Pipeline {
     QDef(
       "p28_embed_centroid",
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         val e = emb(s, d).select(col("vec_id"), col("label"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         val cent = e.select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
@@ -2146,7 +2141,6 @@ object Pipeline {
     QDef(
       "p37_semantic_dedup",
       (s, d) => {
-        graft.functions.DotProduct.register(s)
         // K from a metadata-only parquet count (like annArity)
         val k = semCells(emb(s, d).count())
         // one kernel pass, checkpointed: the assignment feeds three
@@ -2175,7 +2169,7 @@ object Pipeline {
           // and that cell is either cold or hot
           coldPairs.unionByName(hotPairs)
         }
-        val vecsRaw = withNorm(s, emb(s, d)).select(col("vec_id"), col("v"), col("nrm"))
+        val vecsRaw = withNorm(emb(s, d)).select(col("vec_id"), col("v"), col("nrm"))
         // same verify-join policy as cosineNearDupPairs: broadcast the
         // corpus below the bound, shuffle-hash above — the pair table
         // is the big side
@@ -2368,19 +2362,16 @@ object Pipeline {
     // Scale shape: pure codegen projection, zero shuffle.
     QDef(
       "p40_accent_fold",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
-        docs(s, d)
-          .withColumn("aug", concat(
-            col("text"),
-            when(col("doc_id") % 3 =!= 0, lit(" Café MÜNCHEN")).otherwise(lit("")),
-            when(col("doc_id") % 4 === 0, lit(" àçcénts Ñandú über")).otherwise(lit("")),
-            when(col("doc_id") % 5 === 0, lit(" ÉLÈVE façade")).otherwise(lit(""))))
-          .select(col("doc_id"),
-            expr("graft_fold_accents(aug)").as("folded"),
-            expr("CAST(length(aug) AS BIGINT)").as("n_raw"),
-            expr("CAST(length(graft_fold_accents(aug)) AS BIGINT)").as("n_folded"))
-      },
+      (s, d) => docs(s, d)
+        .withColumn("aug", concat(
+          col("text"),
+          when(col("doc_id") % 3 =!= 0, lit(" Café MÜNCHEN")).otherwise(lit("")),
+          when(col("doc_id") % 4 === 0, lit(" àçcénts Ñandú über")).otherwise(lit("")),
+          when(col("doc_id") % 5 === 0, lit(" ÉLÈVE façade")).otherwise(lit(""))))
+        .select(col("doc_id"),
+          expr("graft_fold_accents(aug)").as("folded"),
+          expr("CAST(length(aug) AS BIGINT)").as("n_raw"),
+          expr("CAST(length(graft_fold_accents(aug)) AS BIGINT)").as("n_folded")),
       Some("""WITH aug AS (
              |  SELECT doc_id, text
              |    || CASE WHEN doc_id % 3 <> 0 THEN ' Café MÜNCHEN' ELSE '' END
@@ -2501,7 +2492,6 @@ object Pipeline {
     QDef(
       "p43_kmv_distinct",
       (s, d) => {
-        graft.functions.Md5Longs.register(s)
         val grams = docs(s, d)
           .withColumn("toks", expr(toksExpr))
           .select(col("lang"), explode(expr(
@@ -2680,7 +2670,6 @@ object Pipeline {
     QDef(
       "p45_bloom_decontaminate",
       (s, d) => {
-        graft.functions.Md5Longs.register(s)
         // array_distinct (round 15, guide §1.2 step 2): every
         // downstream consumer is per-(doc, gram) DISTINCT — dedup
         // in-doc repeats inside the projection (zero shuffle) so the
@@ -2821,7 +2810,6 @@ object Pipeline {
     QDef(
       "p46_cms_heavy_hitters",
       (s, d) => {
-        graft.functions.Md5Longs.register(s)
         val toks = docs(s, d)
           .withColumn("toks", expr(toksExpr))
           .select(explode(col("toks")).as("tok"))
@@ -2904,7 +2892,6 @@ object Pipeline {
     QDef(
       "p47_hll_distinct",
       (s, d) => {
-        graft.functions.Md5Longs.register(s)
         val grams = docs(s, d)
           .withColumn("toks", expr(toksExpr))
           .select(col("lang"), explode(expr(bigramExpr)).as("g"))
@@ -3057,7 +3044,6 @@ object Pipeline {
     QDef(
       "p49_source_overlap",
       (s, d) => {
-        graft.functions.Md5Longs.register(s)
         val grams = docs(s, d)
           .withColumn("toks", expr(toksExpr))
           .select(col("source"), explode(expr(bigramExpr)).as("g"))
@@ -4189,7 +4175,6 @@ object Pipeline {
         // the start marker travels as a flag (see has_start below).
         // E stays the ONLY corpus-scale frame (~6 rows per token),
         // checkpointed once for its two consumers.
-        graft.functions.KmrEmit.register(s)
         val e = t
           .select(col("doc_id"), size(col("toks")).as("n_toks"),
             explode(expr(s"graft_kmr_emit(toks, $RepMinK, $RepMaxK)")).as("w"))
@@ -4662,7 +4647,6 @@ object Pipeline {
         // spelling paid a 32-char hex alloc plus two substr+conv
         // string-parses per shingle. Values bit-identical
         // (Md5LongsSpec pins h1/h2 to the conv(substr(md5)) spelling).
-        graft.functions.Md5Longs.register(s)
         val hashed = shRaw.select(col("doc_id"), expr("graft_md5longs(sh)").as("m"))
           .select(col("doc_id"),
             col("m.h1").as("h1"), col("m.h2").as("h2"))
@@ -4745,7 +4729,6 @@ object Pipeline {
     // to the conv(substr(md5)) spelling); the separate projection
     // keeps CollapseProject from inlining the non-cheap kernel into
     // the four field references (the buildMinhashPairs precedent).
-    graft.functions.Md5Longs.register(s)
     val tok = docs(s, d)
       .select(col("doc_id"), explode(expr(toksExpr)).as("tok"))
       .select(col("doc_id"), expr("graft_md5longs(tok)").as("m"))
@@ -4819,7 +4802,6 @@ object Pipeline {
   private val BroadcastVerifyMaxVecs = 500000L
 
   private def cosineNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     // RAW (pre-distinct) candidates: dedup runs AFTER the similarity
     // filter, where the survivors are a sliver of the collisions —
     // the pre-filter distinct was a full shuffle of the pair table,
@@ -4832,7 +4814,7 @@ object Pipeline {
     // vector side broadcasts below BroadcastVerifyMaxVecs (the pair
     // table is tens of times larger than the corpus — shuffling IT
     // was the measured factor-26 cost), shuffle-hash joins above.
-    val vecsRaw = withNorm(s, emb(s, d))
+    val vecsRaw = withNorm(emb(s, d))
       .select(col("vec_id"), col("v"), col("nrm"))
     val vecs =
       if (emb(s, d).count() <= BroadcastVerifyMaxVecs) broadcast(vecsRaw)
@@ -5205,7 +5187,6 @@ object Pipeline {
   }
 
   private def ivfTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val cells = ivfCells(s, d)
     // Query side probes its nProbes nearest cells; the data side is
     // each vector's single home cell (rn = 1). Per-cell equi-join —
@@ -5216,7 +5197,7 @@ object Pipeline {
         col("x.cell") === col("y.cell") && col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("qid"), col("y.vec_id").as("nid"))
       .distinct()
-    val vecs = withNorm(s, emb(s, d)).select(col("vec_id"), col("v"), col("nrm"))
+    val vecs = withNorm(emb(s, d)).select(col("vec_id"), col("v"), col("nrm"))
     cand
       .join(vecs.as("va"), col("qid") === col("va.vec_id"))
       .join(vecs.as("vb"), col("nid") === col("vb.vec_id"))
@@ -5579,13 +5560,10 @@ object Pipeline {
        |WHERE inter * 2 >= za.n + zb.n - inter""".stripMargin
 
   /** Embedding as double array plus its L2 norm (via the codegen
-    * `graft_dot` self-product — registered here so every caller gets
-    * it without its own register call). */
-  private def withNorm(s: SparkSession, e: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(s)
+    * `graft_dot` self-product). */
+  private def withNorm(e: DataFrame): DataFrame =
     e.withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
-  }
 
   // Stopword lists for the lang-ID heuristic (public common stopwords).
   private def enStops = Seq("the", "a", "of", "and", "to", "in", "is", "on")

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** The delegated relational surface of the reference (SURVEY.md §2.2):
   * sqawk passes SQL verbatim to SQLite, so our engine must cover the
@@ -402,30 +401,21 @@ object Relational {
 
     QDef(
       "q32_glob",
-      (s, d) => {
-        GraftFunctions.register(s)
-        Tables.part(s, d).selectExpr("p_partkey", "glob('*re*', p_name) AS m")
-      },
+      (s, d) => Tables.part(s, d).selectExpr("p_partkey", "glob('*re*', p_name) AS m"),
       Some("SELECT p_partkey, CAST(p_name GLOB '*re*' AS INTEGER) AS m FROM part")),
 
     QDef(
       "q33_regexp_fn",
-      (s, d) => {
-        GraftFunctions.register(s)
-        Tables.part(s, d).selectExpr("p_partkey", "regexp('[aeiou]{2}', p_name) AS m")
-      },
+      (s, d) => Tables.part(s, d).selectExpr("p_partkey", "regexp('[aeiou]{2}', p_name) AS m"),
       Some("""SELECT p_partkey,
              |  CAST(regexp_matches(p_name, '[aeiou]{2}') AS INTEGER) AS m
              |FROM part""".stripMargin)),
 
     QDef(
       "q34_regsub_fn",
-      (s, d) => {
-        GraftFunctions.register(s)
-        Tables.part(s, d).selectExpr("p_partkey",
-          "regsub('-all', '[aeiou]', p_name, '_') AS all_sub",
-          "regsub('[aeiou]', p_name, '*') AS first_sub")
-      },
+      (s, d) => Tables.part(s, d).selectExpr("p_partkey",
+        "regsub('-all', '[aeiou]', p_name, '_') AS all_sub",
+        "regsub('[aeiou]', p_name, '*') AS first_sub"),
       Some("""SELECT p_partkey,
              |  regexp_replace(p_name, '[aeiou]', '_', 'g') AS all_sub,
              |  regexp_replace(p_name, '[aeiou]', '*') AS first_sub
@@ -433,13 +423,10 @@ object Relational {
 
     QDef(
       "q35_tcl_list_fns",
-      (s, d) => {
-        GraftFunctions.register(s)
-        li(s, d).selectExpr("l_orderkey", "l_linenumber",
-          "lindex(concat(l_returnflag, ' ', l_linestatus), 1) AS second",
-          "llength(concat(l_returnflag, ' ', l_linestatus)) AS n",
-          "lrange(concat(l_returnflag, ' ', l_linestatus, ' ', l_orderkey), 0, 1) AS firsttwo")
-      },
+      (s, d) => li(s, d).selectExpr("l_orderkey", "l_linenumber",
+        "lindex(concat(l_returnflag, ' ', l_linestatus), 1) AS second",
+        "llength(concat(l_returnflag, ' ', l_linestatus)) AS n",
+        "lrange(concat(l_returnflag, ' ', l_linestatus, ' ', l_orderkey), 0, 1) AS firsttwo"),
       Some("""SELECT l_orderkey, l_linenumber,
              |  l_linestatus AS second,
              |  CAST(2 AS INTEGER) AS n,
@@ -448,13 +435,10 @@ object Relational {
 
     QDef(
       "q36_dict_fns",
-      (s, d) => {
-        GraftFunctions.register(s)
-        li(s, d).selectExpr("l_orderkey", "l_linenumber",
-          "dict_get(concat('flag ', l_returnflag, ' status ', l_linestatus), 'status') AS status_val",
-          "dict_exists(concat('flag ', l_returnflag, ' status ', l_linestatus), 'flag') AS has_flag",
-          "dict_exists(concat('flag ', l_returnflag, ' status ', l_linestatus), 'zz') AS has_zz")
-      },
+      (s, d) => li(s, d).selectExpr("l_orderkey", "l_linenumber",
+        "dict_get(concat('flag ', l_returnflag, ' status ', l_linestatus), 'status') AS status_val",
+        "dict_exists(concat('flag ', l_returnflag, ' status ', l_linestatus), 'flag') AS has_flag",
+        "dict_exists(concat('flag ', l_returnflag, ' status ', l_linestatus), 'zz') AS has_zz"),
       Some("""SELECT l_orderkey, l_linenumber,
              |  l_linestatus AS status_val,
              |  CAST(1 AS INTEGER) AS has_flag,
@@ -754,7 +738,6 @@ object Relational {
     QDef(
       "q45_global_rank",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         ord(s, d)
           .withColumn("prio_rank",
             rank().over(Window.orderBy(col("o_orderpriority"))))
@@ -789,7 +772,6 @@ object Relational {
     QDef(
       "q46_global_offset",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         ord(s, d).createOrReplaceTempView("g_ord46")
         s.sql("""SELECT o_orderkey,
                 |  lag(o_totalprice, 1) OVER (ORDER BY o_orderkey) AS prev_price,

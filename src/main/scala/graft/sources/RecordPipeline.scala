@@ -204,25 +204,6 @@ object RecordPipeline {
         throw new IllegalArgumentException(s"column name $n contains a grave accent")
     }
 
-    // Marker builder for AffinityValue (a custom expression cannot be
-    // built through the public Column API; the registry can).
-    // Idempotent — re-wrapping collapses to depth 1 (see the twin
-    // builder in GraftFunctions for the expression-blowup story).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_affinity_value",
-      { children =>
-        val aff = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(s, _) => s.toString
-          case other => other.eval(null).toString
-        }
-        children.head match {
-          case av: graft.plans.AffinityValue =>
-            if (av.affinity == aff) av else graft.plans.AffinityValue(av.child, aff)
-          case c => graft.plans.AffinityValue(c, aff)
-        }
-      },
-      "scala_udf")
-
     val fieldCols = (1 to numFields).map { i =>
       val declared = opts.datatypes.lift(i - 1).getOrElse("INTEGER")
       val affinity = Affinity.hasAffinity(declared)

@@ -6,7 +6,6 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.functions.GraftFunctions
 
 /** End-to-end CLI black-box tests mirroring the reference suite
   * (tests.tcl; fixture inventory in FIXTURES.md). Each case runs the
@@ -23,7 +22,6 @@ class CliSpec extends SparkSpec {
 
   /** Run the CLI against in-process Spark, return (exitCode, stdout). */
   private def sqawk(args: String*): (Int, String) = {
-    GraftFunctions.register(spark)
     val out = new StringWriter
     val code = Main.run(args, spark, out)
     (code, out.toString)
@@ -1302,7 +1300,6 @@ class CliSpec extends SparkSpec {
     class ThrowingWriter(msg: String) extends StringWriter {
       override def write(s: String): Unit = throw new java.io.IOException(msg)
     }
-    GraftFunctions.register(spark)
     assert(Main.run(Seq("select a1 from a", f), spark, new ThrowingWriter("Broken pipe")) == 0)
     assert(Main.run(Seq("select a1 from a", f), spark,
       new ThrowingWriter("No space left on device")) == 1)

@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 /** Big differential-fuzz sweeps and single-seed debugging, outside the
   * test runner: `Test/runMain graft.cli.SqlFuzzMain sweep <from> <n>`
   * or `Test/runMain graft.cli.SqlFuzzMain seed <seed>`.
@@ -11,12 +9,8 @@ object SqlFuzzMain {
     // fuzz tables are < 30 rows: wide sessions only add scheduling
     // overhead per statement (8-task exchanges), and standalone
     // sweeps run several JVMs side by side
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("local[4]")
+    spark.conf.set("spark.sql.shuffle.partitions", 2L)
     // WARN surfaces janino "Code grows beyond 64 KB" fallbacks (the
     // CollapseInlineBytes calibration signal — results stay correct
     // through the interpreted fallback, so only the log shows them)
@@ -36,7 +30,6 @@ object SqlFuzzMain {
           val sw = new java.io.StringWriter
           val ser = ScriptRunner.makeSerializer("awk",
             GlobalOptions(ofs = SqlScriptFuzz.Sep), sw)
-          graft.functions.GraftFunctions.register(spark)
           try ScriptRunner.run(spark, script, ser, None)
           catch { case e: Throwable =>
             println(s"--- graft exception ---")
@@ -54,7 +47,6 @@ object SqlFuzzMain {
         val script = rest.mkString(" ")
         val sw = new java.io.StringWriter
         val ser = ScriptRunner.makeSerializer("awk", GlobalOptions(), sw)
-        graft.functions.GraftFunctions.register(spark)
         try { ScriptRunner.run(spark, script, ser, None); println(s"--- graft ---\n$sw") }
         catch { case e: Throwable =>
           println(s"--- graft (errored after) ---\n$sw"); e.printStackTrace(System.out) }

@@ -719,7 +719,6 @@ object SqlScriptFuzz {
   /** (errored, stdout). Leaves no temp views behind. */
   def runGraft(spark: SparkSession, script: String): (Boolean, String) = {
     hookFallbackCounter()
-    graft.functions.GraftFunctions.register(spark)
     val sw = new StringWriter
     val ser = ScriptRunner.makeSerializer("awk",
       GlobalOptions(ofs = Sep), sw)

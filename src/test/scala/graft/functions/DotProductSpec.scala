@@ -11,7 +11,7 @@ import graft.SparkSpec
 class DotProductSpec extends SparkSpec {
 
   private def df = {
-    DotProduct.register(spark)
+    GraftFunctions.register(spark)
     import spark.implicits._
     Seq(
       (1L, Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
@@ -53,7 +53,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("null input propagates to null") {
-    DotProduct.register(spark)
+    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(CAST(1.0 AS DOUBLE)))")
       .collect()
@@ -61,7 +61,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("null ELEMENT in the clamped range yields null, like zip_with") {
-    DotProduct.register(spark)
+    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       (1L, Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](3.0, 4.0)),
@@ -77,7 +77,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("rejects non-double-array inputs at analysis") {
-    DotProduct.register(spark)
+    GraftFunctions.register(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT graft_dot(array('x'), array('y'))").collect()
     }

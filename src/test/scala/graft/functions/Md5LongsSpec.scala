@@ -19,7 +19,7 @@ class Md5LongsSpec extends SparkSpec {
     "0", "mix:12345", "url:99999") ++ (0 until 64).map(i => s"probe:$i")
 
   test("all six fields match the conv(substr(md5)) spellings") {
-    Md5Longs.register(spark)
+    GraftFunctions.register(spark)
     import spark.implicits._
     val sqlCols =
       Seq("CAST(conv(substr(md5(s), 1, 13), 16, 10) AS BIGINT)",
@@ -39,7 +39,7 @@ class Md5LongsSpec extends SparkSpec {
   }
 
   test("null input yields null struct") {
-    Md5Longs.register(spark)
+    GraftFunctions.register(spark)
     val r = spark.sql("SELECT graft_md5longs(CAST(NULL AS STRING))").collect()
     assert(r.head.isNullAt(0))
   }

@@ -20,7 +20,7 @@ class Md5Min8Spec extends SparkSpec {
     "日本語のテキストですよ") // 3-byte
 
   test("fused kernel is byte-identical to the HOF spelling") {
-    Md5Min8.register(spark)
+    GraftFunctions.register(spark)
     import spark.implicits._
     val df = cases.toDF("s")
     val rows = df.select(
@@ -34,7 +34,7 @@ class Md5Min8Spec extends SparkSpec {
   }
 
   test("direct kernel calls agree with the expression path") {
-    Md5Min8.register(spark)
+    GraftFunctions.register(spark)
     import spark.implicits._
     val got = cases.toDF("s").select(expr("graft_md5min8(s)"))
       .collect().map(_.getString(0))

@@ -29,7 +29,7 @@ class RollingHashMinSpec extends SparkSpec {
   }
 
   test("codegen path agrees with the kernel") {
-    RollingHashMin.register(spark)
+    GraftFunctions.register(spark)
     import spark.implicits._
     val in = Seq("rolling hash fingerprints catch local edits",
       "rolling hash fingerprints catch local edit!").toDF("s")

@@ -34,7 +34,6 @@ class SqliteCastSpec extends SparkSpec {
   }
 
   test("interpreted eval matches the codegen path on random inputs") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // md5-derived strings: some numeric-prefixed, some not, some huge
     val rows = spark.range(0, 2000).selectExpr(
@@ -57,7 +56,6 @@ class SqliteCastSpec extends SparkSpec {
   }
 
   test("null propagates; numeric children dispatch without string round-trip") {
-    graft.functions.GraftFunctions.register(spark)
     val out = spark.sql(
       """SELECT sqlite_cast_integer(CAST(NULL AS STRING)),
         |  sqlite_cast_integer(CAST(12.9 AS DOUBLE)),

@@ -13,7 +13,6 @@ class GlobalRankSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("global row_number plans into GlobalRankExec with correct ranks") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val n = 10000
     // multiple input partitions + duplicate keys so the range
@@ -39,7 +38,6 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("partitioned and non-row_number windows keep WindowExec") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1, 10), (1, 20), (2, 30)).toDF("g", "v")
     df.createOrReplaceTempView("gr_in2")
@@ -61,7 +59,6 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("same-spec rank functions chain GlobalRanks over ONE range exchange") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val n = 10000
     // duplicate keys across 8 input partitions: tie chains, offsets
@@ -114,7 +111,6 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("global rank and dense_rank plan into GlobalRankExec with ties") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val n = 10000
     // only 37 distinct keys: massive tie groups, so per-partition
@@ -174,7 +170,6 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("global percent_rank, cume_dist and ntile ride GlobalRankExec") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val n = 5000
     val df = spark.sparkContext
@@ -221,7 +216,6 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("global lag and lead ride GlobalRankExec across partitions") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val n = 4000
     val df = spark.sparkContext
@@ -259,7 +253,6 @@ class GlobalRankSpec extends SparkSpec {
   }
 
   test("empty input and single row still rank") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     Seq.empty[(Int, Int)].toDF("k", "v").createOrReplaceTempView("gr_empty")
     assert(spark.sql(

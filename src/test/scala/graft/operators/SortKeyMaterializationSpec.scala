@@ -13,7 +13,6 @@ class SortKeyMaterializationSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("regex sort key evaluates below the Sort, results unchanged") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 500).map(i => (s"v${i % 97}x$i", i)).toDF("s", "v")
     df.createOrReplaceTempView("skm_in")
@@ -35,7 +34,6 @@ class SortKeyMaterializationSpec extends SparkSpec {
   }
 
   test("global rank over a regex key materializes below GlobalRank") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 300).map(i => (s"k${i % 7}", i)).toDF("s", "v")
     df.createOrReplaceTempView("skm_gr")
@@ -61,7 +59,6 @@ class SortKeyMaterializationSpec extends SparkSpec {
   }
 
   test("plain-attribute sorts stay untouched") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((3, "c"), (1, "a"), (2, "b")).toDF("k", "s")
     val q = df.orderBy("k")

@@ -86,7 +86,6 @@ class MixQualitySpec extends SparkSpec {
   }
 
   test("p40 accent fold on a hand vector") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val got = Seq("Café MÜNCHEN àçcénts Ñandú über ÉLÈVE façade plain")
       .toDF("s").selectExpr("graft_fold_accents(s)").as[String].head()

@@ -125,4 +125,15 @@ class SketchOpsSpec extends SparkSpec {
     assert(rows.exists(r => r.getLong(0) > r.getLong(1)),
       "no collisions at w=16 — the overestimate surface is vacuous")
   }
+
+  test("p43 and q32 run through SparkEntry.queries on a session with no registry or rules") {
+    import graft.functions.RegistrationSpec.{installCounts, unresolved}
+    val fresh = spark.newSession()
+    assert(unresolved(fresh).contains("graft_md5longs"))
+    assert(installCounts(fresh) === Seq(0, 0, 0, 0))
+    for (q <- Seq("q32_glob", "p43_kmv_distinct", "q32_glob"))
+      assert(graft.SparkEntry.queries(q)(fresh, d).count() > 0, q)
+    assert(unresolved(fresh) === Nil)
+    assert(installCounts(fresh) === Seq(1, 1, 1, 1))
+  }
 }

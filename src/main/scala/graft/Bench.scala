@@ -256,10 +256,7 @@ object Bench {
     // itself inside the sweep instead of poisoning the cross-round
     // diff. Rows slower under QUIET load are left alone: those are
     // real and must be visible.
-    // Overridable for the rerun demonstration only (a quiet box never
-    // crosses 1.2 on demand); production sweeps leave it unset.
-    val RowLoadBar = sys.env.get("SPARK_GRAFT_ROW_LOAD_BAR")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(1.2)
+    val RowLoadBar = 1.2
     val rowLoad = scala.collection.mutable.Map[String, Double]()
     val reran = scala.collection.mutable.ArrayBuffer[String]()
     val timed = ordered.map { case (name, fn) =>

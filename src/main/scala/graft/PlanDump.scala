@@ -11,7 +11,7 @@ import graft.cli.GraftSession
   * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_CPUS, SPARK_GRAFT_PLAN_DIR
   * (default /root/repo/plans/r15). Streaming (s*) rows are skipped —
   * their physical plans only exist per micro-batch inside a running
-  * query; ExplainAudit's budgets cover their batch-side shape.
+  * query.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

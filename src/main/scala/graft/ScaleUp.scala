@@ -7,8 +7,8 @@ import graft.cli.GraftSession
 
 /** sf1.0 testdata synthesis (measurement only — VERDICT r8 ask #2).
   *
-  * The driver ships sf0.001/0.01/0.1; every scale claim so far rests
-  * on sf0.1 plus the synthetic bench mains. This main materializes a
+  * The test data comes at sf0.001/0.01/0.1, so without this main
+  * every scale claim would rest on sf0.1. This main materializes a
   * ~10× corpus under an output dir (default /tmp/sf1.0) so the full
   * SparkEntry sweep can run once at sf~1.0 and prove the plans stay
   * linear. NOT an oracle input — correctness stays pinned at sf0.01.

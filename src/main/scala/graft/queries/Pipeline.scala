@@ -178,7 +178,7 @@ object Pipeline {
   // fixed table count loses recall at every ladder step. The standard
   // LSH remedy is OR-amplification: DOUBLE the tables per arity step
   // (8 → 16 → 32), taking per-pair miss (1-p)^T to roughly the same
-  // level at each k. Measured on the VectorBench planted-pair gate
+  // level at each k. Measured on a planted-pair corpus
   // (cos ∈ [0.35, 0.95], floor 0.7): k=2 0.52 (8 tables,
   // leave-one-out) → 0.81 (16 tables, leave-two-out) at n=51k; k=3
   // 0.54 (16 tables) → measured again at 32 below; k=1 keeps the
@@ -222,8 +222,8 @@ object Pipeline {
   // the PRIMARY key is the top-k subset, and a candidate is any
   // probe-key ∩ primary-key match — i.e. "B's top-k ⊆ A's
   // top-(k+extra)". The round-11 leave-one-out scheme (k-subsets of
-  // top k+1) measured recall 0.52 at k=2 on the VectorBench
-  // planted-pair gate; the probe-depth + table ladders below restore
+  // top k+1) measured recall 0.52 at k=2 on a planted-pair
+  // corpus; the probe-depth + table ladders below restore
   // ≥ 0.7 at every measured arity for a constant-factor candidate
   // cost. The oracle computes k from count(*) with the same formula,
   // so both sides agree at every SF. Upper clamp 8: keys pack into a
@@ -248,32 +248,21 @@ object Pipeline {
     * occ². Same idea as p37's SemHotCell, applied to the bucket join
     * itself. The recall trade is bounded: a split only loses pairs
     * whose EVERY collision lands in a hot bucket under divergent
-    * refinement bits, and the VectorBench/AnnRecallSpec floors
-    * (≥ 0.7) stay asserted on every rung.
+    * refinement bits, and the AnnRecallSpec floors (≥ 0.7) stay
+    * asserted.
     *
-    * Default calibrated on the VectorBench rungs (round 14, cap sweep
-    * {∞, 64, 32, 24, 16} over the k=1/10.5k and k=2/51k corpora):
-    * cap 32 keeps every floor (k=1 recall 0.964→0.783 for a 3×
-    * candidate cut on the band's deepest measured point — mean
-    * occupancy 82; k=2 recall 0.809→0.805, its occupancy tail barely
-    * reaches the cap) while cap 16 fails the k=1 floor (0.691).
-    * Env-overridable for CALIBRATION runs only — the oracle SQL
-    * interpolates the same val at object init, so kernel and oracle
-    * stay consistent within any one JVM whatever the override. */
-  private val AnnHotBucket = sys.env.get("SPARK_GRAFT_ANN_HOT")
-    .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-    .filter(_ > 0)
-    .getOrElse(32L)
-  /** Refinement planes per table for the hot split. Env-overridable
-    * for CALIBRATION runs only (round 15, the k=3 frontier sweep —
-    * same contract as SPARK_GRAFT_ANN_HOT: kernel and oracle read the
-    * same val at object init, so any override stays consistent within
-    * one JVM). Clamped to [1, 16]: `sub` packs into an Int. */
-  private val AnnSplitBits = sys.env.get("SPARK_GRAFT_ANN_SPLITBITS")
-    .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-    .filter(b => b >= 1 && b <= 16)
-    .getOrElse(6)
-  /** private[graft]: VectorBench asserts the occupancy bound this
+    * Cap calibrated in round 14 (sweep {∞, 64, 32, 24, 16} over
+    * k=1/10.5k and k=2/51k planted-pair corpora): cap 32 keeps every
+    * floor (k=1 recall 0.964→0.783 for a 3× candidate cut on the
+    * band's deepest measured point — mean occupancy 82; k=2 recall
+    * 0.809→0.805, its occupancy tail barely reaches the cap) while
+    * cap 16 fails the k=1 floor (0.691). The oracle SQL interpolates
+    * the same val, so kernel and oracle always agree. */
+  private val AnnHotBucket = 32L
+  /** Refinement planes per table for the hot split (at most 16: `sub`
+    * packs into an Int). */
+  private val AnnSplitBits = 6
+  /** private[graft]: AnnRecallSpec asserts the occupancy bound this
     * formula guarantees across the n sweep.
     *
     * Exact integer form of clamp(ceil(log_{2·AnnDim}(n / occupancy)),
@@ -832,8 +821,8 @@ object Pipeline {
     // data-driven arity, skew-free), never all-pairs. Measured recall
     // at cos ≥ 0.35 (round 12, table + probe-depth ladders): 0.83 at
     // k=1 on the real sf0.01 vectors (AnnRecallSpec), 0.81 at k=2
-    // (n=51k) and 0.74 at k=3 (n=2.2M) on the VectorBench
-    // planted-pair gate — near-orthogonal corpora like these are the
+    // (n=51k) and 0.74 at k=3 (n=2.2M) on planted-pair
+    // corpora — near-orthogonal corpora like these are the
     // worst case for angular LSH; the ladders are the measured
     // recall-per-candidate frontier of the hyperplane/multiprobe/
     // cross-polytope family swept across rounds 3-12.
@@ -1536,7 +1525,7 @@ object Pipeline {
       "p25_stratified_sample",
       (s, d) => docs(s, d)
         .withColumn("u", expr(
-          "CAST(conv(substr(md5(concat('smp:', CAST(doc_id AS STRING))), 1, 13), 16, 10) AS BIGINT)"))
+          "graft_md5longs(concat('smp:', CAST(doc_id AS STRING))).h1"))
         .withColumn("thr", expr(
           s"""CASE lang WHEN 'en' THEN ${1L << 51}L
              |          WHEN 'zh' THEN ${1L << 50}L
@@ -2328,7 +2317,7 @@ object Pipeline {
               s"CAST((total DIV $MixDenom) * w AS DOUBLE) / CAST(sumw * n AS DOUBLE)"),
               6).as("sample_prob"),
             expr(
-              s"""CAST(conv(substr(md5(concat('mix:', CAST(doc_id AS STRING))), 1, 13), 16, 10) AS BIGINT)
+              s"""graft_md5longs(concat('mix:', CAST(doc_id AS STRING))).h1
                  |  / CAST(4503599627370496 AS DOUBLE)
                  |  < CAST((total DIV $MixDenom) * w AS DOUBLE) / CAST(sumw * n AS DOUBLE)"""
                 .stripMargin).as("kept"))
@@ -2400,7 +2389,7 @@ object Pipeline {
       "p41_leakage_split",
       (s, d) => docs(s, d)
         .withColumn("h", expr(
-          "CAST(conv(substr(md5(concat('split:', source)), 1, 13), 16, 10) AS BIGINT)"))
+          "graft_md5longs(concat('split:', source)).h1"))
         .select(col("doc_id"), col("source"),
           when(col("h") < lit(1L << 49), "test")
             .when(col("h") < lit(1L << 50), "val")
@@ -2974,7 +2963,7 @@ object Pipeline {
       (s, d) => {
         val base = docs(s, d).select(col("lang"), col("n_chars"), col("doc_id"))
         val samp = base.filter(expr(
-          s"CAST(conv(substr(md5(concat('qs:', CAST(doc_id AS STRING))), 1, 13), 16, 10) AS BIGINT) < ${QsT}L"))
+          s"graft_md5longs(concat('qs:', CAST(doc_id AS STRING))).h1 < ${QsT}L"))
         val sc = samp.groupBy("lang").agg(count(lit(1)).as("n_sample"))
         val fc = base.groupBy("lang").agg(count(lit(1)).as("n_full"))
         val targets = sc.join(fc, "lang")
@@ -3549,9 +3538,8 @@ object Pipeline {
     // over each word probing the broadcast hash sets. The kernel
     // replaced the earlier aggregate-HOF formulation for the same
     // reason as p09's ANN projections: HOF lambdas evaluate
-    // interpreted per element, and TokenBench measured the identical-
-    // output kernel 10.9x faster (185k vs 17k docs/s at 1M docs; the
-    // HOF form survives there as the checked comparison stage). Both
+    // interpreted per element, and the identical-output kernel
+    // measured 10.9x faster (185k vs 17k docs/s at 1M docs). Both
     // the DuckDB oracle (best-match lengths per (word, position)
     // walked by a recursive CTE — an independent relational
     // formulation of the greedy rule) and TokenizerOpsSpec's
@@ -3904,7 +3892,7 @@ object Pipeline {
       "p59_url_dedup",
       (s, d) => {
         val raw = docs(s, d).select(col("doc_id"),
-            expr("CAST(conv(substr(md5(concat('url:', CAST(doc_id AS STRING))), 1, 13), 16, 10) AS BIGINT) % 40")
+            expr("graft_md5longs(concat('url:', CAST(doc_id AS STRING))).h1 % 40")
               .as("b"))
           .select(col("doc_id"), expr(
             """concat(
@@ -4837,24 +4825,16 @@ object Pipeline {
     cpCandidatePairsAt(s, d, annArity(emb(s, d).count()))
 
   /** [[cpCandidatePairs]] at an EXPLICIT arity. private[graft] for
-    * the k=3 recall gate (AnnRecallSpec / VectorBench, VERDICT r12
-    * #4): pair-level LSH recall depends only on the two vectors'
-    * projections and the probe scheme — never on corpus size — so a
-    * small forced-arity corpus pins the same probe-ladder recall the
-    * 2.2M-vector natural-arity rung measures, cheaply enough to run
-    * in every sbt test sweep. Production paths always derive the
-    * arity from the corpus count ([[annArity]]).
-    *
-    * nTablesOverride / extraOverride (< 0 = production value) exist
-    * ONLY for VectorBench's recall/cost frontier stage (VERDICT r12
-    * #6): mapping recall and candidate-pairs-per-vector over the
-    * (tables, probe-depth) grid at one arity. No verified operator
-    * passes them. */
+    * the k=3 recall gate (AnnRecallSpec, VERDICT r12 #4): pair-level
+    * LSH recall depends only on the two vectors' projections and the
+    * probe scheme — never on corpus size — so a small forced-arity
+    * corpus pins the same probe-ladder recall the 2.2M-vector
+    * natural-arity rung measured, cheaply enough to run in every sbt
+    * test sweep. Production paths always derive the arity from the
+    * corpus count ([[annArity]]). */
   private[graft] def cpCandidatePairsAt(
-      s: SparkSession, d: String, arity: Int,
-      nTablesOverride: Int = -1, extraOverride: Int = -1): DataFrame =
-    cpCandidatePairsRawAt(s, d, arity, nTablesOverride, extraOverride)
-      .distinct()
+      s: SparkSession, d: String, arity: Int): DataFrame =
+    cpCandidatePairsRawAt(s, d, arity).distinct()
 
   /** [[cpCandidatePairsAt]] WITHOUT the distinct — a pair colliding
     * in several tables/subsets appears once per collision. Round 14:
@@ -4863,11 +4843,10 @@ object Pipeline {
     * pair table for dedup was the measured factor-26 cost, while
     * re-verifying a duplicate costs one fused 64-float dot product.
     * Consumers that hand pairs onward unverified (p37's hot cells,
-    * the recall gates, the frontier counters) keep the distinct. */
+    * the recall gates) keep the distinct. */
   private def cpCandidatePairsRawAt(
-      s: SparkSession, d: String, arity: Int,
-      nTablesOverride: Int = -1, extraOverride: Int = -1): DataFrame = {
-    val (ranked, hot) = cpKeyedTable(s, d, arity, nTablesOverride, extraOverride)
+      s: SparkSession, d: String, arity: Int): DataFrame = {
+    val (ranked, hot) = cpKeyedTable(s, d, arity)
     // ONE aggregation pass decides the gate AND feeds the broadcast
     // (ADVICE r14 #5: the former hot.limit(1).count() gate plus the
     // broadcast side each re-aggregated the full key table — at the
@@ -4910,7 +4889,7 @@ object Pipeline {
     * disk (measured round 13). */
   private[graft] def cpPairEstimateAt(
       s: SparkSession, d: String, arity: Int): Long = {
-    val (ranked, hot) = cpKeyedTable(s, d, arity, -1, -1)
+    val (ranked, hot) = cpKeyedTable(s, d, arity)
     val keyed = ranked.join(broadcast(hot), Seq("tbl", "bkey"), "left")
       .withColumn("subref",
         expr(s"shiftright(sub, $AnnSplitBits - coalesce(depth, 0))"))
@@ -4934,8 +4913,7 @@ object Pipeline {
     * key, subset index (0 = primary) and the refinement word; `hot`
     * holds (tbl, bkey, depth) for buckets past [[AnnHotBucket]]. */
   private def cpKeyedTable(
-      s: SparkSession, d: String, arity: Int,
-      nTablesOverride: Int, extraOverride: Int): (DataFrame, DataFrame) = {
+      s: SparkSession, d: String, arity: Int): (DataFrame, DataFrame) = {
     import s.implicits._
     // k: composite-key arity from the vector count (parquet metadata
     // count — no data scan). m = k + cpProbeExtra(k) ranked planes
@@ -4944,22 +4922,21 @@ object Pipeline {
     // probe-key ∩ primary-key match realizes exactly "B's top-k
     // (signed) ⊆ A's top-m (signed)" as a bucket equi-join. Round 12
     // (VERDICT r11 #6): the previous leave-ONE-out probe set
-    // (k-subsets of top k+1) measured recall 0.52 at arity 2 on the
-    // VectorBench planted-pair gate — a pair was only found when one
+    // (k-subsets of top k+1) measured recall 0.52 at arity 2 on a
+    // planted-pair corpus — a pair was only found when one
     // side's top-k sat inside the other's top-(k+1), too tight once
     // two components must both match. Probe depth and table count now
     // both widen with the arity (see cpProbeExtra / cpTables for the
     // measured ladder); the per-bucket join stays occupancy-bounded
     // by the arity ladder, so each widening is a constant-factor
     // candidate cost, never a blowup.
-    val m = arity +
-      (if (extraOverride >= 0) extraOverride else cpProbeExtra(arity))
+    val m = arity + cpProbeExtra(arity)
     // all arity-sized rank subsets of {0..m-1} as bitmasks, ascending —
     // subsets(0) == (1<<arity)-1 is the top-k PRIMARY mask
     val subsets: Array[Int] =
       (0 until (1 << m)).filter(Integer.bitCount(_) == arity).sorted.toArray
     val nKeys = subsets.length
-    val nTables = if (nTablesOverride > 0) nTablesOverride else cpTables(arity)
+    val nTables = cpTables(arity)
     // Projection weights computed on the driver (8 tables × 64 planes ×
     // 64 components of ±1 from the md5 high bit — same arithmetic as
     // the oracle) and shipped to executors in the task closure
@@ -5099,13 +5076,6 @@ object Pipeline {
         d
       })
       .select(col("tbl"), col("bkey"), col("depth"))
-    if (sys.env.get("SPARK_GRAFT_ANN_DEBUG").contains("1")) {
-      val stats = primaryOcc.agg(count(lit(1)), max(col("occ")),
-        sum(col("occ") * col("occ")),
-        sum(when(col("occ") > AnnHotBucket, 1L).otherwise(0L))).head()
-      System.err.println(s"[ann] buckets=${stats.get(0)} maxOcc=${stats.get(1)} " +
-        s"sumOccSq=${stats.get(2)} hot=${stats.get(3)} cap=$AnnHotBucket")
-    }
     (ranked, hot)
   }
 
@@ -5364,7 +5334,7 @@ object Pipeline {
     * for the plan-shape argument. */
   private def fuzzyEntityMatch(s: SparkSession, d: String): DataFrame = {
     def md5i(tag: String) =
-      s"CAST(conv(substr(md5(concat('$tag:', CAST(doc_id AS STRING))), 1, 13), 16, 10) AS BIGINT)"
+      s"graft_md5longs(concat('$tag:', CAST(doc_id AS STRING))).h1"
     // clean entity universe: |sources| × EntVariants 12-hex names
     val ent = docs(s, d).select(col("source")).distinct()
       .select(col("source"), explode(expr(s"sequence(0, ${EntVariants - 1})")).as("j"))

@@ -3,9 +3,8 @@ package graft.cli
 import graft.SparkSpec
 
 /** Differential statement fuzz vs the sqlite3 CLI (see SqlScriptFuzz
-  * for the grammar and the run protocol). Default 400 seeds in CI
-  * (round 11 — VERDICT r10 #6 asked for 400 with the new SELECT-side
-  * arms); `GRAFT_FUZZ_N` / `GRAFT_FUZZ_FROM` widen the sweep (the
+  * for the grammar and the run protocol). Default 100 seeds from seed
+  * 0; `GRAFT_FUZZ_N` / `GRAFT_FUZZ_FROM` widen or move the sweep (the
   * 10k-seed sweep runs via `Test/runMain graft.cli.SqlFuzzMain`).
   */
 class SqliteDifferentialFuzzSpec extends SparkSpec {
@@ -15,30 +14,16 @@ class SqliteDifferentialFuzzSpec extends SparkSpec {
       try { SqlScriptFuzz.runSqlite("SELECT 1;") == (false, "1\n") }
       catch { case _: Throwable => false },
       "sqlite3 CLI not available")
-    val nEnv = sys.env.get("GRAFT_FUZZ_N").map(_.toInt)
+    // A fixed seed count, so in-suite coverage does not depend on
+    // machine load: each seed spawns one sqlite3 process and costs
+    // about 1.3 s inside the parallel suite on a 4-vCPU host, so 100
+    // seeds keep the spec near 150 s. The committed deep record
+    // (seeds 0-34k via SqlFuzzMain) covers the rest.
+    val n = sys.env.get("GRAFT_FUZZ_N").map(_.toInt).getOrElse(100)
     val from = sys.env.get("GRAFT_FUZZ_FROM").map(_.toLong).getOrElse(0L)
-    // Wall-clock budget (round 16, VERDICT r15 #1b): this spec spawns
-    // one sqlite3 process per seed, and with the binary present the
-    // full 400-seed sweep alone ran ~14 min of the suite's 30 — the
-    // driver's `sbt test` was killed on timeout in round 15 when a 2×
-    // co-tenant stretched the suite. Without an explicit GRAFT_FUZZ_N
-    // the sweep now stops at GRAFT_FUZZ_BUDGET_SEC (default 150 s,
-    // floor 50 seeds so it is never vacuous); the committed deep
-    // record (seeds 0-34k via SqlFuzzMain) is unaffected, and an
-    // explicit GRAFT_FUZZ_N keeps the fixed-count contract.
-    val budgetSec = sys.env.get("GRAFT_FUZZ_BUDGET_SEC").map(_.toInt).getOrElse(150)
-    val target = nEnv.getOrElse(400)
     val t0 = System.nanoTime()
-    var done = 0
-    val bad = scala.collection.mutable.ArrayBuffer.empty[SqlScriptFuzz.Divergence]
-    while (done < target && (nEnv.isDefined || done < 50 ||
-        (System.nanoTime() - t0) / 1e9 < budgetSec)) {
-      val chunk = math.min(25, target - done)
-      bad ++= SqlScriptFuzz.sweep(spark, from + done, chunk)
-      done += chunk
-    }
-    val n = done
-    info(f"fuzzed $done%d/$target%d seeds in ${(System.nanoTime() - t0) / 1e9}%.0f s")
+    val bad = SqlScriptFuzz.sweep(spark, from, n)
+    info(f"fuzzed $n%d seeds in ${(System.nanoTime() - t0) / 1e9}%.0f s")
     if (bad.nonEmpty) {
       val detail = bad.take(5).map { d =>
         s"""seed ${d.seed}:

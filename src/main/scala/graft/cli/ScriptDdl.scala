@@ -529,16 +529,7 @@ object ScriptDdl {
     * just-under-threshold chain) before the REAL size reaches
     * janino's 64 KB method limit. Common-subexpression elimination
     * only ever makes the true size smaller than the estimate. */
-  // Lenient parse (ADVICE r12 #3): a malformed value must degrade to
-  // the calibrated default, not throw NumberFormatException out of
-  // this object's initializer and kill the whole CLI at first use.
-  private val CollapseInlineBytes = sys.env.get("SPARK_GRAFT_COLLAPSE_BYTES")
-    .flatMap { v =>
-      val parsed = scala.util.Try(v.trim.toLong).toOption
-      if (parsed.isEmpty) System.err.println(
-        s"[graft] ignoring malformed SPARK_GRAFT_COLLAPSE_BYTES='$v' (using default 24576)")
-      parsed
-    }.getOrElse(24L * 1024)
+  private val CollapseInlineBytes = 24L * 1024
 
   /** Estimated post-inlining codegen bytes of the WHOLE plan's
     * expressions: walk bottom-up, memoize per output attribute the
@@ -564,6 +555,8 @@ object ScriptDdl {
     val Cap = 1L << 40
     def weight(e: Expression): Long = e match {
       case _: AttributeReference | _: Literal => 8L
+      // a registered static call weighs its StaticInvoke child only
+      case _: graft.functions.NamedStaticInvoke => 0L
       // the dialect kernels (SqliteArithExpr, cast/affinity wrappers,
       // storage-class keys) each emit hundreds of bytes of Java
       case _ if e.getClass.getName.startsWith("graft.") => 320L
@@ -632,9 +625,7 @@ object ScriptDdl {
     * policy. */
   private[cli] def withCodegenPolicy[T](spark: SparkSession,
       df: org.apache.spark.sql.DataFrame)(body: => T): T = {
-    lazy val bytes = inlinedCodegenBytes(df.queryExecution.analyzed)
-    if (sys.env.get("SPARK_GRAFT_COLLAPSE_DEBUG").contains("1"))
-      System.err.println(s"[codegen-policy] bytes=$bytes off=${bytes > NoCodegenBytes}")
+    val bytes = inlinedCodegenBytes(df.queryExecution.analyzed)
     if (bytes <= NoCodegenBytes) body
     else {
       val key = "spark.sql.codegen.wholeStage"
@@ -648,9 +639,6 @@ object ScriptDdl {
     val analyzed = df.queryExecution.analyzed
     val nodes = analyzed.collect { case p => p }.size
     lazy val bytes = inlinedCodegenBytes(analyzed)
-    if (sys.env.get("SPARK_GRAFT_COLLAPSE_DEBUG").contains("1"))
-      System.err.println(s"[collapse] nodes=$nodes bytes=$bytes " +
-        s"collapse=${nodes > CollapseNodes || bytes > CollapseInlineBytes}")
     if (nodes > CollapseNodes || bytes > CollapseInlineBytes) {
       // the materialization executes THIS plan once — past the
       // codegen threshold it runs interpreted (see NoCodegenBytes)

@@ -3,21 +3,24 @@ package graft.functions
 import java.util.regex.{Matcher, Pattern}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, InheritAnalysisRules,
+  Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType,
+  StringType}
 
 /** Compatibility scalar functions the reference registers into SQLite
   * (reference: sqawk-dev.tcl:199-215, behavior pinned by
   * tests.tcl:1108-1156), re-expressed for Spark SQL.
   *
   * All functions are registered as Catalyst builders producing
-  * [[org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke]]
-  * calls into [[TclExprs]]' static entry points — direct calls inside
-  * whole-stage codegen with no per-row UDF encoder round trip; the
-  * variadic ones (`lindex`/`dict get`/`regsub`) pick the per-arity
-  * static at analysis time. All are deterministic (the reference
-  * registers them `-deterministic` too), so Catalyst may
-  * factor/common-subexpression them freely.
+  * [[StaticInvoke]] calls into [[TclExprs]]' static entry points —
+  * direct calls inside whole-stage codegen with no per-row UDF encoder
+  * round trip; the variadic ones (`lindex`/`dict get`/`regsub`) pick
+  * the per-arity overload at analysis time. All are deterministic
+  * (the reference registers them `-deterministic` too), so Catalyst
+  * may factor/common-subexpression them freely.
   */
 object GraftFunctions {
 
@@ -120,23 +123,23 @@ object GraftFunctions {
     val exp = spark.experimental
     if (rules.forall(exp.extraOptimizations.contains) &&
         exp.extraStrategies.contains(graft.plans.GlobalRankStrategy)) return
-    val u = spark.udf
-    // Fixed-arity compat functions as StaticInvoke builders: direct
-    // static calls inside whole-stage codegen, no ScalaUDF
-    // encoder/boxing round trip per row.
-    registerStatic(spark, "regexp", IntegerType, 2)
-    registerStatic(spark, "glob", IntegerType, 2)
-    registerStatic(spark, "llength", IntegerType, 1)
-    registerStatic(spark, "lrange", StringType, 3)
-    u.register("sqlite_version", () => "3.45.0")
-
-    // Variadic functions route to the per-arity statics in TclExprs
-    // (regsub: 3-arg = first-match, 4-arg with leading "-all" = global;
-    // Tcl switch semantics, tests.tcl:1126-1132).
-    registerStaticVariadic(spark, "lindex", StringType, 2 to 4)
-    registerStaticVariadic(spark, "dict_get", StringType, 2 to 4)
-    registerStaticVariadic(spark, "dict_exists", IntegerType, 2 to 4)
-    registerStaticVariadic(spark, "regsub", StringType, 3 to 4)
+    // Compat functions and kernels alike are static methods called
+    // through StaticInvoke: direct calls inside whole-stage codegen,
+    // no ScalaUDF encoder/boxing round trip per row. The variadic ones
+    // (lindex/dict get/regsub) are per-arity overloads (regsub: 3-arg
+    // = first-match, 4-arg with leading "-all" = global; Tcl switch
+    // semantics, tests.tcl:1126-1132).
+    registerStatic(spark, "regexp", 2 to 2, IntegerType, "TclExprs.regexp")
+    registerStatic(spark, "glob", 2 to 2, IntegerType, "TclExprs.glob")
+    registerStatic(spark, "llength", 1 to 1, IntegerType, "TclExprs.llength")
+    registerStatic(spark, "lrange", 3 to 3, StringType, "TclExprs.lrange")
+    registerStatic(spark, "lindex", 2 to 4, StringType, "TclExprs.lindex")
+    registerStatic(spark, "dict_get", 2 to 4, StringType, "TclExprs.dict_get")
+    registerStatic(spark, "dict_exists", 2 to 4, IntegerType, "TclExprs.dict_exists")
+    registerStatic(spark, "regsub", 3 to 4, StringType, "TclExprs.regsub")
+    registerStatic(spark, "graft_fold_accents", 1 to 1, StringType,
+      "TextNorm.graft_fold_accents")
+    spark.udf.register("sqlite_version", () => "3.45.0")
 
     // SQLite CAST semantics (prefix coercion, saturation, SQLite real
     // rendering) — targets of the CAST(expr AS type) rewrite in
@@ -147,21 +150,18 @@ object GraftFunctions {
     registerUnary(spark, "sqlite_cast_text", SqliteCastText)
     registerUnary(spark, "sqlite_cast_numeric", SqliteCastNumeric)
 
-    // Beyond-reference codegen kernels, exposed to scripts too.
-    registerUnary(spark, "graft_md5longs", Md5Longs(_))
-    registerUnary(spark, "graft_md5min8", Md5Min8(_))
-    registerUnary(spark, "graft_rollhash_min", RollingHashMin(_))
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("graft_dot", {
-      case Seq(a, b) => DotProduct(a, b)
-      case _ => throw new IllegalArgumentException("graft_dot expects 2 arguments")
-    }, "scala_udf")
-    registry.createOrReplaceTempFunction("graft_kmr_emit", {
-      case Seq(c, Literal(mn: Int, IntegerType), Literal(mx: Int, IntegerType)) =>
-        KmrEmit(c, mn, mx)
-      case _ => throw new IllegalArgumentException(
-        "graft_kmr_emit expects (array<string>, int literal, int literal)")
-    }, "scala_udf")
+    // Beyond-reference kernels, exposed to scripts too. A null input
+    // is a null result; only graft_dot can also return null itself.
+    registerStatic(spark, "graft_md5longs", 1 to 1, Md5Longs.outType, "Md5Longs.pack",
+      Seq(StringType), returnNullable = false)
+    registerStatic(spark, "graft_md5min8", 1 to 1, StringType, "Md5Min8.minHash",
+      Seq(StringType), returnNullable = false)
+    registerStatic(spark, "graft_rollhash_min", 1 to 1, LongType, "RollingHashMin.minHash",
+      Seq(StringType), returnNullable = false)
+    registerStatic(spark, "graft_dot", 2 to 2, DoubleType, "DotProduct.dot",
+      Seq(ArrayType(DoubleType), ArrayType(DoubleType)))
+    registerStatic(spark, "graft_kmr_emit", 3 to 3, KmrEmit.outType, "KmrEmit.emit",
+      Seq(ArrayType(StringType), IntegerType, IntegerType), returnNullable = false)
 
     // Marker builder for AffinityValue (a custom expression cannot be
     // built through the public Column API; the registry can). Ingested
@@ -174,8 +174,7 @@ object GraftFunctions {
     // trees exponentially with script length (round-10 fuzz seed
     // 2665 OOMed a 4 GB heap on a 6-row table). A re-wrap now
     // collapses to depth 1, keeping the NEWEST affinity.
-    registry.createOrReplaceTempFunction(
-      "graft_affinity_value",
+    put(spark, "graft_affinity_value",
       { children =>
         val aff = children(1) match {
           case Literal(s, _) => s.toString
@@ -186,10 +185,7 @@ object GraftFunctions {
             if (av.affinity == aff) av else graft.plans.AffinityValue(av.child, aff)
           case c => graft.plans.AffinityValue(c, aff)
         }
-      },
-      "scala_udf")
-    registerStatic(spark, "graft_fold_accents", StringType, 1,
-      Class.forName("graft.functions.TextNorm"))
+      })
 
     exp.extraOptimizations = exp.extraOptimizations.filterNot(rules.contains) ++ rules
     exp.extraStrategies =
@@ -204,7 +200,7 @@ object GraftFunctions {
         throw new IllegalArgumentException(s"$name expects 1 argument")
       f(children.head)
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    put(spark, name, builder)
   }
 
   /** Run `body` with the SQLite script dialect's built-in shadows —
@@ -215,7 +211,6 @@ object GraftFunctions {
     * by name through the session registry, so a session-global shadow
     * would silently change every library query in the session. */
   def withSqliteAggregates[T](spark: SparkSession)(body: => T): T = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
     val registry = spark.sessionState.functionRegistry
     val names = Seq("sum", "total", "date", "time", "datetime", "julianday",
       "strftime", "random", "min", "max", "typeof", "quote", "unicode",
@@ -232,8 +227,8 @@ object GraftFunctions {
     // skip NULLs, so the scalar form compares by the affinity
     // sort key over string-cast operands and returns the winner
     // verbatim.
-    registry.createOrReplaceTempFunction("min", scalarOrAggMinMax(isMin = true), "scala_udf")
-    registry.createOrReplaceTempFunction("max", scalarOrAggMinMax(isMin = false), "scala_udf")
+    put(spark, "min", scalarOrAggMinMax(isMin = true))
+    put(spark, "max", scalarOrAggMinMax(isMin = false))
     // typeof/quote report SQLite storage classes (affinity columns
     // classify by canonical value, typed expressions by Spark type);
     // unicode() is first-codepoint-or-NULL; the two-argument
@@ -242,14 +237,13 @@ object GraftFunctions {
     // trimChars), so an unshadowed sqawk script would trim the wrong
     // string; likely/unlikely/likelihood are SQLite planner hints,
     // identity here. All sqlite3-pinned in CliSpec.
-    registry.createOrReplaceTempFunction("typeof",
+    put(spark, "typeof",
       { children => SqliteTypeof(children.head,
-          SqliteScalars.isAffinityChild(children.head)) }, "scala_udf")
-    registry.createOrReplaceTempFunction("quote",
+          SqliteScalars.isAffinityChild(children.head)) })
+    put(spark, "quote",
       { children => SqliteQuote(children.head,
-          SqliteScalars.isAffinityChild(children.head)) }, "scala_udf")
-    registerStatic(spark, "unicode", IntegerType, 1,
-      Class.forName("graft.functions.SqliteScalars"))
+          SqliteScalars.isAffinityChild(children.head)) })
+    registerStatic(spark, "unicode", 1 to 1, IntegerType, "SqliteScalars.unicode")
     def trimBuilder(mk: (Expression, Option[Expression]) => Expression)
         : Seq[Expression] => Expression = {
       case Seq(s) => mk(s, None)
@@ -257,23 +251,18 @@ object GraftFunctions {
       case other => throw new IllegalArgumentException(
         s"trim expects 1 or 2 arguments, got ${other.length}")
     }
-    registry.createOrReplaceTempFunction("ltrim",
-      trimBuilder((s, c) => org.apache.spark.sql.catalyst.expressions.StringTrimLeft(s, c)), "scala_udf")
-    registry.createOrReplaceTempFunction("rtrim",
-      trimBuilder((s, c) => org.apache.spark.sql.catalyst.expressions.StringTrimRight(s, c)), "scala_udf")
-    registry.createOrReplaceTempFunction("trim",
-      trimBuilder((s, c) => org.apache.spark.sql.catalyst.expressions.StringTrim(s, c)), "scala_udf")
-    registry.createOrReplaceTempFunction("likely",
-      { children => children.head }, "scala_udf")
-    registry.createOrReplaceTempFunction("unlikely",
-      { children => children.head }, "scala_udf")
-    registry.createOrReplaceTempFunction("likelihood",
-      { children => children.head }, "scala_udf")
+    put(spark, "ltrim",
+      trimBuilder((s, c) => org.apache.spark.sql.catalyst.expressions.StringTrimLeft(s, c)))
+    put(spark, "rtrim",
+      trimBuilder((s, c) => org.apache.spark.sql.catalyst.expressions.StringTrimRight(s, c)))
+    put(spark, "trim",
+      trimBuilder((s, c) => org.apache.spark.sql.catalyst.expressions.StringTrim(s, c)))
+    Seq("likely", "unlikely", "likelihood").foreach(n => put(spark, n, _.head))
     // SQLite group_concat(x[, sep]) → Spark 4's ListAgg aggregate;
     // values render SQLite-style via the text cast, NULLs are skipped
     // by both engines, DISTINCT comes from the generic wrap. Ordering
     // is unspecified in BOTH dialects (SQLite docs say so explicitly).
-    registry.createOrReplaceTempFunction("group_concat", {
+    put(spark, "group_concat", {
       case Seq(c) =>
         org.apache.spark.sql.catalyst.expressions.aggregate.ListAgg(
           SqliteCastText(c), org.apache.spark.sql.catalyst.expressions.Literal(","))
@@ -282,7 +271,7 @@ object GraftFunctions {
           SqliteCastText(c), SqliteCastText(sep))
       case other => throw new IllegalArgumentException(
         s"group_concat expects 1 or 2 arguments, got ${other.length}")
-    }, "scala_udf")
+    })
     // Remaining SQLite core-function surface (battery-probed against
     // sqlite3):
     //  - iif: SQLite's conditional → If (branch types coerce);
@@ -305,14 +294,14 @@ object GraftFunctions {
       // iif applies SQLite truthiness to non-boolean conditions
       // (numeric coercion, nonzero = true: iif(1,..), iif('5abc',..)
       // take the THEN branch; NULL and 'abc' the ELSE branch).
-      registry.createOrReplaceTempFunction("iif", { children0 =>
+      put(spark, "iif", { children0 =>
         val Seq(c, t, f) = arity("iif", 3)(children0)
         val pred = c.dataType match {
           case org.apache.spark.sql.types.BooleanType => c
           case _ => Not(EqualTo(SqliteCastReal(c), Literal(0.0)))
         }
         If(pred, t, f)
-      }, "scala_udf")
+      })
       // SQLite printf semantics live in SqlitePrintf (per-directive
       // coercion, C-style %g, %q/%Q/%w); args pass as canonical text.
       val printfClass = Class.forName("graft.functions.SqlitePrintf")
@@ -322,7 +311,7 @@ object GraftFunctions {
             "wrong number of arguments to function printf()")
         val args = Cast(children.head, StringType) +:
           children.tail.map(a => SqliteCastText(a): Expression)
-        org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
+        StaticInvoke(
           staticObject = printfClass,
           dataType = StringType,
           functionName = s"printf${children.length}",
@@ -331,13 +320,13 @@ object GraftFunctions {
           propagateNull = false, // NULL args render as 0 / '' / NULL-literal
           returnNullable = true)
       }
-      registry.createOrReplaceTempFunction("printf", printfBuilder, "scala_udf")
-      registry.createOrReplaceTempFunction("format", printfBuilder, "scala_udf")
+      put(spark, "printf", printfBuilder)
+      put(spark, "format", printfBuilder)
       // char(): Unicode codepoints (sqlite3: char(8364) = '€'), zero
       // arguments give the empty string.
       val scalarsClass = Class.forName("graft.functions.SqliteScalars")
       def scalarsInvoke(method: String, a: Expression): Expression =
-        org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
+        StaticInvoke(
           staticObject = scalarsClass,
           dataType = StringType,
           functionName = method,
@@ -345,47 +334,47 @@ object GraftFunctions {
           inputTypes = Seq(StringType),
           propagateNull = true,
           returnNullable = true)
-      registry.createOrReplaceTempFunction("char", { children =>
+      put(spark, "char", { children =>
         if (children.isEmpty) Literal("")
         else children.map(c => scalarsInvoke("charCode", c))
           .reduceLeft((a, b) => Concat(Seq(a, b)))
-      }, "scala_udf")
-      registry.createOrReplaceTempFunction("sign", { children0 =>
+      })
+      put(spark, "sign", { children0 =>
         val Seq(c) = arity("sign", 1)(children0)
         Cast(Signum(Cast(c, DoubleType)), org.apache.spark.sql.types.LongType)
-      }, "scala_udf")
+      })
       // floor/ceil keep SQLite's result classes by working over the
       // canonical text value (INTEGER stays INTEGER, REAL stays REAL,
       // non-numeric text is NULL, no int64 clamp on huge doubles).
-      registry.createOrReplaceTempFunction("floor", { children0 =>
+      put(spark, "floor", { children0 =>
         scalarsInvoke("floorText", arity("floor", 1)(children0).head)
-      }, "scala_udf")
+      })
       val ceilB: Seq[Expression] => Expression = { children0 =>
         scalarsInvoke("ceilText", arity("ceil", 1)(children0).head)
       }
-      registry.createOrReplaceTempFunction("ceil", ceilB, "scala_udf")
-      registry.createOrReplaceTempFunction("ceiling", ceilB, "scala_udf")
-      registry.createOrReplaceTempFunction("mod", { children0 =>
+      put(spark, "ceil", ceilB)
+      put(spark, "ceiling", ceilB)
+      put(spark, "mod", { children0 =>
         val Seq(a, b) = arity("mod", 2)(children0)
         Remainder(Cast(a, DoubleType), Cast(b, DoubleType))
-      }, "scala_udf")
+      })
       // SQLite abs(): dynamic storage class for affinity/arithmetic
       // children (INTEGER stays INTEGER, TEXT storage → REAL via
       // numeric prefix, abs('x') = 0.0 — sqlite3-pinned, round-7
       // fuzz); Spark's Abs already preserves the class for operands
       // that are numeric-TYPED (literals, julianday() results).
-      registry.createOrReplaceTempFunction("abs", { children0 =>
+      put(spark, "abs", { children0 =>
         val Seq(c) = arity("abs", 1)(children0)
         if (c.dataType.isInstanceOf[org.apache.spark.sql.types.StringType])
           scalarsInvoke(
             if (SqliteScalars.isAffinityChild(c)) "absTextDyn" else "absTextLit",
             c)
         else Abs(c, failOnError = false)
-      }, "scala_udf")
+      })
       // SQLite's like(PATTERN, STRING[, ESCAPE]) function — case-
       // insensitive like the operator (the operator spelling rewrites
       // to ILIKE in cli/SqliteOperators).
-      registry.createOrReplaceTempFunction("like", { children =>
+      put(spark, "like", { children =>
         children match {
           case Seq(p, str) => ILike(str, p, '\\')
           case Seq(p, str, esc) =>
@@ -399,28 +388,29 @@ object GraftFunctions {
           case other => throw new IllegalArgumentException(
             "wrong number of arguments to function like()")
         }
-      }, "scala_udf")
+      })
     }
+    Seq("sum", "total", "avg", "random").map(FunctionIdentifier(_)).foreach(registry.dropFunction)
     spark.udf.register("sum", org.apache.spark.sql.functions.udaf(SqliteSum))
     spark.udf.register("total", org.apache.spark.sql.functions.udaf(SqliteTotal))
     spark.udf.register("avg", org.apache.spark.sql.functions.udaf(SqliteAvg))
     // SQLite date/time family: time-value forms (ISO text, julian
     // day, 'now') plus up to three modifiers, NULL on invalid input
     // like SQLite. Arity overloads on SqliteDate resolve per call.
-    registerStaticRange(spark, "date", StringType, 1 to 4, sqliteDateClass)
-    registerStaticRange(spark, "time", StringType, 1 to 4, sqliteDateClass)
-    registerStaticRange(spark, "datetime", StringType, 1 to 4, sqliteDateClass)
-    registerStaticRange(spark, "julianday", DoubleType, 1 to 4, sqliteDateClass)
-    registerStaticRange(spark, "strftime", StringType, 2 to 5, sqliteDateClass)
+    registerStatic(spark, "date", 1 to 4, StringType, "SqliteDate.date")
+    registerStatic(spark, "time", 1 to 4, StringType, "SqliteDate.time")
+    registerStatic(spark, "datetime", 1 to 4, StringType, "SqliteDate.datetime")
+    registerStatic(spark, "julianday", 1 to 4, DoubleType, "SqliteDate.julianday")
+    registerStatic(spark, "strftime", 2 to 5, StringType, "SqliteDate.strftime")
     // SQLite random() returns a signed int64 (Spark's alias of rand()
     // returns a double in [0,1)).
     spark.udf.register("random",
       org.apache.spark.sql.functions.udf(() => scala.util.Random.nextLong())
         .asNondeterministic())
     try body
-    finally saved.foreach {
-      case (id, Some(info), Some(builder)) => registry.registerFunction(id, info, builder)
-      case (id, _, _) => registry.dropFunction(id)
+    finally saved.foreach { case (id, info, builder) =>
+      registry.dropFunction(id)
+      for (i <- info; b <- builder) registry.registerFunction(id, i, b)
     }
   }
 
@@ -475,61 +465,65 @@ object GraftFunctions {
         s"${if (isMin) "min" else "max"} expects at least 1 argument")
   }
 
-  /** The classes holding the static forwarders (the Scala objects
-    * themselves compile to `...$`; codegen needs the statics). */
-  private lazy val tclExprsClass: Class[_] = Class.forName("graft.functions.TclExprs")
-  private lazy val sqliteDateClass: Class[_] = Class.forName("graft.functions.SqliteDate")
-
-  private def staticInvoke(
-      name: String, out: DataType, children: Seq[Expression],
-      target: Class[_] = null): Expression =
-    org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
-      staticObject = if (target == null) tclExprsClass else target,
-      dataType = out,
-      functionName = name,
-      arguments = children.map(c =>
-        if (c.dataType == StringType) c
-        else org.apache.spark.sql.catalyst.expressions.Cast(c, StringType)),
-      inputTypes = Seq.fill(children.length)(StringType),
-      propagateNull = true,
-      returnNullable = true)
-
-  private def registerStatic(
-      spark: SparkSession, name: String, out: DataType, arity: Int,
-      target: Class[_] = null): Unit = {
-    val builder: Seq[Expression] => Expression = { children =>
-      if (children.length != arity)
-        throw new IllegalArgumentException(s"$name expects $arity arguments")
-      staticInvoke(name, out, children, target)
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  /** Register `builder` as `name`, dropping any function of that
+    * name first: every graft shadow of a Spark built-in is deliberate,
+    * and a plain replace makes Spark WARN once per name. */
+  private def put(spark: SparkSession, name: String,
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.dropFunction(FunctionIdentifier(name))
+    registry.createOrReplaceTempFunction(name, builder, "scala_udf")
   }
 
-  /** Variadic function resolved by Java-style arity OVERLOADS of one
-    * static name on `target` (StaticInvoke binds by argument count). */
-  private def registerStaticRange(
-      spark: SparkSession, name: String, out: DataType, arities: Range,
-      target: Class[_]): Unit = {
-    val builder: Seq[Expression] => Expression = { children =>
+  /** Register `name` as a call of the static method `target`
+    * ("Class.method" in this package; the Scala objects compile
+    * static forwarders onto `Class`, and arity overloads resolve by
+    * argument count). With no `in`, every argument casts to text (the
+    * compat functions); otherwise the arguments must have exactly the
+    * types `in` lists, and an int slot takes an int literal (a kernel
+    * parameter, not per-row data). A null argument is a null result;
+    * `returnNullable` says whether the method may also return null.
+    * The call is wrapped in [[NamedStaticInvoke]], so an unaliased
+    * column reads as the SQL call. */
+  private def registerStatic(spark: SparkSession, name: String, arities: Range,
+      out: DataType, target: String, in: Seq[DataType] = Nil,
+      returnNullable: Boolean = true): Unit = {
+    val cls = Class.forName("graft.functions." + target.takeWhile(_ != '.'))
+    val method = target.dropWhile(_ != '.').tail
+    def show(ts: Seq[String]) = if (ts.size == 1) ts.head else ts.mkString("(", ", ", ")")
+    def accepts(c: Expression, t: DataType) = (c.dataType, t) match {
+      case (IntegerType, IntegerType) => c.isInstanceOf[Literal]
+      case (ArrayType(e, _), ArrayType(f, _)) => e == f
+      case (d, _) => d == t
+    }
+    put(spark, name, { children =>
       if (!arities.contains(children.length))
-        throw new IllegalArgumentException(
-          s"$name: unsupported arity ${children.length}")
-      staticInvoke(name, out, children, target)
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+        throw new IllegalArgumentException(s"$name: unsupported arity ${children.length}")
+      val args =
+        if (in.isEmpty)
+          children.map(c => if (c.dataType == StringType) c else Cast(c, StringType))
+        else if (children.zip(in).forall((accepts _).tupled)) children
+        else {
+          val want = in.map(t => if (t == IntegerType) "int literal" else t.simpleString)
+          throw new IllegalArgumentException(s"$name expects ${show(want)}, " +
+            s"got ${show(children.map(_.dataType.simpleString))}")
+        }
+      NamedStaticInvoke(name, children, StaticInvoke(cls, out, method, args,
+        args.map(_.dataType), propagateNull = true, returnNullable = returnNullable))
+    })
   }
+}
 
-  /** Variadic function whose per-arity static entry point is
-    * `<name><arity>` in [[TclExprs]]. */
-  private def registerStaticVariadic(
-      spark: SparkSession, name: String, out: DataType, arities: Range): Unit = {
-    val builder: Seq[Expression] => Expression = { children =>
-      if (!arities.contains(children.length))
-        throw new IllegalArgumentException(
-          s"$name: unsupported arity ${children.length}")
-      staticInvoke(s"$name${children.length}", out, children)
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
-  }
-
+/** A registered static-method call: `replacement` is the StaticInvoke
+  * that runs, `parameters` the call as written, so an unaliased column
+  * reads `lindex(a0, 0)` rather than StaticInvoke's own
+  * `static_invoke(...)`. Spark's idiom for static-method functions:
+  * the optimizer's first batch swaps in the replacement, so optimized
+  * plans and generated code only ever see the StaticInvoke. */
+final case class NamedStaticInvoke(
+    name: String, parameters: Seq[Expression], replacement: Expression)
+    extends RuntimeReplaceable with InheritAnalysisRules {
+  override def prettyName: String = name
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(replacement = newChild)
 }

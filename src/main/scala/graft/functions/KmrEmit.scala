@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -17,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * planes = 128 bits) and left_sym is the raw previous token (NULL at
   * the document start).
   *
-  * Native kernel per the custom-operator preference order (the
+  * A static kernel registered through StaticInvoke (the
   * RollingHashMin precedent): the higher-order-function spelling paid
   * an interpreted lambda dispatch PER ARRAY ELEMENT across maxK
   * chained `transform`s plus a flatten — this is maxK primitive
@@ -39,30 +36,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * The only caller (p62 via toksExpr) can never produce one: split()
   * never yields null and the filter removes empties.
   */
-final case class KmrEmit(child: Expression, minK: Int, maxK: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_kmr_emit expects array<string>, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = KmrEmit.outType
-
-  override def nullSafeEval(input: Any): Any =
-    KmrEmit.emit(input.asInstanceOf[ArrayData], minK, maxK)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.KmrEmit.emit($c, $minK, $maxK)")
-
-  override protected def withNewChildInternal(newChild: Expression): KmrEmit =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_kmr_emit"
-}
-
 object KmrEmit {
   val outType: DataType = ArrayType(StructType(Seq(
     StructField("k", IntegerType, nullable = false),

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -35,27 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * intermediate strings, inside whole-stage codegen via a static
   * call (the Md5Min8 / RollingHashMin precedent).
   */
-final case class Md5Longs(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_md5longs expects string, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = Md5Longs.outType
-
-  override def nullSafeEval(input: Any): Any =
-    Md5Longs.pack(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Longs.pack($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Longs =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_md5longs"
-}
-
 object Md5Longs {
   val outType: DataType = StructType(Seq(
     StructField("h1", LongType, nullable = false),

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_md5min8(s)`: the minimum md5 hex digest over all 8-CHARACTER
@@ -27,26 +23,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * ordered and encode nibbles high-to-low), ONE hex encode at the
   * end. Pinned byte-identical to the HOF spelling in Md5Min8Spec.
   */
-final case class Md5Min8(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_md5min8 expects string, got ${child.dataType.simpleString}")
-  override def dataType: DataType = StringType
-
-  override def nullSafeEval(input: Any): Any =
-    Md5Min8.minHash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Min8.minHash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Min8 =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_md5min8"
-}
-
 object Md5Min8 {
   private val HexChars = "0123456789abcdef".toCharArray
 

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_rollhash_min(s)`: minimum Rabin–Karp polynomial hash over
@@ -22,32 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * BYTES (the corpus contract is ASCII; byte-level is what a
   * fingerprint over raw training data does anyway).
   *
-  * Native codegen kernel per the custom-operator preference order:
-  * the higher-order-function spelling pays an interpreted lambda per
+  * A static kernel registered through StaticInvoke: the
+  * higher-order-function spelling pays an interpreted lambda per
   * window; this is one fused loop per row.
   */
-final case class RollingHashMin(child: Expression)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rollhash_min expects string, got ${child.dataType.simpleString}")
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    RollingHashMin.minHash(input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RollingHashMin.minHash($c.getBytes())")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashMin =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_rollhash_min"
-}
-
 object RollingHashMin {
   final val Base = 31L
   final val Window = 8
@@ -59,9 +33,12 @@ object RollingHashMin {
     p
   }
 
+  /** The SQL entry point: the kernel over `s`'s UTF-8 bytes. */
+  def minHash(s: UTF8String): Long = minHash(s.getBytes)
+
   /** The kernel: O(n) rolling min over all `Window`-byte windows;
     * inputs shorter than the window hash once over their full
-    * length. Called from both interpreted eval and generated code. */
+    * length. */
   def minHash(b: Array[Byte]): Long = {
     val n = b.length
     if (n <= Window) {

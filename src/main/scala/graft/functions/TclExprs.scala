@@ -27,32 +27,32 @@ object TclExprs {
   def lrange(l: UTF8String, a: UTF8String, b: UTF8String): UTF8String =
     u(TclList.lrange(s(l), s(a), s(b)))
 
-  // Variadic compat functions: one static per arity (codegen calls a
-  // fixed signature). The registry builder appends the arity.
+  // Variadic compat functions: one overload per arity (StaticInvoke
+  // resolves by argument count, as for SqliteDate).
 
-  def lindex2(l: UTF8String, i: UTF8String): UTF8String =
+  def lindex(l: UTF8String, i: UTF8String): UTF8String =
     u(TclList.lindex(s(l), Seq(s(i).trim.toInt)))
-  def lindex3(l: UTF8String, i: UTF8String, j: UTF8String): UTF8String =
+  def lindex(l: UTF8String, i: UTF8String, j: UTF8String): UTF8String =
     u(TclList.lindex(s(l), Seq(s(i).trim.toInt, s(j).trim.toInt)))
-  def lindex4(l: UTF8String, i: UTF8String, j: UTF8String, k: UTF8String): UTF8String =
+  def lindex(l: UTF8String, i: UTF8String, j: UTF8String, k: UTF8String): UTF8String =
     u(TclList.lindex(s(l), Seq(s(i).trim.toInt, s(j).trim.toInt, s(k).trim.toInt)))
 
-  def dict_get2(d: UTF8String, k: UTF8String): UTF8String =
+  def dict_get(d: UTF8String, k: UTF8String): UTF8String =
     u(TclList.dictGet(s(d), Seq(s(k))).orNull)
-  def dict_get3(d: UTF8String, k1: UTF8String, k2: UTF8String): UTF8String =
+  def dict_get(d: UTF8String, k1: UTF8String, k2: UTF8String): UTF8String =
     u(TclList.dictGet(s(d), Seq(s(k1), s(k2))).orNull)
-  def dict_get4(d: UTF8String, k1: UTF8String, k2: UTF8String, k3: UTF8String): UTF8String =
+  def dict_get(d: UTF8String, k1: UTF8String, k2: UTF8String, k3: UTF8String): UTF8String =
     u(TclList.dictGet(s(d), Seq(s(k1), s(k2), s(k3))).orNull)
 
-  def dict_exists2(d: UTF8String, k: UTF8String): Int =
+  def dict_exists(d: UTF8String, k: UTF8String): Int =
     if (TclList.dictExists(s(d), Seq(s(k)))) 1 else 0
-  def dict_exists3(d: UTF8String, k1: UTF8String, k2: UTF8String): Int =
+  def dict_exists(d: UTF8String, k1: UTF8String, k2: UTF8String): Int =
     if (TclList.dictExists(s(d), Seq(s(k1), s(k2)))) 1 else 0
-  def dict_exists4(d: UTF8String, k1: UTF8String, k2: UTF8String, k3: UTF8String): Int =
+  def dict_exists(d: UTF8String, k1: UTF8String, k2: UTF8String, k3: UTF8String): Int =
     if (TclList.dictExists(s(d), Seq(s(k1), s(k2), s(k3)))) 1 else 0
 
-  def regsub3(re: UTF8String, str: UTF8String, spec: UTF8String): UTF8String =
+  def regsub(re: UTF8String, str: UTF8String, spec: UTF8String): UTF8String =
     u(GraftFunctions.tclRegsub(all = false, s(re), s(str), s(spec)))
-  def regsub4(sw: UTF8String, re: UTF8String, str: UTF8String, spec: UTF8String): UTF8String =
+  def regsub(sw: UTF8String, re: UTF8String, str: UTF8String, spec: UTF8String): UTF8String =
     u(GraftFunctions.tclRegsub(all = s(sw) == "-all", s(re), s(str), s(spec)))
 }

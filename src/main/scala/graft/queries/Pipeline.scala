@@ -700,7 +700,7 @@ object Pipeline {
     // p07: DOCUMENT FINGERPRINT — md5 of the whitespace-normalized text
     // (exact-dup key) plus the minimum md5 over character 8-gram
     // shingles (a winnowing-style near-dup sketch: one value per doc,
-    // robust to local edits). One fused native kernel per row
+    // robust to local edits). One static kernel call per row
     // (graft_md5min8): shingle rows never materialize and there is
     // no shuffle at all.
     QDef(
@@ -708,7 +708,7 @@ object Pipeline {
       (s, d) => {
         // graft_md5min8 (round 15, optimization): same min-md5-per-
         // 8-char-window VALUE — the digests are output-semantic and
-        // stay md5 — computed in one fused native loop instead of an
+        // stay md5 — computed in one static-kernel loop instead of an
         // interpreted HOF paying a lambda dispatch + substring alloc +
         // hex encode per window (functions/Md5Min8.scala; pinned
         // byte-identical to the HOF spelling in FingerprintSpec).
@@ -732,8 +732,9 @@ object Pipeline {
     // p17: ROLLING-HASH FINGERPRINT — the brief's named fingerprint
     // shape: minimum Rabin–Karp hash over all 8-byte windows of the
     // normalized text, computed with the true O(n) rolling update in
-    // a native codegen expression (functions/RollingHashMin.scala —
-    // one fused loop per row, no per-window rehash, no HOF lambdas).
+    // a static kernel (functions/RollingHashMin.scala, called through
+    // StaticInvoke — one loop per row, no per-window rehash, no HOF
+    // lambdas).
     // Parameters (B=31, w=8, no modulus) keep every value exact in
     // both int64 and float64, so the oracle recomputes the SAME
     // values positionally in SQL. Pure projection: zero shuffle.
@@ -4146,7 +4147,7 @@ object Pipeline {
         val small = docs(s, d).count() <= repCheckpointMaxDocs
         def pin(df: DataFrame): DataFrame =
           if (small) df.localCheckpoint() else df
-        // Doc-local doubling + emission in ONE fused native kernel
+        // Doc-local doubling + emission in ONE static kernel call
         // (round 15, optimization, guide §1.2 step 2 + §2.3 — see
         // functions/KmrEmit.scala): the classes are INTERNAL — no
         // output column carries a hash, the oracle replays its own

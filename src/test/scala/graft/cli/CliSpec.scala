@@ -207,6 +207,18 @@ class CliSpec extends SparkSpec {
     assert(code == 0 && out.trim.toDouble == 11.0)
   }
 
+  test("unaliased static calls are named as the SQL call in json keys") {
+    val f = tempFile("a b\n")
+    val (c, o) = sqawk("-output", "json", "select lindex(a0, 0), llength(a0), " +
+      "graft_md5min8(a1), graft_rollhash_min(a0), regsub('b', a0, 'B') from a", f)
+    assert((c, o) == (0, """[{"lindex(a0, 0)":"a","llength(a0)":"2",""" +
+      """"graft_md5min8(a1)":"0cc175b9c0f1b6a831c399e269772661",""" +
+      """"graft_rollhash_min(a0)":"94307","regsub(b, a0, B)":"a B"}]""" + "\n"))
+    // string literals render bare, as in Spark's naming of its own calls
+    assert(sqawk("-output", "json", "select sum(a2), lower('Q') from a", f) ==
+      (0, """[{"sum(a2)":"0.0","lower(Q)":"q"}]""" + "\n"))
+  }
+
   test("SQLite date/time functions (sqlite3-verified outputs)") {
     assert(sqawk("-noinput", "select date('2024-01-15 10:30:00') as r") == (0, "2024-01-15\n"))
     assert(sqawk("-noinput", "select datetime('2024-01-15') as r") == (0, "2024-01-15 00:00:00\n"))

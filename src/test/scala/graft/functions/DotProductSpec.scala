@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Pins the `graft_dot` codegen kernel used by the ANN verify stages:
-  * value parity with the higher-order-function spelling, null
-  * propagation, and the shorter-input length clamp. */
+/** Pins the `graft_dot` kernel used by the ANN verify stages: value
+  * parity with the higher-order-function spelling, null propagation,
+  * and the shorter-input length clamp; and, for all five static
+  * kernels, interpreted evaluation against generated code. */
 class DotProductSpec extends SparkSpec {
 
   private def df = {
@@ -42,14 +43,42 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    val e = DotProduct(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array(1.0, 2.0), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array(3.0, -4.0), org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false)))
-    assert(e.eval(null) === -5.0)
+    GraftFunctions.register(spark)
+    import org.apache.spark.sql.types._
+    // an RDD-backed frame, so the projection runs in the executed plan
+    // rather than being folded over a local relation by the optimizer
+    val rnd = new scala.util.Random(7)
+    def dbl(): java.lang.Double =
+      if (rnd.nextInt(20) == 0) null else java.lang.Double.valueOf(rnd.nextGaussian())
+    def vec(n: Int): Seq[java.lang.Double] =
+      if (rnd.nextInt(10) == 0) null else Seq.fill(n)(dbl())
+    val words = Seq("a", "bb", "café", "日本", "the", "x", "naïve")
+    val rows = (0 until 400).map { i =>
+      val toks = Seq.fill(rnd.nextInt(12))(words(rnd.nextInt(words.size)))
+      org.apache.spark.sql.Row(i.toLong,
+        if (i % 17 == 0) null else toks.mkString(" ") + rnd.nextInt(1000),
+        vec(rnd.nextInt(6)), vec(rnd.nextInt(6)), toks)
+    }
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType),
+      StructField("a", ArrayType(DoubleType)), StructField("b", ArrayType(DoubleType)),
+      StructField("toks", ArrayType(StringType))))
+    val in = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    def run() = in.selectExpr("id", "graft_dot(a, b)", "graft_md5longs(s)",
+        "graft_md5min8(s)", "graft_rollhash_min(s)", "graft_kmr_emit(toks, 1, 3)")
+      .collect().sortBy(_.getLong(0)).toSeq
+    val codegen = run()
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => spark.conf.getOption(k))
+    spark.conf.set(keys(0), "false")
+    spark.conf.set(keys(1), "NO_CODEGEN")
+    val interpreted = try run() finally keys.zip(saved).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(codegen.size === 400)
+    assert(codegen.exists(_.isNullAt(1)) && codegen.exists(r => !r.isNullAt(1)))
+    assert(interpreted === codegen)
   }
 
   test("null input propagates to null") {

@@ -3,8 +3,8 @@ package graft.functions
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests for the pure compute kernels behind the codegen
-  * expressions: invariants that must hold for ANY input, not just the
+/** Property tests for the static compute kernels behind the graft
+  * functions: invariants that must hold for ANY input, not just the
   * pinned examples. Raw ScalaCheck, same harness as PropertySpec. */
 class KernelPropertySpec extends AnyFunSuite {
 
@@ -45,19 +45,15 @@ class KernelPropertySpec extends AnyFunSuite {
     })
   }
 
-  // ---- DotProduct kernel (via nullSafeEval's loop, exercised direct) ----
+  // ---- DotProduct kernel (direct calls on UnsafeArrayData) -------------
 
   private val vecGen: Gen[Array[Double]] =
     Gen.listOfN(16, Gen.chooseNum(-100.0, 100.0)).map(_.toArray)
 
   private def kernelDot(a: Array[Double], b: Array[Double]): Double = {
-    // the REAL expression's interpreted eval (codegen parity is
-    // pinned by DotProductSpec)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val at = ArrayType(DoubleType, containsNull = false)
-    DotProduct(Literal.create(a, at), Literal.create(b, at))
-      .eval(null).asInstanceOf[Double]
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    DotProduct.dot(UnsafeArrayData.fromPrimitiveArray(a),
+      UnsafeArrayData.fromPrimitiveArray(b)).doubleValue
   }
 
   test("dot product is symmetric") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.cli.SqliteOperators.{Lexed, unquote}
 import graft.sources.Affinity
 
 /** DDL/DML statements of the script dialect (SURVEY.md §7.4 #6).
@@ -310,7 +311,7 @@ object ScriptDdl {
             sql.substring(0, a.start) + sql.substring(b.start), state)
         state.attached.keys.find(_.equalsIgnoreCase(an)) match {
           case Some(k) =>
-            val tbl = stripQuotes(text(b))
+            val tbl = unquote(text(b))
             val db = state.attached(k)
             val view = db.views.getOrElse(tbl.toLowerCase, {
               // a name first seen AFTER attach (a CREATE TABLE into
@@ -481,13 +482,6 @@ object ScriptDdl {
     if (isView(spark, name))
       throw new UnsupportedOperationException(
         s"cannot modify $name because it is a view")
-
-  private def stripQuotes(s: String): String = {
-    val t = s.trim
-    if (t.length >= 2 && (t.head == '`' || t.head == '"') && t.last == t.head)
-      t.substring(1, t.length - 1)
-    else t
-  }
 
   /** Every DML arm rebinds the view over its previous plan, so a
     * script with hundreds of INSERT/UPDATE/DELETE statements grows a
@@ -832,14 +826,7 @@ object ScriptDdl {
       if (name.equalsIgnoreCase("main") || name.equalsIgnoreCase("temp") ||
           state.attached.keys.exists(_.equalsIgnoreCase(name)))
         throw new IllegalArgumentException(s"database $name is already in use")
-      val path = {
-        // path literals are usually single-quoted; unescape doubled quotes
-        val t = pathText.trim
-        if (t.length >= 2 && (t.head == '\'' || t.head == '"') && t.last == t.head)
-          t.substring(1, t.length - 1)
-            .replace(s"${t.head}${t.head}", t.head.toString)
-        else t
-      }
+      val path = unquote(pathText)
       // the attached database is another engine `-dbfile` store
       // (PATH.d/ of parquet generations); a path with no store
       // attaches as an empty schema, like sqlite3 attaching a file
@@ -941,8 +928,7 @@ object ScriptDdl {
           allDefs.partition(d => constraintKw.contains(d.split("\\s+", 2).head.toLowerCase))
         val tablePk: Seq[String] = tableCons.flatMap { d =>
           """(?is)\s*primary\s+key\s*\(([^)]*)\)\s*""".r.findFirstMatchIn(d)
-            .map(_.group(1).split(",").map(s => stripQuotes(s.trim)).toSeq)
-            .getOrElse(Nil)
+            .map(m => nameList(m.group(1))).getOrElse(Nil)
         }
         val parsed = defs.map(parseColDef)
         // a column is a rowid alias only for a single-column PRIMARY
@@ -982,7 +968,7 @@ object ScriptDdl {
         val tableUniques: Seq[Seq[String]] = tableCons.flatMap { d =>
           """(?is)^\s*(?:constraint\s+[`"]?\w+[`"]?\s+)?unique\s*\(([^)]*)\)\s*$""".r
             .findFirstMatchIn(d)
-            .map(_.group(1).split(",").map(s => stripQuotes(s.trim)).toSeq)
+            .map(m => nameList(m.group(1)))
         }
         val colUniques = parsed.filter(cd => cd.unique && !cd.pk).map(cd => Seq(cd.name))
         (colUniques ++ tableUniques).zipWithIndex.foreach { case (cols, i) =>
@@ -1029,8 +1015,7 @@ object ScriptDdl {
               SqliteArith.sql(spark, stringifyValues(body))
           }
       val bound: Seq[String] = Option(colList).map(_.trim).filter(_.nonEmpty) match {
-        case Some(cl) => splitTopLevel(cl.stripPrefix("(").stripSuffix(")"))
-          .map(c => stripQuotes(c.trim))
+        case Some(cl) => nameList(cl.stripPrefix("(").stripSuffix(")"))
         case None => target.columns.toSeq
       }
       for (c <- bound if !target.columns.exists(_.equalsIgnoreCase(c)))
@@ -1202,7 +1187,7 @@ object ScriptDdl {
                 f.metadata.getString(Affinity.DeclKey) else "") == "BLOB"
           val boundCols: Seq[String] =
             Option(colList).map(_.trim).filter(_.nonEmpty) match {
-              case Some(cl) => splitTopLevel(cl).map(c => stripQuotes(c.trim))
+              case Some(cl) => nameList(cl.stripPrefix("(").stripSuffix(")"))
               case None => target.columns.toSeq
             }
           val untypedPos: Set[Int] = boundCols.zipWithIndex.collect {
@@ -1232,8 +1217,7 @@ object ScriptDdl {
                   s"table $name has ${target.columns.length} columns but ${rows.columns.length} values were supplied")
               rows.toDF(target.columns.toIndexedSeq: _*)
             case Some(cl) =>
-              val names = cl.stripPrefix("(").stripSuffix(")")
-                .split(",").map(stripQuotes).toSeq
+              val names = nameList(cl.stripPrefix("(").stripSuffix(")"))
               if (names.length != rows.columns.length)
                 throw new IllegalArgumentException(
                   s"${names.length} columns but ${rows.columns.length} values were supplied")
@@ -1854,8 +1838,7 @@ object ScriptDdl {
         if (ifNotExists == null)
           throw new IllegalArgumentException(s"trigger $trgName already exists")
       } else {
-        val cols = Option(updCols).map(
-          splitTopLevel(_).map(c => stripQuotes(c.trim))).getOrElse(Nil)
+        val cols = Option(updCols).map(nameList).getOrElse(Nil)
         state.triggers += TriggerDef(trgName, tblName, timing, event, cols,
           Option(whenText).map(_.trim).filter(_.nonEmpty),
           ScriptRunner.splitStatements(bodyText))
@@ -1970,17 +1953,12 @@ object ScriptDdl {
       if (numericStorage) t else "'" + s.replace("'", "''") + "'"
     }
 
-  private val TrigRefPat = java.util.regex.Pattern.compile(
-    """(?i)(new|old)\s*\.\s*(?:[`"](\w+)[`"]|(\w+))""")
-
   /** Substitute OLD.col / NEW.col references with the fired row's
-    * literals — QUOTE-AWARE: a reference spelled inside a string
-    * literal is text, not a name (round-8 advice: `VALUES ('NEW.a is
-    * set')` keeps its literal content), while `NEW."a"` — the quoted
-    * IDENTIFIER form — still substitutes because the reference match
-    * consumes its quotes before the literal scan sees them.
-    * References to the absent side (OLD in an INSERT trigger, NEW in
-    * DELETE) error like unresolved names. */
+    * literals. A reference spelled inside a string literal is text,
+    * not a name (round-8 advice: `VALUES ('NEW.a is set')` keeps its
+    * literal content), while `NEW."a"` — a quoted column name —
+    * substitutes. References to the absent side (OLD in an INSERT
+    * trigger, NEW in DELETE) error like unresolved names. */
   private def substituteRefs(text: String, schema: StructType,
       oldR: Option[Row], newR: Option[Row]): String = {
     def refLit(which: String, colName: String): String = {
@@ -1995,37 +1973,9 @@ object ScriptDdl {
           trigLit(schema.fields(i), row.get(i))
       }
     }
-    def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-    val m = TrigRefPat.matcher(text)
-    val out = new StringBuilder
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        // copy the quoted region verbatim (doubled quotes escape)
-        val q = c
-        val start = i
-        i += 1
-        var done = false
-        while (i < n && !done) {
-          if (text.charAt(i) == q) {
-            if (i + 1 < n && text.charAt(i + 1) == q) i += 2
-            else { i += 1; done = true }
-          } else i += 1
-        }
-        out ++= text.substring(start, i)
-      } else if ((c == 'n' || c == 'N' || c == 'o' || c == 'O') &&
-          (i == 0 || !isWordChar(text.charAt(i - 1)))) {
-        m.region(i, n)
-        if (m.lookingAt()) {
-          val colName = Option(m.group(2)).getOrElse(m.group(3))
-          out ++= refLit(m.group(1).toLowerCase, colName)
-          i = m.end()
-        } else { out += c; i += 1 }
-      } else { out += c; i += 1 }
-    }
-    out.toString
+    val l = new Lexed(text)
+    l.rewrite(i => qualifiedRef(l, i, Set("new", "old"))
+      .map { case (which, colName, next) => (refLit(which, colName), next) })
   }
 
   /** Fire `timing`×`event` triggers for each (OLD, NEW) pair —
@@ -2165,46 +2115,23 @@ object ScriptDdl {
       f.metadata.getString(graft.plans.AffinityOrdering.AffinityKey)
     else "NONE"
 
-  /** True when keyset position `i` compares as TEXT: a plain (or
-    * COLLATE'd) column whose declared affinity is TEXT, or an
-    * expression key whose top-level function PRODUCES text storage —
-    * sqlite's lower()/upper()/substr()/… always return TEXT, so an
-    * index on lower(c) holds TEXT keys and '100' vs '100.0' are
-    * DISTINCT (round-10 fuzz seed 7651: the value-class collapse
-    * merged them and rejected an insert sqlite3 accepts). Other
-    * expression keys keep value-class comparison (arithmetic results
-    * are numeric storage). */
-  private val TextFnKeyRe =
-    """(?is)\s*(lower|upper|substr|substring|trim|ltrim|rtrim|replace|hex|quote|typeof|char|printf|format|concat|group_concat)\s*\(""".r
+  private val TextFns = Set("lower", "upper", "substr", "substring", "trim",
+    "ltrim", "rtrim", "replace", "hex", "quote", "typeof", "char", "printf",
+    "format", "concat", "group_concat")
 
   /** True iff the key expression IS a single text-returning function
     * call — the call's parens must span the whole expression. A mere
     * text-function PREFIX is not enough: `lower(c) + 1` is numeric
     * storage in sqlite (arithmetic coerces), so '100' and '100.0'
-    * must still merge under value-class comparison (ADVICE r10:
-    * the prefix-anchored regex classified it as TEXT and made them
-    * distinct unique-index keys). Single-quoted literals are skipped
-    * when counting parens; the SQL '' escape toggles the in-string
-    * flag twice, which is exactly right. */
-  private def textFnSpansKey(e: String): Boolean =
-    TextFnKeyRe.findPrefixMatchOf(e).exists { m =>
-      var depth = 0
-      var inQ = false
-      var endIdx = -1
-      var i = m.end - 1 // the opening paren the regex just matched
-      while (i < e.length) {
-        val ch = e.charAt(i)
-        if (inQ) { if (ch == '\'') inQ = false }
-        else ch match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0 && endIdx < 0) endIdx = i
-          case _ =>
-        }
-        i += 1
-      }
-      endIdx >= 0 && e.substring(endIdx + 1).isBlank
-    }
+    * must still merge under value-class comparison (ADVICE r10: a
+    * prefix-anchored match classified it as TEXT and made them
+    * distinct unique-index keys). */
+  private def textFnSpansKey(e: String): Boolean = {
+    val l = new Lexed(e)
+    val f = l.sig(0)
+    val open = l.sig(f + 1)
+    TextFns(l.word(f)) && l.is(open, '(') && l.close(open) == l.lastSig
+  }
 
   /** Strip redundant whole-span outer parens — `(lower(a) || b)`
     * compares exactly like `lower(a) || b` in sqlite, but neither the
@@ -2212,28 +2139,16 @@ object ScriptDdl {
     * through the wrapper. Leaves `(a) || (b)` alone (the first paren
     * closes before the end). */
   @annotation.tailrec
-  private def stripOuterParens(e0: String): String = {
-    val e = e0.trim
-    if (!e.startsWith("(")) e
-    else {
-      var depth = 0
-      var inQ = false
-      var close = -1
-      var i = 0
-      while (i < e.length && close < 0) {
-        val ch = e.charAt(i)
-        if (inQ) { if (ch == '\'') inQ = false }
-        else ch match {
-          case '\'' => inQ = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ =>
-        }
-        i += 1
-      }
-      if (close == e.length - 1) stripOuterParens(e.substring(1, close)) else e
-    }
+  private def stripOuterParens(e: String): String = {
+    val l = new Lexed(e)
+    val open = l.sig(0)
+    if (l.is(open, '(') && l.close(open) == l.lastSig)
+      stripOuterParens(l.render(open + 1, l.lastSig))
+    else e.trim
   }
+
+  private val BoolOps =
+    Set("and", "or", "not", "in", "like", "glob", "regexp", "match", "is", "between")
 
   /** True iff the key expression carries a top-level `||` and no
     * other top-level operator: sqlite's `||` ALWAYS yields TEXT
@@ -2244,64 +2159,36 @@ object ScriptDdl {
     * value-class). A lower-precedence arithmetic/comparison/boolean
     * tail re-coerces to numeric storage (`lower(a) || b + 1` parses
     * as (concat)+1 since `||` binds tightest), so ANY other top-level
-    * operator keeps value-class comparison. Scan runs over a masked
-    * copy (paren bodies and string literals blanked, each literal
-    * leaving one value marker so binary +/- detection still sees an
-    * operand); exponent signs inside numeric literals (1e+5) are not
-    * operators. */
+    * operator keeps value-class comparison. A sign is binary only
+    * after an operand. */
   private def topLevelConcat(e: String): Boolean = {
-    // mask: keep depth-0 chars and the parens themselves; blank
-    // everything nested or quoted, leaving 'L' where a literal ended
-    val sb = new java.lang.StringBuilder(e.length)
-    var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < e.length) {
-      val ch = e.charAt(i)
-      if (inQ) {
-        if (ch == '\'') { inQ = false; sb.append('L') } else sb.append(' ')
-      } else ch match {
-        case '\'' => inQ = true; sb.append(' ')
-        case '(' => sb.append(if (depth == 0) '(' else ' '); depth += 1
-        case ')' => depth -= 1; sb.append(if (depth == 0) ')' else ' ')
-        case _ => sb.append(if (depth == 0) ch else ' ')
-      }
-      i += 1
-    }
-    val m = sb.toString
+    val l = new Lexed(e)
     var concat = false
     var other = false
-    def lastSig(j: Int): Int = {
-      var k = j - 1
-      while (k >= 0 && m.charAt(k) == ' ') k -= 1
-      k
+    var prev = -1 // the previous top-level token
+    for (i <- 0 until l.n if l.toks(i).kind != ' ' &&
+        (l.depth(i) == 0 || (l.depth(i) == 1 && l.is(i, ')')))) {
+      if (l.is(i, '|')) {
+        if (l.is(i + 1, '|')) concat = true
+        else if (!l.is(i - 1, '|')) other = true // single | is bitwise-or: numeric
+      } else if (l.toks(i).kind == 'p' && "*/%<>=!&~".contains(l.text(i))) other = true
+      else if ((l.is(i, '+') || l.is(i, '-')) && prev >= 0 &&
+          (l.toks(prev).kind != 'p' || l.is(prev, ')'))) other = true
+      else if (BoolOps(l.word(i))) other = true
+      prev = i
     }
-    i = 0
-    while (i < m.length) {
-      m.charAt(i) match {
-        case '|' =>
-          if (i + 1 < m.length && m.charAt(i + 1) == '|') { concat = true; i += 1 }
-          else other = true // single | is bitwise-or: numeric
-        case '*' | '/' | '%' | '<' | '>' | '=' | '!' | '&' | '~' => other = true
-        case '+' | '-' =>
-          val p = lastSig(i)
-          val binary = p >= 0 && {
-            val pc = m.charAt(p)
-            pc.isLetterOrDigit || pc == ')' || pc == '_'
-          }
-          val expSign = p >= 1 && (m.charAt(p) == 'e' || m.charAt(p) == 'E') &&
-            (m.charAt(p - 1).isDigit || m.charAt(p - 1) == '.') &&
-            i + 1 < m.length && m.charAt(i + 1).isDigit
-          if (binary && !expSign) other = true
-        case _ =>
-      }
-      i += 1
-    }
-    concat && !other &&
-      "(?i)\\b(and|or|not|in|like|glob|regexp|match|is|between)\\b".r
-        .findFirstIn(m).isEmpty
+    concat && !other
   }
 
+  /** True when keyset position `i` compares as TEXT: a plain (or
+    * COLLATE'd) column whose declared affinity is TEXT, or an
+    * expression key whose top-level function PRODUCES text storage —
+    * sqlite's lower()/upper()/substr()/… always return TEXT, so an
+    * index on lower(c) holds TEXT keys and '100' vs '100.0' are
+    * DISTINCT (round-10 fuzz seed 7651: the value-class collapse
+    * merged them and rejected an insert sqlite3 accepts). Other
+    * expression keys keep value-class comparison (arithmetic results
+    * are numeric storage). */
   private def keyTextAffinity(schema: StructType, ks: KeySpec, i: Int): Boolean =
     (ks.display.nonEmpty && ks.display.size == ks.exprs.size &&
       schema.fields.find(_.name.equalsIgnoreCase(ks.display(i)))
@@ -3292,9 +3179,10 @@ object ScriptDdl {
     * `varchar(20)` and `double precision` survive verbatim), then the
     * constraint surface sqlite3 reports through table_info. */
   private def parseColDef(d: String): ColDef = {
-    val parts = d.split("\\s+", 2)
-    val name = stripQuotes(parts.head)
-    val rest = parts.lift(1).getOrElse("")
+    val l = new Lexed(d)
+    val f = l.sig(0)
+    val name = if (f < l.n) unquote(l.text(f)) else ""
+    val rest = l.render(f + 1, l.n)
     val constraintStart = Set("primary", "not", "null", "unique", "check",
       "default", "references", "collate", "generated", "as", "constraint")
     val typeTokens = rest.split("\\s+").toSeq.filter(_.nonEmpty)
@@ -3312,30 +3200,17 @@ object ScriptDdl {
         Affinity.hasAffinity(typeTokens.mkString(" ")))))
   }
 
-  /** The DEFAULT clause's value text: a quoted string ('' escapes), a
-    * balanced parenthesized group, or one token — whatever trailing
-    * constraints (`DEFAULT 5 NOT NULL`) follow are not part of it. */
+  /** The DEFAULT clause's value text: a balanced parenthesized group,
+    * else the first run of tokens with no space between them (`'a b'`,
+    * `-5`, `1e+5`) — trailing constraints (`DEFAULT 5 NOT NULL`) are
+    * not part of it. */
   private def firstDefaultValue(text: String): String = {
-    val t = text.trim
-    if (t.startsWith("'")) {
-      var i = 1
-      while (i < t.length) {
-        if (t.charAt(i) == '\'') {
-          if (i + 1 < t.length && t.charAt(i + 1) == '\'') i += 2
-          else return t.substring(0, i + 1)
-        } else i += 1
-      }
-      t
-    } else if (t.startsWith("(")) {
-      var depth = 0
-      var i = 0
-      while (i < t.length) {
-        if (t.charAt(i) == '(') depth += 1
-        else if (t.charAt(i) == ')') { depth -= 1; if (depth == 0) return t.substring(0, i + 1) }
-        i += 1
-      }
-      t
-    } else t.split("\\s+").head
+    val l = new Lexed(text)
+    val f = l.sig(0)
+    val end =
+      if (l.is(f, '(') && l.close(f) > 0) l.close(f) + 1
+      else (f until l.n).find(j => l.toks(j).kind == ' ').getOrElse(l.n)
+    l.render(f, end)
   }
 
   /** Parse an ADD COLUMN / column-def DEFAULT as a constant literal,
@@ -3385,44 +3260,22 @@ object ScriptDdl {
   }
 
   /** Split `s` at the first top-level occurrence of a keyword phrase
-    * (words separated by whitespace) — outside quotes and parentheses,
-    * on word boundaries — so a `'where'` string literal, a subquery's
-    * WHERE, or a column named `returning` inside parens never splits.
-    * Returns (before, Some(after-the-phrase)) or (s, None). */
+    * (words separated by whitespace or comments) — outside quotes and
+    * parentheses — so a `'where'` string literal, a subquery's WHERE,
+    * or a column named `returning` inside parens never splits.
+    * Returns (before, Some(after-the-phrase)) or (s, None), comments
+    * rendered as spaces. */
   private def splitAtTopLevelKeyword(s: String, phrase: String): (String, Option[String]) = {
     val words = phrase.split(" ")
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0; i += 1 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case _ if depth == 0 && Character.isLetter(c) &&
-            (i == 0 || !isWordChar(s.charAt(i - 1))) =>
-          var j = i
-          var ok = true
-          for ((w, wi) <- words.zipWithIndex if ok) {
-            if (wi > 0) {
-              val start = j
-              while (j < s.length && Character.isWhitespace(s.charAt(j))) j += 1
-              if (j == start) ok = false
-            }
-            if (ok && j + w.length <= s.length &&
-                s.regionMatches(true, j, w, 0, w.length)) j += w.length
-            else ok = false
-          }
-          if (ok && (j == s.length || !isWordChar(s.charAt(j))))
-            return (s.substring(0, i), Some(s.substring(j)))
-          i += 1
-        case _ => i += 1
-      }
+    val l = new Lexed(s)
+    // index after the phrase starting at token i, or -1
+    def phraseEnd(i: Int): Int = words.foldLeft(i) { (j, w) =>
+      if (j >= 0 && l.word(l.sig(j)) == w) l.sig(j) + 1 else -1
     }
-    (s, None)
+    (0 until l.n).find(i => l.depth(i) == 0 && l.word(i) == words.head && phraseEnd(i) > 0) match {
+      case Some(i) => (l.render(0, i), Some(l.render(phraseEnd(i), l.n)))
+      case None => (l.render(0, l.n), None)
+    }
   }
 
   /** Split an UPDATE tail `SET-list [WHERE cond]` at the first
@@ -3442,7 +3295,7 @@ object ScriptDdl {
 
   private def parseUpsert(clause: String): UpsertSpec = clause match {
     case UpsertClause(cols, action, setTail) =>
-      val target = Option(cols).map(_.split(",").map(s => stripQuotes(s.trim)).toSeq)
+      val target = Option(cols).map(nameList)
       if (setTail == null) UpsertSpec(target, None)
       else {
         val (setC, w) = splitAtTopLevelWhere(setTail)
@@ -3453,58 +3306,39 @@ object ScriptDdl {
 
   /** Rewrite `excluded.col` references (the UPSERT proposed-row
     * pseudo-table, SQLite dialect) to the prefixed column names the
-    * upsert join exposes the batch row under. Quote-aware: an
-    * `'excluded.x'` string literal is untouched. */
+    * upsert join exposes the batch row under. An `'excluded.x'`
+    * string literal is untouched. */
   private def rewriteExcluded(s: String): String = {
-    val out = new StringBuilder
-    val Ref = """(?is)^excluded\s*\.\s*([A-Za-z_]\w*|"[^"]+"|`[^`]+`)""".r
-    var quote: Char = 0
-    var i = 0
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { out.append(c); if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"' || c == '`') { quote = c; out.append(c); i += 1 }
-      else if ((c == 'e' || c == 'E') && (i == 0 || !isWordChar(s.charAt(i - 1)))) {
-        Ref.findFirstMatchIn(s.substring(i)) match {
-          case Some(m) =>
-            out.append(s"`$ExcPrefix${stripQuotes(m.group(1))}`")
-            i += m.end
-          case None => out.append(c); i += 1
-        }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
+    val l = new Lexed(s)
+    l.rewrite(i => qualifiedRef(l, i, Set("excluded"))
+      .map { case (_, c, next) => (s"`$ExcPrefix$c`", next) })
+  }
+
+  /** A `qual.name` reference starting at token `i` whose qualifier is
+    * one of `quals`: (qualifier, unquoted name, index after it). */
+  private def qualifiedRef(l: Lexed, i: Int,
+      quals: Set[String]): Option[(String, String, Int)] = {
+    val dot = l.sig(i + 1)
+    val name = l.sig(dot + 1)
+    if (quals(l.word(i)) && l.is(dot, '.') && l.isName(name))
+      Some((l.word(i), unquote(l.text(name)), name + 1))
+    else None
   }
 
   /** Column-name prefix the upsert join exposes the proposed
     * (`excluded`) row's values under. */
   private val ExcPrefix = "__gr_exc_"
 
-  /** Rewrite bare `rowid` / `_rowid_` / `oid` tokens to the table's
+  /** Rewrite bare `rowid` / `_rowid_` / `oid` words to the table's
     * INTEGER PRIMARY KEY alias column (SQLite exposes the alias both
-    * ways; RETURNING clauses commonly use `rowid`). Quote-aware and
-    * boundary-checked; qualified references (`t.rowid`) also map. */
+    * ways; RETURNING clauses commonly use `rowid`). Qualified
+    * references (`t.rowid`) also map; quoted names do not. */
   private def rewriteRowidTokens(s: String, alias: String): String = {
-    val out = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    val names = Seq("_rowid_", "rowid", "oid")
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { out.append(c); if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"' || c == '`') { quote = c; out.append(c); i += 1 }
-      else if ((Character.isLetter(c) || c == '_') && (i == 0 || !isWordChar(s.charAt(i - 1)))) {
-        names.find(n => s.regionMatches(true, i, n, 0, n.length) &&
-            (i + n.length == s.length || !isWordChar(s.charAt(i + n.length)))) match {
-          case Some(n) => out.append(s"`$alias`"); i += n.length
-          case None => out.append(c); i += 1
-        }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
+    val l = new Lexed(s)
+    l.rewrite(i => if (RowidNames(l.word(i))) Some((s"`$alias`", i + 1)) else None)
   }
+
+  private val RowidNames = Set("_rowid_", "rowid", "oid")
 
   /** Evaluate a RETURNING clause over the affected-row set. Each item
     * is `*` (all table columns) or an expression with an optional
@@ -3533,55 +3367,37 @@ object ScriptDdl {
     rows.select(cols.toIndexedSeq: _*)
   }
 
-  private val Assignment = """(?s)\s*[`"]?(\w+)[`"]?\s*=(.+)""".r
-
-  private def parseAssignment(a: String): (String, String) = a match {
-    case Assignment(name, expr) => (name, expr)
-    case other => throw new IllegalArgumentException(
-      s"""cannot parse SET assignment near "${other.trim.take(40)}"""")
+  /** One SET assignment `col = expr`; the column may be quoted. */
+  private def parseAssignment(a: String): (String, String) = {
+    val l = new Lexed(a)
+    val c = l.sig(0)
+    val eq = l.sig(c + 1)
+    if (l.isName(c) && l.is(eq, '=') && l.sig(eq + 1) < l.n)
+      (unquote(l.text(c)), l.render(eq + 1, l.n))
+    else throw new IllegalArgumentException(
+      s"""cannot parse SET assignment near "${a.trim.take(40)}"""")
   }
 
-  /** Split on commas outside parentheses and quotes. */
   /** `rest` = the text following an already-consumed "(": returns
-    * (inside, after) split at the BALANCING close paren, quote-aware
-    * — nested calls like (lower(a)) stay whole. */
+    * (inside, after) split at the BALANCING close paren — nested
+    * calls like (lower(a)) stay whole. */
   private def splitBalanced(rest: String): (String, String) = {
-    var depth = 1
-    var i = 0
-    var quote: Char = 0
-    while (i < rest.length) {
-      val c = rest.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0)
-            return (rest.substring(0, i), rest.substring(i + 1).trim)
-        case _ => ()
-      }
-      i += 1
+    val l = new Lexed(rest)
+    (0 until l.n).find(i => l.depth(i) == 0 && l.is(i, ')')) match {
+      case Some(i) => (l.render(0, i), l.render(i + 1, l.n).trim)
+      case None => throw new IllegalArgumentException("""near "(": syntax error""")
     }
-    throw new IllegalArgumentException("""near "(": syntax error""")
   }
 
+  /** Split on top-level commas (outside parentheses, quotes and
+    * comments); comments come back as spaces. */
   private def splitTopLevel(s: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val sb = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    for (c <- s) {
-      if (quote != 0) { sb.append(c); if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c; sb.append(c)
-        case '(' => depth += 1; sb.append(c)
-        case ')' => depth -= 1; sb.append(c)
-        case ',' if depth == 0 => out += sb.toString; sb.clear()
-        case _ => sb.append(c)
-      }
-    }
-    if (sb.nonEmpty) out += sb.toString
-    out.result()
+    val l = new Lexed(s)
+    val cuts = (0 until l.n).filter(i => l.depth(i) == 0 && l.is(i, ','))
+    val parts = (-1 +: cuts :+ l.n).sliding(2).map(p => l.render(p(0) + 1, p(1))).toSeq
+    if (parts.last.isEmpty) parts.init else parts
   }
+
+  /** A parenthesized name list's inside (`a, "b", [c]`) as names. */
+  private def nameList(text: String): Seq[String] = splitTopLevel(text).map(unquote)
 }

@@ -14,83 +14,47 @@ import graft.sources.Affinity
   */
 object ScriptRunner {
 
-  private val TriggerStartRe =
-    """(?is)\s*create\s+(?:temp(?:orary)?\s+)?trigger\b.*""".r
-
-  /** Split a script on top-level `;` — quote-, comment- and
-    * CREATE TRIGGER-aware. A trigger's BEGIN…END body carries
-    * `;`-terminated statements, so splitting resumes only once the
-    * body's END closes (each CASE/BEGIN opens one END). The
-    * CASE/BEGIN/END tokens are counted INCREMENTALLY inside the
-    * quote/comment state machine — only while in normal state — so
-    * keyword-shaped text inside string literals or comments never
-    * opens or closes a body (round-8 advice: `… THEN 'end' … END;`
-    * must not split the trigger at the first `;`). */
+  /** Split a script into statements on top-level `;` tokens of
+    * [[SqliteOperators.tokenize]], so quoted text and comments never
+    * split. Each statement spans its first to its last non-comment
+    * token; a comment-only stretch is no statement. A CREATE
+    * TRIGGER's BEGIN…END body carries `;`-terminated statements, so
+    * inside one splitting resumes only once the body's END closes
+    * (each CASE/BEGIN word opens one END; words inside literals or
+    * comments are not words, so `… THEN 'end' … END;` stays whole). */
   def splitStatements(script: String): Seq[String] = {
+    val l = new SqliteOperators.Lexed(script)
     val out = Vector.newBuilder[String]
-    val sb = new StringBuilder
-    var i = 0
-    val n = script.length
-    var state: Char = ' ' // ' '=normal, '\''=single, '"'=double, '`'=backtick, '-'=line comment, '*'=block comment
-    var commentStart = -1 // index of the '/' that opened a block comment
-    // trigger-body tracking, reset whenever the statement buffer clears
-    var opens = 0 // CASE/BEGIN tokens seen in normal state
-    var ends = 0 // END tokens seen in normal state
-    var lastIsEnd = false // buffer's most recent token (word, literal or punct) is END
-    val word = new StringBuilder
-    def flushWord(): Unit = if (word.nonEmpty) {
-      val t = word.toString.toLowerCase
-      if (t == "case" || t == "begin") { opens += 1; lastIsEnd = false }
-      else if (t == "end") { ends += 1; lastIsEnd = true }
-      else lastIsEnd = false
-      word.clear()
+    var first = -1 // the statement's first and last non-comment token
+    var last = -1
+    var opens = 0 // CASE/BEGIN words in the statement
+    var ends = 0 // END words in the statement
+    def isTrigger = first >= 0 && l.word(first) == "create" && {
+      val w1 = l.sig(first + 1)
+      l.word(w1) == "trigger" ||
+        (Set("temp", "temporary")(l.word(w1)) && l.word(l.sig(w1 + 1)) == "trigger")
     }
-    // the `;` closes a CREATE TRIGGER statement only when the body's
-    // BEGIN (plus any CASEs) is balanced by ENDs and the last real
-    // token is that closing END
-    def openTrigger: Boolean =
-      !(lastIsEnd && ends >= opens) && TriggerStartRe.matches(sb.toString)
-    while (i < n) {
-      val c = script.charAt(i)
-      state match {
-        case ' ' =>
-          if (c == ';') {
-            flushWord()
-            if (openTrigger) { sb.append(c); lastIsEnd = false }
-            else {
-              out += sb.toString; sb.clear()
-              opens = 0; ends = 0; lastIsEnd = false
-            }
-          } else {
-            if (c.isLetterOrDigit || c == '_') word.append(c)
-            else flushWord()
-            if (c == '\'' || c == '"' || c == '`') { state = c; lastIsEnd = false }
-            else if (c == '-' && i + 1 < n && script.charAt(i + 1) == '-') state = '-'
-            else if (c == '/' && i + 1 < n && script.charAt(i + 1) == '*') { state = '*'; commentStart = i }
-            else if (!c.isWhitespace && !c.isLetterOrDigit && c != '_') lastIsEnd = false
-            sb.append(c)
-          }
-        case '\'' | '"' | '`' =>
-          sb.append(c)
-          if (c == state) {
-            // doubled quote = escaped quote inside the literal
-            if (i + 1 < n && script.charAt(i + 1) == state) { sb.append(state); i += 1 }
-            else state = ' '
-          }
-        case '-' =>
-          sb.append(c)
-          if (c == '\n') state = ' '
-        case '*' =>
-          sb.append(c)
-          // the closing '*' must come after the opening "/*" — `/*/` does
-          // not terminate the comment it opens
-          if (c == '/' && script.charAt(i - 1) == '*' && i - 1 >= commentStart + 2) state = ' '
-        case _ =>
+    // inside a CREATE TRIGGER, `;` ends the statement only right after
+    // the END that balances the body's BEGIN (and any CASEs)
+    def bodyOpen = isTrigger && !(l.word(last) == "end" && ends >= opens)
+    def flush(): Unit = {
+      if (first >= 0) out += script.substring(l.toks(first).start, l.toks(last).end)
+      first = -1; opens = 0; ends = 0
+    }
+    for (i <- 0 until l.n if l.toks(i).kind != ' ') {
+      if (l.is(i, ';') && !bodyOpen) flush()
+      else {
+        if (first < 0) first = i
+        last = i
+        l.word(i) match {
+          case "case" | "begin" => opens += 1
+          case "end" => ends += 1
+          case _ =>
+        }
       }
-      i += 1
     }
-    if (sb.toString.trim.nonEmpty) out += sb.toString
-    out.result().filter(_.trim.nonEmpty)
+    flush()
+    out.result()
   }
 
   /** Render one result value the way the reference's Tcl/SQLite layer

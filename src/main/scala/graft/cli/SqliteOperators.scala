@@ -63,7 +63,12 @@ object SqliteOperators {
         while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_' || s.charAt(i) == '$')) i += 1
         out += Tok('w', start, i)
       } else if (c.isDigit) {
-        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '.')) i += 1
+        // an exponent's sign belongs to the number (1e+5, 2.5E-3);
+        // hex literals have no exponent (0x1E+1 is 0x1E plus 1)
+        def expSign(j: Int) = (s.charAt(j) == '+' || s.charAt(j) == '-') &&
+          (s.charAt(j - 1) == 'e' || s.charAt(j - 1) == 'E') &&
+          j + 1 < n && s.charAt(j + 1).isDigit && !s.regionMatches(true, start, "0x", 0, 2)
+        while (i < n && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '.' || expSign(i))) i += 1
         out += Tok('n', start, i)
       } else {
         i += 1
@@ -73,13 +78,82 @@ object SqliteOperators {
     out.result()
   }
 
+  /** The text of an identifier or string token without its quotes:
+    * `'…'`, `"…"` and `` `…` `` undouble their quote character, `[…]`
+    * has no escape. Anything else comes back trimmed. */
+  private[cli] def unquote(s: String): String = {
+    val t = s.trim
+    if (t.length < 2) t
+    else if (t.head == '[' && t.last == ']') t.substring(1, t.length - 1)
+    else if ("'\"`".indexOf(t.head) >= 0 && t.last == t.head)
+      t.substring(1, t.length - 1).replace(s"${t.head}${t.head}", t.head.toString)
+    else t
+  }
+
+  /** Script text lexed once by [[tokenize]], for the dialect helpers
+    * that split or rewrite statement text: comments are whitespace,
+    * quoted text is one opaque token, and `depth(i)` is the paren
+    * depth before token `i`. */
+  private[cli] final class Lexed(val s: String) {
+    val toks: Vector[Tok] = tokenize(s)
+    def n: Int = toks.length
+    lazy val depth: Array[Int] = toks.scanLeft(0)((d, t) =>
+      if (t.kind != 'p') d else s.charAt(t.start) match {
+        case '(' => d + 1
+        case ')' => d - 1
+        case _ => d
+      }).toArray
+    def text(i: Int): String = s.substring(toks(i).start, toks(i).end)
+    private def kind(i: Int): Char = if (i >= 0 && i < n) toks(i).kind else 0
+    def is(i: Int, p: Char): Boolean = kind(i) == 'p' && s.charAt(toks(i).start) == p
+    /** Lower-cased text of a word token, "" for any other token. */
+    def word(i: Int): String = if (kind(i) == 'w') text(i).toLowerCase else ""
+    def isName(i: Int): Boolean = kind(i) == 'w' || kind(i) == 'q'
+    /** Index of the first non-whitespace token at or after `i` (`n` if none). */
+    def sig(i: Int): Int = { var k = i; while (k < n && toks(k).kind == ' ') k += 1; k }
+    /** Index of the last non-whitespace token (-1 if none). */
+    def lastSig: Int = toks.lastIndexWhere(_.kind != ' ')
+    /** The `)` matching the `(` at `open`, or -1. */
+    def close(open: Int): Int =
+      (open + 1 until n).find(j => is(j, ')') && depth(j) == depth(open) + 1).getOrElse(-1)
+    /** Text of tokens [a, b), each comment rendered as one space. */
+    def render(a: Int, b: Int): String = {
+      val sb = new StringBuilder
+      for (i <- a until b) {
+        val t = toks(i)
+        if (t.kind == ' ' && !s.charAt(t.start).isWhitespace) sb += ' '
+        else sb ++= s.substring(t.start, t.end)
+      }
+      sb.toString
+    }
+    /** Re-render token by token; `at(i)` may replace the tokens from `i`
+      * up to a returned end index with new text. */
+    def rewrite(at: Int => Option[(String, Int)]): String = {
+      val sb = new StringBuilder
+      var i = 0
+      while (i < n) at(i) match {
+        case Some((rep, next)) => sb ++= rep; i = next
+        case None => sb ++= render(i, i + 1); i += 1
+      }
+      sb.toString
+    }
+  }
+
   /** Rewrites every operator-form GLOB/REGEXP in `sql`; returns the
     * input unchanged when none occur. */
   def rewrite(sql: String): String = {
-    val toks = tokenize(sql)
+    val l = new Lexed(sql)
+    val toks = l.toks
     def text(t: Tok) = sql.substring(t.start, t.end)
     def prevIdx(j: Int): Int = { var k = j - 1; while (k >= 0 && toks(k).kind == ' ') k -= 1; k }
     def nextIdx(j: Int): Int = { var k = j + 1; while (k < toks.length && toks(k).kind == ' ') k += 1; k }
+    // SQLite's `EXPLAIN QUERY PLAN stmt` answers with Spark's
+    // formatted plan (SQLite's own plan rows have no Spark twin)
+    val e = l.sig(0)
+    val q = l.sig(e + 1)
+    val p = l.sig(q + 1)
+    if (l.word(e) == "explain" && l.word(q) == "query" && l.word(p) == "plan")
+      return rewrite(sql.substring(0, toks(q).start) + "FORMATTED" + sql.substring(toks(p).end))
     def isOperand(t: Tok): Boolean = t.kind match {
       case 'w' => !Keywords.contains(text(t).toLowerCase)
       case 's' | 'q' | 'n' => true

@@ -2167,6 +2167,82 @@ class CliSpec extends SparkSpec {
         "insert into t10 values (7); select v from l10") == (0, "7\n"))
   }
 
+  /** Runs `body` with the named script tables absent before and after. */
+  private def freshTables(names: String*)(body: => Unit): Unit = {
+    names.foreach(spark.catalog.dropTempView)
+    try body finally names.foreach(spark.catalog.dropTempView)
+  }
+
+  private val grid = "1 2 3\n4 5 6\n7 8 0\n"
+
+  test("a comment holding WHERE inside an UPDATE SET list (sqlite3-pinned)") {
+    assert(sqawk("update a set a2 = 9 /* where */ where anr = 1; select a2 from a",
+      tempFile(grid)) == (0, "9\n5\n8\n"))
+  }
+
+  test("a comment holding a VALUES row (sqlite3-pinned)") {
+    freshTables("t") {
+      assert(sqawk("create table t(k, v); insert into t values (1, 'a') /* , (2, 'b') */; " +
+        "select count(*) from t", tempFile(grid)) == (0, "1\n"))
+    }
+  }
+
+  test("a comment inside a CREATE TABLE column list (sqlite3-pinned)") {
+    freshTables("t") {
+      assert(sqawk("create table t(k /* key, first */, v); insert into t values (1, 2); " +
+        "select * from t", tempFile(grid)) == (0, "1 2\n"))
+    }
+  }
+
+  test("a comment inside a RETURNING list (sqlite3-pinned)") {
+    freshTables("u") {
+      assert(sqawk("create table u(k integer primary key, v); " +
+        "insert into u values (1, 'x') returning k /* , v */", tempFile(grid)) == (0, "1\n"))
+    }
+  }
+
+  test("a bracket-quoted name in an INSERT column list (sqlite3-pinned)") {
+    freshTables("t") {
+      assert(sqawk("create table t(k, v); insert into t ([k], v) values (1, 2); " +
+        "select k, v from t", tempFile(grid)) == (0, "1 2\n"))
+    }
+  }
+
+  test("comments around statements and quoted SET targets (sqlite3-pinned)") {
+    freshTables("t") {
+      // a comment before a statement's first word, and a trailing
+      // comment with no statement after it
+      assert(sqawk("select 1; -- note\ncreate table t(k, v); insert into t values (1, 2); " +
+        "select * from t", tempFile(grid)) == (0, "1\n1 2\n"))
+      assert(sqawk("select a1 from a; -- trailing comment", tempFile(grid)) ==
+        (0, "1\n4\n7\n"))
+    }
+    freshTables("t") {
+      assert(sqawk("create table t(a, b); insert into t values (1, 2); " +
+        "update t set [a] = 5 -- c\n; select * from t", tempFile(grid)) == (0, "5 2\n"))
+    }
+  }
+
+  test("INSERT with a column list keeps untyped integers integer (sqlite3-pinned)") {
+    // sqlite3 prints 0|1|integer: the 1 bound to the untyped b stays
+    // an integer although the VALUES column also holds the real 0.5
+    freshTables("t") {
+      assert(sqawk("create table t(a, b); insert into t (a, b) values (-5, 0.5), (0, 1); " +
+        "select a, b, typeof(a) from t", tempFile(grid)) ==
+        (0, "-5 0.5 integer\n0 1 integer\n"))
+    }
+  }
+
+  test("EXPLAIN answers with the physical plan") {
+    val (c, o) = sqawk("explain select a1 from a where a2 > 1", tempFile(grid))
+    assert(c == 0 && o.contains("Physical Plan"))
+  }
+
+  test("EXPLAIN QUERY PLAN answers with the formatted plan") {
+    val (c, o) = sqawk("explain query plan select a1 from a where a2 > 1", tempFile(grid))
+    assert(c == 0 && o.contains("Physical Plan"))
+  }
+
   test("join across two files (examples/hp, README.md:454)") {
     val md5 = tempFile("d41d8cd98f00b204e9800998ecf8427e  foo\nc157a79031e1c40f85931829bc5fc552  bar\n")
     val du = tempFile("0\tfoo\n4096\tbar\n")

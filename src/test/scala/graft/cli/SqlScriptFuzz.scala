@@ -63,8 +63,16 @@ import org.apache.spark.sql.SparkSession
   * (UPDATE/INSERT on t1 from inside an AFTER trigger, VERDICT r13
   * #4).
   *
-  * Not generated (documented gaps / nondeterminism): RETURNING (row
-  * order is engine-private), group_concat (concatenation order),
+  * Comments: block comments holding `,`, `(`, `where`, `returning`
+  * or `;` sit at token boundaries inside VALUES rows, SET lists, DML
+  * WHERE conditions, the CREATE TABLE column list and RETURNING
+  * lists (never in a statement head), and a single-row INSERT may
+  * carry a RETURNING list. These draws come from a second Random
+  * seeded from the seed, so the statements are those the seed drew
+  * before comments existed.
+  *
+  * Not generated (documented gaps / nondeterminism): multi-row
+  * RETURNING (row order is engine-private), group_concat (concatenation order),
   * random(), typeof() around arithmetic results, and numeric-looking
   * text in no-affinity value positions (the engine's one documented
   * value-provenance deviation). The alog audit table carries an
@@ -220,9 +228,27 @@ object SqlScriptFuzz {
       case _ => safeTextLits(rnd.nextInt(safeTextLits.size))
     }
 
+  /** Block-comment bodies: each holds text that would cut or end a
+    * clause if it were read as SQL instead of as a comment. */
+  private val commentBodies =
+    Vector(",", "(", "where", "returning", ";", ", (2, 'b')", "x) where (")
+
+  /** `s` with a block comment after some of its spaces. Generated
+    * literals hold no space, so every space is a token boundary. */
+  private def commented(cmt: Random, s: String): String =
+    s.split(" ", -1).reduceLeft { (acc, next) =>
+      if (cmt.nextInt(4) == 0)
+        s"$acc /* ${commentBodies(cmt.nextInt(commentBodies.size))} */ $next"
+      else s"$acc $next"
+    }
+
   /** Generate one deterministic script for a seed. */
   def genScript(seed: Long): String = {
     val rnd = new Random(seed)
+    // comment placement draws from its own stream, so `rnd` yields
+    // the same statements as a generator without comments
+    val cmt = new Random(seed ^ 0x5c0ffeeL)
+    def cm(s: String): String = commented(cmt, s)
     val stmts = Vector.newBuilder[String]
 
     // --- CREATE TABLE t1 -------------------------------------------
@@ -250,7 +276,7 @@ object SqlScriptFuzz {
       if (pkIdx.isEmpty && rnd.nextInt(5) == 0)
         s", UNIQUE (${cols(1 + rnd.nextInt(cols.size - 1)).name})"
       else ""
-    stmts += s"CREATE TABLE t1 (${colDefs.mkString(", ")}$tableConstraint)"
+    stmts += s"CREATE TABLE t1 (${cm(colDefs.mkString(", ") + tableConstraint)})"
 
     // --- initial INSERTs -------------------------------------------
     val nIns = 2 + rnd.nextInt(3)
@@ -265,12 +291,12 @@ object SqlScriptFuzz {
         val subset = rnd.shuffle(cols).take(2 + rnd.nextInt(cols.size - 1))
         val vals = subset.map(c => valueFor(rnd, c))
         stmts += s"INSERT ${conflict}INTO t1 (${subset.map(_.name).mkString(", ")}) " +
-          s"VALUES (${vals.mkString(", ")})"
+          s"VALUES (${cm(vals.mkString(", "))})"
       } else {
         val nRows = 1 + rnd.nextInt(3)
         val rows = Seq.fill(nRows)(
           s"(${cols.map(c => valueFor(rnd, c)).mkString(", ")})")
-        stmts += s"INSERT ${conflict}INTO t1 VALUES ${rows.mkString(", ")}"
+        stmts += s"INSERT ${conflict}INTO t1 VALUES ${cm(rows.mkString(", "))}"
       }
     }
 
@@ -388,22 +414,27 @@ object SqlScriptFuzz {
         val target = cols(rnd.nextInt(cols.size))
         val rhs = if (target.decl.isEmpty) numExpr(rnd, cols)
                   else expr(rnd, cols)
-        stmts += s"UPDATE t1 SET ${target.name} = $rhs " +
-          s"WHERE ${pred(rnd, cols)}"
+        stmts += s"UPDATE t1 SET ${cm(s"${target.name} = $rhs")} " +
+          s"WHERE ${cm(pred(rnd, cols))}"
       case 2 =>
-        stmts += s"DELETE FROM t1 WHERE ${pred(rnd, cols)}"
+        stmts += s"DELETE FROM t1 WHERE ${cm(pred(rnd, cols))}"
       case 3 if pkIdx.isDefined || indexed.isDefined =>
         val key = indexed.getOrElse(cols(pkIdx.get).name)
         val other = cols.find(_.name != key).getOrElse(cols.head)
         val vals = cols.map(c => valueFor(rnd, c))
         val action =
           if (rnd.nextBoolean()) "DO NOTHING"
-          else s"DO UPDATE SET ${other.name} = excluded.${other.name}"
-        stmts += s"INSERT INTO t1 VALUES (${vals.mkString(", ")}) " +
+          else s"DO UPDATE SET ${cm(s"${other.name} = excluded.${other.name}")}"
+        stmts += s"INSERT INTO t1 VALUES (${cm(vals.mkString(", "))}) " +
           s"ON CONFLICT ($key) $action"
       case _ =>
         val vals = cols.map(c => valueFor(rnd, c))
-        stmts += s"INSERT INTO t1 VALUES (${vals.mkString(", ")})"
+        // a single-row insert may report its row: one row, so the
+        // RETURNING order question does not arise
+        val ret =
+          if (cmt.nextInt(3) == 0) s" RETURNING ${cm(cols.take(2).map(_.name).mkString(", "))}"
+          else ""
+        stmts += s"INSERT INTO t1 VALUES (${cm(vals.mkString(", "))})$ret"
     }
     if (inTx) {
       rnd.nextInt(3) match {
@@ -646,7 +677,7 @@ object SqlScriptFuzz {
         stmts += s"SELECT ${dNames.mkString(", ")} FROM t1 " +
           s"ORDER BY $k$mod, $ords LIMIT ${1 + rnd.nextInt(4)}$off"
       case _ =>
-        stmts += s"SELECT count(*) FROM t1 WHERE ${pred(rnd, cols)}"
+        stmts += s"SELECT count(*) FROM t1 WHERE ${cm(pred(rnd, cols))}"
     }
     if (hasTrigger) stmts += "SELECT id, v FROM alog ORDER BY id"
     if (hasViewTrigger) stmts += "SELECT w FROM vlog ORDER BY 1"

@@ -35,7 +35,12 @@ object Main {
       // other I/O errors (disk full, unreadable input) must report failure.
       case e: java.io.IOException if isBrokenPipe(e) => 0
       case e: Exception =>
-        System.err.println(s"error: ${Option(e.getMessage).getOrElse(e.toString)}")
+        // one line: Spark's analyzed-plan dump stays out of stderr
+        val m = e match {
+          case a: org.apache.spark.sql.AnalysisException => a.getSimpleMessage
+          case _ => Option(e.getMessage).getOrElse(e.toString)
+        }
+        System.err.println(s"error: ${m.linesIterator.find(_.trim.nonEmpty).getOrElse(e)}")
         1
     } finally {
       try out.flush() catch { case _: java.io.IOException => }

@@ -554,12 +554,11 @@ object ScriptDdl {
       // the dialect kernels (SqliteArithExpr, cast/affinity wrappers,
       // storage-class keys) each emit hundreds of bytes of Java
       case _ if e.getClass.getName.startsWith("graft.") => 320L
-      // the affinity/storage-class machinery is COMPOSED of standard
-      // regex/cast nodes, and those are the real byte hogs: a single
-      // RLike/RegExpReplace emits ~0.5 KB of generated Java (pattern
-      // refs, null checks, UTF8String plumbing). Weighing them like
-      // plain comparisons (24 B) underestimated the seed-140 DELETE
-      // chain 4x and let a 16 KB-estimated plan blow janino's 64 KB.
+      // the storage-class keys (AffinityOrdering) are COMPOSED of
+      // regex/cast nodes, the real byte hogs: one RLike/RegExpReplace
+      // emits ~0.5 KB of generated Java. Weighing them like plain
+      // comparisons (24 B) underestimated the seed-140 DELETE chain 4x
+      // and let a 16 KB-estimated plan blow janino's 64 KB.
       case _: RLike | _: RegExpReplace => 480L
       case _: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke => 128L
       case _: Cast => 96L
@@ -656,8 +655,10 @@ object ScriptDdl {
   /** [[execute]] with the RETURNING surface: `Handled(Some(df))` when
     * the DML statement carries a RETURNING clause whose rows the
     * caller must pump through the serializer (evaluated against the
-    * pre-rebind plan, so consuming them later is safe). */
-  def executeRows(spark: SparkSession, stmt: String, state: State = new State): Outcome = stmt match {
+    * pre-rebind plan, so consuming them later is safe). Clauses are
+    * read from [[Lexed.classified]] text; `sqlite_master` keeps `stmt`. */
+  def executeRows(spark: SparkSession, stmt: String, state: State = new State): Outcome =
+    new Lexed(stmt).classified match {
     case Begin() =>
       if (state.txnActive)
         throw new IllegalArgumentException("cannot start a transaction within a transaction")

@@ -126,6 +126,14 @@ object SqliteOperators {
       }
       sb.toString
     }
+    /** [[render]]ed text with each `[name]` spelled `` `name` ``, for
+      * statement classification; a bracket glued to the operand before
+      * it (`a[0]`, `f(x)[1]`) is a subscript and stays. */
+    def classified: String = rewrite { i =>
+      val glued = i > 0 && toks(i - 1).kind != ' ' && (toks(i - 1).kind != 'p' || is(i - 1, ')'))
+      if (toks(i).kind != 'q' || s.charAt(toks(i).start) != '[' || glued) None
+      else Some(("`" + unquote(text(i)).replace("`", "``") + "`", i + 1))
+    }
     /** Re-render token by token; `at(i)` may replace the tokens from `i`
       * up to a returned end index with new text. */
     def rewrite(at: Int => Option[(String, Int)]): String = {

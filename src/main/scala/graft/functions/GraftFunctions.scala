@@ -162,6 +162,8 @@ object GraftFunctions {
       Seq(ArrayType(DoubleType), ArrayType(DoubleType)))
     registerStatic(spark, "graft_kmr_emit", 3 to 3, KmrEmit.outType, "KmrEmit.emit",
       Seq(ArrayType(StringType), IntegerType, IntegerType), returnNullable = false)
+    registerStatic(spark, "graft_canonical", 2 to 2, StringType, "Canonical.canonical",
+      Seq(StringType, StringType), returnNullable = false)
 
     // Marker builder for AffinityValue (a custom expression cannot be
     // built through the public Column API; the registry can). Ingested

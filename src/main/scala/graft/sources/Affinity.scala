@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{call_function, lit}
 
 /** SQLite type-affinity emulation (SURVEY.md §1.3/§7.4).
   *
@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
   * We keep columns as StringType carrying the canonicalized rendering,
   * which preserves mixed-type columns exactly while letting Spark's
   * implicit string↔numeric coercion handle numeric WHERE clauses.
+  * [[canonicalize]] is the one statement of the rule: plans apply it
+  * through [[canonicalExpr]], a static call of that same function.
   */
 object Affinity {
 
@@ -79,60 +81,12 @@ object Affinity {
     }
   }
 
-  /** [[canonicalize]] as a native Catalyst expression chain, so the
-    * ingest projection stays inside whole-stage codegen — a per-value
-    * ScalaUDF here would break codegen and pay serialization on every
-    * field of every record, the dominant ingest cost at scale. Parity
-    * with the Scala version is pinned by ReadersSpec/CliSpec and the
-    * i13 oracle. */
+  /** [[canonicalize]] as a column: TEXT and BLOB keep the raw value,
+    * every other affinity is one call of the `graft_canonical` kernel
+    * (functions/Canonical), which whole-stage codegen calls directly. */
   def canonicalExpr(raw: Column, affinity: String): Column = affinity match {
     case "TEXT" | "BLOB" => raw
-    case "REAL" =>
-      when(isNumericExpr(raw), formatRealExpr(trimExpr(raw).try_cast("double")))
-        .otherwise(raw)
-    case _ => // INTEGER | NUMERIC
-      // try_cast throughout: ANSI-safe (overflowing int64 text and the
-      // non-numeric rows reaching the double branches yield null, never
-      // a runtime error).
-      val t = trimExpr(raw)
-      val d = t.try_cast("double")
-      when(t.rlike("^[+-]?[0-9]+$") && t.try_cast("long").isNotNull,
-          t.try_cast("long").cast("string"))
-        // The !rlike guard keeps int64-OVERFLOWING integer text (long
-        // cast above was null) out of the lossless-long branch: its
-        // double image can round exactly onto -2^63 and pass the
-        // round-trip check, but SQLite (and canonicalize) store it as
-        // REAL — e.g. '-9223372036854775809'.
-        .when(isNumericExpr(raw) && !t.rlike("^[+-]?[0-9]+$") &&
-            d === floor(d) &&
-            d.between(-9.223372036854776e18, 9.223372036854775e18) &&
-            d.cast("long").cast("double") === d,
-          d.cast("long").cast("string"))
-        .when(isNumericExpr(raw), formatRealExpr(d))
-        .otherwise(raw)
-  }
-
-  /** Java `String.trim` semantics (strips chars <= U+0020). */
-  private def trimExpr(c: Column): Column =
-    regexp_replace(c, "^[\\x00-\\x20]+|[\\x00-\\x20]+$", "")
-
-  private def isNumericExpr(c: Column): Column =
-    trimExpr(c).rlike("^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$")
-
-  /** [[formatReal]] as an expression — the same `%!.15g` contract via
-    * `format_string` (a Java formatter under the hood, so digits
-    * match the Scala path exactly) plus the trailing-zero strip.
-    * In the non-integral/1e15+ branch the mantissa always carries a
-    * '.', so the zero-strip regex never eats integer digits. */
-  private def formatRealExpr(d: Column): Column = {
-    val g = format_string("%.15g", d)
-    val stripped = regexp_replace(g, "0+(e[+-][0-9]+)?$", "$1")
-    val dotted = regexp_replace(stripped, "\\.(e|$)", ".0$1")
-    when(d === lit(Double.PositiveInfinity), "Inf")
-      .when(d === lit(Double.NegativeInfinity), "-Inf")
-      .when(d === floor(d) && abs(d) < 1e15,
-        concat(d.cast("long").cast("string"), lit(".0")))
-      .otherwise(dotted)
+    case _ => call_function("graft_canonical", raw, lit(affinity))
   }
 
   /** The double, if it is integral and round-trips through int64. */

@@ -32,9 +32,9 @@ final case class TableOptions(
   *    two-job shape as Spark's own `zipWithIndex`, with the max-nf
   *    aggregate and header `take(1)` piggybacked onto the first pass
   *    instead of running as extra jobs over a persisted copy;
-  *  - field values are canonicalized by [[Affinity.canonicalExpr]], a
-  *    native expression chain — the whole projection stays inside
-  *    whole-stage codegen (no per-value ScalaUDF);
+  *  - field values are canonicalized by [[Affinity.canonicalExpr]],
+  *    one static kernel call per field — the whole projection stays
+  *    inside whole-stage codegen (no per-value ScalaUDF);
   *  - the total row count rides along as column metadata on `<p>nr`
   *    so multi-file `table=` appends can renumber without running an
   *    aggregation job per appended file.

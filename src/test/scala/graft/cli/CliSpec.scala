@@ -1264,11 +1264,27 @@ class CliSpec extends SparkSpec {
       "9223372036854775808")
     import spark.implicits._
     val df = tricky.toDF("v")
-    for (aff <- Seq("INTEGER", "NUMERIC", "REAL", "TEXT", "BLOB")) {
-      val got = df.select(Affinity.canonicalExpr(col("v"), aff)).as[String].collect().toSeq
-      val want = tricky.map(v => Affinity.canonicalize(v, aff))
-      assert(got == want, s"affinity $aff")
+    def check(mode: String): Unit =
+      for (aff <- Seq("INTEGER", "NUMERIC", "REAL", "TEXT", "BLOB")) {
+        val got = df.select(Affinity.canonicalExpr(col("v"), aff)).as[String].collect().toSeq
+        val want = tricky.map(v => Affinity.canonicalize(v, aff))
+        assert(got == want, s"affinity $aff, $mode")
+      }
+    // the projection runs over the scan, not folded into a local
+    // relation at optimization time; first generated, then interpreted
+    def withConf(kv: (String, String)*)(body: => Unit): Unit = {
+      val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
+    val noFold = "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    withConf(noFold)(check("codegen"))
+    withConf(noFold, "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check("interpreted"))
   }
 
   // sqlite3-pinned: `sum()` raises "integer overflow" iff ALL inputs
@@ -2231,6 +2247,32 @@ class CliSpec extends SparkSpec {
         "select a, b, typeof(a) from t", tempFile(grid)) ==
         (0, "-5 0.5 integer\n0 1 integer\n"))
     }
+  }
+
+  test("a comment between statement head words (sqlite3-pinned)") {
+    freshTables("t") {
+      assert(sqawk("create table t(k, v); insert into t /* c */ values (1, 2); " +
+        "select * from t", tempFile(grid)) == (0, "1 2\n"))
+    }
+  }
+
+  test("a bracket-quoted table name in statement heads (sqlite3-pinned)") {
+    freshTables("t2") {
+      assert(sqawk("create table [t2](k, v); insert into [t2] values (1, 2); " +
+        "select * from t2", tempFile(grid)) == (0, "1 2\n"))
+    }
+  }
+
+  test("an error prints as one line, without the analyzed plan") {
+    val buf = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val code = try sqawk("select nosuch from a", tempFile(grid))._1
+      finally System.setErr(saved)
+    val lines = buf.toString("UTF-8").linesIterator.toSeq
+    assert(code == 1)
+    assert(lines.size == 1, lines.mkString("\n"))
+    assert(lines.head.startsWith("error: [UNRESOLVED_COLUMN"), lines.head)
   }
 
   test("EXPLAIN answers with the physical plan") {

@@ -66,10 +66,10 @@ import org.apache.spark.sql.SparkSession
   * Comments: block comments holding `,`, `(`, `where`, `returning`
   * or `;` sit at token boundaries inside VALUES rows, SET lists, DML
   * WHERE conditions, the CREATE TABLE column list and RETURNING
-  * lists (never in a statement head), and a single-row INSERT may
-  * carry a RETURNING list. These draws come from a second Random
-  * seeded from the seed, so the statements are those the seed drew
-  * before comments existed.
+  * lists, and between the head words of CREATE TABLE, INSERT, UPDATE
+  * and DELETE; a single-row INSERT may carry a RETURNING list. These
+  * draws come from a second Random seeded from the seed, so the
+  * statements are those the seed drew before comments existed.
   *
   * Not generated (documented gaps / nondeterminism): multi-row
   * RETURNING (row order is engine-private), group_concat (concatenation order),
@@ -276,7 +276,7 @@ object SqlScriptFuzz {
       if (pkIdx.isEmpty && rnd.nextInt(5) == 0)
         s", UNIQUE (${cols(1 + rnd.nextInt(cols.size - 1)).name})"
       else ""
-    stmts += s"CREATE TABLE t1 (${cm(colDefs.mkString(", ") + tableConstraint)})"
+    stmts += s"${cm("CREATE TABLE t1")} (${cm(colDefs.mkString(", ") + tableConstraint)})"
 
     // --- initial INSERTs -------------------------------------------
     val nIns = 2 + rnd.nextInt(3)
@@ -290,13 +290,13 @@ object SqlScriptFuzz {
         // column-list subset insert
         val subset = rnd.shuffle(cols).take(2 + rnd.nextInt(cols.size - 1))
         val vals = subset.map(c => valueFor(rnd, c))
-        stmts += s"INSERT ${conflict}INTO t1 (${subset.map(_.name).mkString(", ")}) " +
+        stmts += s"${cm(s"INSERT ${conflict}INTO t1")} (${subset.map(_.name).mkString(", ")}) " +
           s"VALUES (${cm(vals.mkString(", "))})"
       } else {
         val nRows = 1 + rnd.nextInt(3)
         val rows = Seq.fill(nRows)(
           s"(${cols.map(c => valueFor(rnd, c)).mkString(", ")})")
-        stmts += s"INSERT ${conflict}INTO t1 VALUES ${cm(rows.mkString(", "))}"
+        stmts += s"${cm(s"INSERT ${conflict}INTO t1")} VALUES ${cm(rows.mkString(", "))}"
       }
     }
 
@@ -414,10 +414,10 @@ object SqlScriptFuzz {
         val target = cols(rnd.nextInt(cols.size))
         val rhs = if (target.decl.isEmpty) numExpr(rnd, cols)
                   else expr(rnd, cols)
-        stmts += s"UPDATE t1 SET ${cm(s"${target.name} = $rhs")} " +
+        stmts += s"${cm("UPDATE t1 SET")} ${cm(s"${target.name} = $rhs")} " +
           s"WHERE ${cm(pred(rnd, cols))}"
       case 2 =>
-        stmts += s"DELETE FROM t1 WHERE ${cm(pred(rnd, cols))}"
+        stmts += s"${cm("DELETE FROM t1 WHERE")} ${cm(pred(rnd, cols))}"
       case 3 if pkIdx.isDefined || indexed.isDefined =>
         val key = indexed.getOrElse(cols(pkIdx.get).name)
         val other = cols.find(_.name != key).getOrElse(cols.head)
@@ -425,7 +425,7 @@ object SqlScriptFuzz {
         val action =
           if (rnd.nextBoolean()) "DO NOTHING"
           else s"DO UPDATE SET ${cm(s"${other.name} = excluded.${other.name}")}"
-        stmts += s"INSERT INTO t1 VALUES (${cm(vals.mkString(", "))}) " +
+        stmts += s"${cm("INSERT INTO t1")} VALUES (${cm(vals.mkString(", "))}) " +
           s"ON CONFLICT ($key) $action"
       case _ =>
         val vals = cols.map(c => valueFor(rnd, c))
@@ -434,7 +434,7 @@ object SqlScriptFuzz {
         val ret =
           if (cmt.nextInt(3) == 0) s" RETURNING ${cm(cols.take(2).map(_.name).mkString(", "))}"
           else ""
-        stmts += s"INSERT INTO t1 VALUES (${cm(vals.mkString(", "))})$ret"
+        stmts += s"${cm("INSERT INTO t1")} VALUES (${cm(vals.mkString(", "))})$ret"
     }
     if (inTx) {
       rnd.nextInt(3) match {

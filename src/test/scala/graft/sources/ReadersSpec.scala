@@ -99,6 +99,24 @@ class ReadersSpec extends SparkSpec {
     assert(Affinity.canonicalize("3", "REAL") == "3.0")
   }
 
+  test("a loaded table applies affinity as one kernel call per numeric column") {
+    import org.apache.spark.sql.catalyst.expressions.{RLike, RegExpReplace}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    // a2 is TEXT; the other nine fields are numeric-affinity columns
+    AwkReader.parse(spark, ds("001 a 2.50 x"), AwkOptions(),
+      TableOptions(nf = 10, datatypes = Seq("integer", "text", "real", "numeric")))
+      .createOrReplaceTempView("a")
+    try {
+      val exprs = spark.sql("select * from a").queryExecution.optimizedPlan
+        .flatMap(_.expressions).flatMap(_.collect { case e => e })
+      assert(!exprs.exists(e => e.isInstanceOf[RLike] || e.isInstanceOf[RegExpReplace]))
+      assert(exprs.count {
+        case si: StaticInvoke => si.functionName == "canonical"
+        case _ => false
+      } == 9)
+    } finally spark.catalog.dropTempView("a")
+  }
+
   test("awk MNF=expand grows columns for all rows") {
     val df = AwkReader.parse(spark, ds("A B", "A B C", "A B C D"),
       AwkOptions(), TableOptions(nf = 2, mnf = "expand"))

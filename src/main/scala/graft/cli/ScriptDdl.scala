@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.cli.SqliteOperators.{Lexed, unquote}
+import graft.functions.Canonical
 import graft.sources.Affinity
 
 /** DDL/DML statements of the script dialect (SURVEY.md §7.4 #6).
@@ -551,15 +552,9 @@ object ScriptDdl {
       case _: AttributeReference | _: Literal => 8L
       // a registered static call weighs its StaticInvoke child only
       case _: graft.functions.NamedStaticInvoke => 0L
-      // the dialect kernels (SqliteArithExpr, cast/affinity wrappers,
-      // storage-class keys) each emit hundreds of bytes of Java
+      // the dialect kernels (SqliteArithExpr, cast/affinity wrappers)
+      // each emit hundreds of bytes of Java
       case _ if e.getClass.getName.startsWith("graft.") => 320L
-      // the storage-class keys (AffinityOrdering) are COMPOSED of
-      // regex/cast nodes, the real byte hogs: one RLike/RegExpReplace
-      // emits ~0.5 KB of generated Java. Weighing them like plain
-      // comparisons (24 B) underestimated the seed-140 DELETE chain 4x
-      // and let a 16 KB-estimated plan blow janino's 64 KB.
-      case _: RLike | _: RegExpReplace => 480L
       case _: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke => 128L
       case _: Cast => 96L
       case _: CaseWhen => 64L
@@ -790,7 +785,7 @@ object ScriptDdl {
           else t)
         raw match {
           case Some(r) if Affinity.hasAffinity(cd.declType) == "TEXT" &&
-              r.matches("""[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?""") => r
+              Affinity.NumRe.matches(r) => r
           case _ => evaluated
         }
       }
@@ -1914,9 +1909,6 @@ object ScriptDdl {
   // triggers).
   // ------------------------------------------------------------------
 
-  private val TrigIntRe = """[+-]?\d+""".r
-  private val TrigNumRe = """[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?""".r
-
   /** Matching triggers, NEWEST-FIRST (sqlite3-pinned: two AFTER
     * INSERT triggers fire in reverse creation order for each row);
     * UPDATE OF lists match only when an assigned column is named;
@@ -1948,10 +1940,8 @@ object ScriptDdl {
       val aff = Affinity.hasAffinity(
         if (f.metadata.contains(Affinity.DeclKey))
           f.metadata.getString(Affinity.DeclKey) else "")
-      val t = s.trim
-      val numericStorage = aff != "TEXT" &&
-        (TrigIntRe.matches(t) || TrigNumRe.matches(t))
-      if (numericStorage) t else "'" + s.replace("'", "''") + "'"
+      if (aff != "TEXT" && Affinity.isNumeric(s)) s.trim
+      else "'" + s.replace("'", "''") + "'"
     }
 
   /** Substitute OLD.col / NEW.col references with the fired row's
@@ -2055,57 +2045,31 @@ object ScriptDdl {
     throw new IllegalArgumentException(s"UNIQUE constraint failed: $errText")
 
   /** Normalized key text for unique comparisons over an EVALUATED key
-    * column. With `textAffinity=false` (numeric/NONE storage), numeric
-    * text collapses to ONE canonical key per VALUE — SQLite indexes
-    * compare INTEGER and REAL storage numerically, so 100, 100.0 and
-    * 1e2 are one key. The canonical form is the EXACT int64 text when
-    * the value is an in-range integer (pure-integer text never routes
-    * through double: 9223372036854775806 and …807 are DISTINCT keys in
-    * sqlite3, round-8 advice), else Java `Double.toString` (which is
-    * also Spark's double→string cast, so driver and executor agree).
-    * With `textAffinity=true` the key compares verbatim: a
-    * TEXT-affinity column holds only TEXT storage, where '100' and
-    * '100.0' are distinct keys (sqlite3-pinned, round-8 advice). */
+    * column. With `textAffinity=false` (numeric/NONE storage) it is one
+    * call of the `graft_unique_key` kernel, [[Canonical.normNumText]]:
+    * numeric text collapses to ONE key per VALUE (round-7 fuzz seed
+    * 364: a unique index over {100, 100.0} fails in sqlite3), and
+    * integer text keeps its exact int64 text (round-8 advice). With
+    * `textAffinity=true` the key compares verbatim: a TEXT-affinity
+    * column holds only TEXT storage, where '100' and '100.0' are
+    * distinct keys (sqlite3-pinned, round-8 advice). */
   private def normKeyCol(c: org.apache.spark.sql.Column,
       textAffinity: Boolean): org.apache.spark.sql.Column = {
     val s = c.cast(StringType)
     if (textAffinity) s
-    else {
-      val li = s.cast("long")
-      val d = s.cast("double")
-      // integral double in [-2^63, 2^63): the long round-trip is exact
-      // (strict < excludes 2^63 itself, whose clamped long round-trips)
-      val longExact = d.cast("long").cast("double") === d &&
-        d < lit(9.223372036854775808e18)
-      when(s.rlike(UniqueIntRe) && li.isNotNull, li.cast(StringType))
-        .when(s.rlike(UniqueNumRe) && longExact, d.cast("long").cast(StringType))
-        .when(s.rlike(UniqueNumRe), d.cast(StringType))
-        .otherwise(s)
-    }
+    else org.apache.spark.sql.functions.call_function("graft_unique_key", s)
   }
 
-  /** Driver-side twin of [[normKeyCol]] (same canonical texts). */
+  /** Driver-side twin of [[normKeyCol]]: the same function. */
   private def normKeyVal(v: Any, textAffinity: Boolean): String = v match {
     case null => null
-    case s: String => if (textAffinity) s else normNumText(s)
+    case s: String => if (textAffinity) s else Canonical.normNumText(s)
     case u: org.apache.spark.unsafe.types.UTF8String =>
       normKeyVal(u.toString, textAffinity)
     case other =>
       val r = ScriptRunner.renderValue(other)
-      if (textAffinity) r else normNumText(r)
+      if (textAffinity) r else Canonical.normNumText(r)
   }
-
-  private def normNumText(s: String): String =
-    if (s.matches(UniqueIntRe))
-      try String.valueOf(java.lang.Long.parseLong(s))
-      catch { case _: NumberFormatException => normRealText(s.toDouble) }
-    else if (s.matches(UniqueNumRe)) normRealText(s.toDouble)
-    else s
-
-  private def normRealText(d: Double): String =
-    if (d.toLong.toDouble == d && d < 9.223372036854775808e18)
-      String.valueOf(d.toLong)
-    else String.valueOf(d)
 
   /** SQLite comparison affinity of a column, from the declared-type /
     * ordering-tag metadata ("NONE" when undeclared). */
@@ -2219,16 +2183,6 @@ object ScriptDdl {
     val dup = withCodegenPolicy(spark, probe)(probe.count()) > 0
     if (dup) uniqueErrText(ks.errText)
   }
-
-  /** Full-numeric text, as a regex (class-private twin of the
-    * affinity matcher): the gate for numeric-key collapse under
-    * non-TEXT affinity (round-7 fuzz seed 364: creating a unique
-    * index over {100, 100.0} fails in sqlite3). */
-  private val UniqueNumRe = "^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
-
-  /** Pure-integer text: normalized through the EXACT int64 value so
-    * keys beyond 2^53 stay distinct (round-8 advice). */
-  private val UniqueIntRe = "^[+-]?[0-9]+$"
 
   /** Numeric-equality key for a unique keyset column: string columns
     * normalize per the column's affinity ([[normKeyCol]] semantics);
@@ -2356,7 +2310,7 @@ object ScriptDdl {
         f.metadata.getString(Affinity.PkKey) == "rowid").map(_.name)
       for (rc <- rowid if isAssigned(rc))
         if (updated.where(col(s"`$rc`").isNull ||
-            !col(s"`$rc`").cast("string").rlike("^[+-]?\\d+$")).limit(1).count() > 0)
+            !col(s"`$rc`").cast("string").rlike(s"^${Affinity.IntRe}$$")).limit(1).count() > 0)
           throw new IllegalArgumentException("datatype mismatch")
       checkExistingUnique(updated, name, pkCols)
     }
@@ -3239,14 +3193,12 @@ object ScriptDdl {
     // one level of parens is allowed around the literal: DEFAULT (7)
     if (t.startsWith("(") && t.endsWith(")")) t = t.substring(1, t.length - 1).trim
     val StringLit = """(?s)'((?:[^']|'')*)'""".r
-    val NumberLit = """[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?""".r
-    val IntLit = """[-+]?\d+""".r
     t match {
       case StringLit(body) =>
         Some(Affinity.canonicalize(body.replace("''", "'"), affinity))
-      case s if NumberLit.matches(s) => affinity match {
+      case s if Affinity.NumRe.matches(s) => affinity match {
         case "TEXT" | "BLOB" => Some(Affinity.canonicalize(s,
-          if (IntLit.matches(s)) "NUMERIC" else "REAL"))
+          if (Affinity.IntRe.matches(s)) "NUMERIC" else "REAL"))
         case a => Some(Affinity.canonicalize(s, a))
       }
       case s if s.equalsIgnoreCase("null") => None

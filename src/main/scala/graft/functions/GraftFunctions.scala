@@ -164,6 +164,8 @@ object GraftFunctions {
       Seq(ArrayType(StringType), IntegerType, IntegerType), returnNullable = false)
     registerStatic(spark, "graft_canonical", 2 to 2, StringType, "Canonical.canonical",
       Seq(StringType, StringType), returnNullable = false)
+    registerStatic(spark, "graft_unique_key", 1 to 1, StringType, "Canonical.uniqueKey",
+      Seq(StringType), returnNullable = false)
 
     // Marker builder for AffinityValue (a custom expression cannot be
     // built through the public Column API; the registry can). Ingested

@@ -21,14 +21,11 @@ final case class SumAcc(
 
 object SqliteSum extends Aggregator[String, SumAcc, String] {
 
-  private val numPrefix =
-    """[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?""".r
-
   /** SQLite text→numeric coercion: longest numeric prefix, else 0.
     * Returns (value, isReal). */
   def coerce(v: String): (Double, Boolean, Option[Long]) = {
     val t = v.trim
-    numPrefix.findPrefixOf(t) match {
+    Affinity.NumRe.findPrefixOf(t) match {
       case Some(p) =>
         val isInt = p.forall(c => c.isDigit || c == '+' || c == '-')
         if (isInt)
@@ -39,8 +36,6 @@ object SqliteSum extends Aggregator[String, SumAcc, String] {
     }
   }
 
-  private val intFullRe = """[+-]?\d+""".r
-
   /** SQLite AGGREGATE text→numeric coercion (sum/total/avg), which
     * differs from ARITHMETIC's prefix rule: a string counts as
     * INTEGER only when the WHOLE trimmed text is an integer; a
@@ -50,7 +45,7 @@ object SqliteSum extends Aggregator[String, SumAcc, String] {
     * while '12abc' + 0 = 12 INTEGER. */
   def coerceFull(v: String): (Double, Boolean, Option[Long]) = {
     val t = v.trim
-    if (intFullRe.matches(t))
+    if (Affinity.IntRe.matches(t))
       try { val l = t.toLong; (l.toDouble, false, Some(l)) }
       catch { case _: NumberFormatException => (t.toDouble, true, None) }
     else (coerce(v)._1, true, None)

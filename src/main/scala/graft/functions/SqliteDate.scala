@@ -5,6 +5,8 @@ import java.time.format.DateTimeFormatter
 
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.Affinity
+
 /** SQLite date/time functions: `date`, `time`, `datetime`, `julianday`
   * and the `strftime` core, with the modifier list (SURVEY.md §2.2
   * "scalar: date"). Time values: ISO-8601 text (date, date+time,
@@ -34,16 +36,13 @@ object SqliteDate {
       math.floor(sec).toLong,
       math.round((sec - math.floor(sec)) * 1e9).toInt, ZoneOffset.UTC)
 
-  private def isNumeric(t: String): Boolean =
-    t.matches("[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)")
-
   /** Parse a SQLite time value: ISO text (date, date+time or bare
     * time), a julian day number, or 'now'. Returns UTC LocalDateTime. */
   def parse(v: String): Option[LocalDateTime] = {
     if (v == null) return None
     val t = v.trim
     try {
-      if (isNumeric(t)) {
+      if (Affinity.isNumeric(t)) {
         val jd = t.toDouble
         Some(fromEpochSeconds((jd - EpochJd) * SecondsPerDay))
       } else if (t.equalsIgnoreCase("now")) {
@@ -123,7 +122,7 @@ object SqliteDate {
     var rest = mods.map(_.trim.toLowerCase)
     val base: Option[LocalDateTime] =
       if (rest.headOption.contains("unixepoch")) {
-        if (!isNumeric(v.trim)) None
+        if (!Affinity.isNumeric(v)) None
         else { rest = rest.tail; Some(fromEpochSeconds(v.trim.toDouble)) }
       } else parse(v)
     rest.foldLeft(base)((acc, m) => acc.flatMap(applyModifier(_, m)))

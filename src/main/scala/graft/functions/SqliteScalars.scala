@@ -21,9 +21,6 @@ import graft.sources.Affinity
   * in scripts, never on the 100 TB pipeline hot path. */
 object SqliteScalars {
 
-  private val IntRe = "^[+-]?[0-9]+$".r
-  private val NumRe = "^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$".r
-
   private[functions] def isAffinityChild(e: Expression): Boolean = e match {
     case a: AttributeReference =>
       a.dataType.isInstanceOf[StringType] &&
@@ -40,10 +37,10 @@ object SqliteScalars {
   /** Storage class of a canonical affinity string. */
   private[functions] def classify(v: String): String = {
     val t = v.trim
-    if (IntRe.matches(t) &&
+    if (Affinity.IntRe.matches(t) &&
         (try { t.toLong; true } catch { case _: NumberFormatException => false }))
       "integer"
-    else if (NumRe.matches(t)) "real"
+    else if (Affinity.NumRe.matches(t)) "real"
     else "text"
   }
 

@@ -2,10 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, MaxBy, Min, MinBy}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
 
 /** SQLite cross-type ordering for affinity columns (SURVEY.md §1.3:
   * storage classes order NULL < INTEGER/REAL < TEXT < BLOB, numerics
@@ -50,8 +51,6 @@ object AffinityOrdering extends Rule[LogicalPlan] {
 
   /** Metadata key RecordPipeline sets on numeric-affinity columns. */
   val AffinityKey = "graft.affinity"
-
-  private val NumericRe = "^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
 
   private def isAffinityAttr(e: Expression): Boolean = e match {
     case a: AttributeReference =>
@@ -112,24 +111,27 @@ object AffinityOrdering extends Rule[LogicalPlan] {
     * (scalar min/max in GraftFunctions). */
   private[graft] def sortKeyFor(a: Expression): Expression = sortKey(a)
 
-  /** `(rank, numeric, text)` sort key; NULL input stays NULL so the
+  /** `(rank, numeric, text)` sort key: one call of the static kernel
+    * `Canonical.sortKey`, which states the numeric test once (through
+    * `Affinity.isNumeric`). A NULL input stays NULL, so the
     * SortOrder's null ordering applies (SQLite: NULL first ASC).
-    * `collation` (from an `a1 COLLATE NOCASE` spelling) applies to the
-    * TEXT component only — SQLite's storage-class ordering is not
-    * affected by the collation, which only refines text-vs-text
-    * comparison (sqlite3-pinned: '10','b','A','2' ORDER BY c COLLATE
-    * NOCASE → 2, 10, A, b). */
-  private def sortKey(a: Expression, collation: Option[Expression] = None): Expression = {
-    val trimmed = RegExpReplace(a, Literal("^[\\x00-\\x20]+|[\\x00-\\x20]+$"), Literal(""))
-    val isNum = RLike(trimmed, Literal(NumericRe))
-    val num = Cast(trimmed, DoubleType, None, EvalMode.TRY)
-    val text = If(isNum, Literal(""), a)
-    val textKey = collation.map(c => Collate(text, c)).getOrElse(text)
-    val key = CreateNamedStruct(Seq(
-      Literal("r"), If(isNum, Literal(0, IntegerType), Literal(1, IntegerType)),
-      Literal("n"), If(isNum, num, Literal(0.0, DoubleType)),
-      Literal("t"), textKey))
-    If(IsNull(a), Literal.create(null, key.dataType), key)
+    * `textType` is a collated string for an `a1 COLLATE NOCASE`
+    * spelling: the collation refines only text-vs-text comparison,
+    * never SQLite's storage-class ordering (sqlite3-pinned:
+    * '10','b','A','2' ORDER BY c COLLATE NOCASE → 2, 10, A, b). A
+    * plain StaticInvoke, because this rule runs after the optimizer
+    * has replaced every NamedStaticInvoke. */
+  private def sortKey(a: Expression, textType: DataType = StringType): Expression =
+    StaticInvoke(CanonicalClass, graft.functions.Canonical.sortKeyType(textType),
+      SortKeyMethod, Seq(a), Seq(StringType), propagateNull = true, returnNullable = false)
+
+  private val CanonicalClass = Class.forName("graft.functions.Canonical")
+  private val SortKeyMethod = "sortKey"
+
+  /** True for a storage-class key built by [[sortKey]]. */
+  private[graft] def isSortKey(e: Expression): Boolean = e match {
+    case s: StaticInvoke => s.staticObject == CanonicalClass && s.functionName == SortKeyMethod
+    case _ => false
   }
 
   /** ORDER BY over a string-typed COMPUTED expression whose value
@@ -446,11 +448,11 @@ object AffinityOrdering extends Rule[LogicalPlan] {
     // equal to TEXT '7', and storage classes order; sqlite3-pinned) —
     // goes through the matrix. BARE operands only (no stripCasts):
     // string-vs-string comparisons get no coercion casts from the
-    // analyzer, while an engine-built expression like normKeyCol's
+    // analyzer, while a cast probe such as
     // `cast(cast(c as long) as double) = cast(c as double)` strips to
     // the same attribute on both sides and must NOT be hijacked (the
-    // first cut did, collapsing the long-exactness probe to TRUE and
-    // making the unique-index check merge 0.25 with 0).
+    // first cut did, collapsing an exactness probe to TRUE and making
+    // the unique-index check merge 0.25 with 0).
     def bare(e: Expression) = {
       val d = derefOuter(e)
       (isAffinityAttr(d) || isTextDeclAttr(d)) && (d eq stripCasts(d))
@@ -508,12 +510,8 @@ object AffinityOrdering extends Rule[LogicalPlan] {
         so.copy(child = sortKey(so.child))
       // `affinityCol COLLATE x`: storage-class ordering still applies,
       // the collation refines only the text component
-      case so: SortOrder if (so.child match {
-            case Collate(a, _) => isAffinityAttr(a)
-            case _ => false
-          }) =>
-        val Collate(a, coll) = so.child
-        so.copy(child = sortKey(a, Some(coll)))
+      case so @ SortOrder(c @ Collate(a, _), _, _, _) if isAffinityAttr(a) =>
+        so.copy(child = sortKey(a, c.dataType))
       case ae @ AggregateExpression(Min(a), _, _, _, _) if isAffinityAttr(a) =>
         ae.copy(aggregateFunction = MinBy(a, sortKey(a)))
       case ae @ AggregateExpression(Max(a), _, _, _, _) if isAffinityAttr(a) =>
@@ -606,7 +604,7 @@ object AffinityOrdering extends Rule[LogicalPlan] {
     case _: graft.functions.SqliteArithExpr => true
     // the dynamic-class scalar shadows (abs/floor/ceil over affinity
     // values) return storage-class-bearing canonical text
-    case s: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    case s: StaticInvoke
         if Set("absTextDyn", "absTextLit", "floorText", "ceilText")
           .contains(s.functionName) => true
     // the dialect's dynamic-text wrapper: a numeric-typed child is

@@ -10,14 +10,16 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * Spark's SortExec evaluates each SortOrder child expression inside
   * the row comparator — O(n log n) evaluations per partition, and the
   * struct-typed first key defeats the radix/prefix fast path. The
-  * [[AffinityOrdering]] storage-class key is a RegExpReplace → RLike →
-  * TRY-cast CASE struct, so a 390k-row global sort at factor 26 spent
-  * ~3 s per pass re-running regexes in the comparator (stage-level
-  * attribution in SURVEY §8) — and [[GlobalRankExec]] pays the
-  * reduce-side sort twice (stats pass + output pass).
+  * [[AffinityOrdering]] storage-class key is a call of the
+  * `Canonical.sortKey` kernel (a regex match and a double parse per
+  * value); when it was still a RegExpReplace → RLike → TRY-cast CASE
+  * struct, a 390k-row global sort at factor 26 spent ~3 s per pass
+  * re-running regexes in the comparator (stage-level attribution in
+  * SURVEY §8) — and [[GlobalRankExec]] pays the reduce-side sort twice
+  * (stats pass + output pass).
   *
   * This rule rewrites any [[Sort]] or [[GlobalRank]] whose sort keys
-  * contain a regex into
+  * contain a storage-class key or a regex into
   * `Project(original output)(Sort(by key attr)(Project(output :+ key)))`
   * — the key is computed ONCE per row in the projection (whole-stage
   * codegen, map side of the range exchange), the comparator reads a
@@ -27,8 +29,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * rewritten affinity ORDER BYs and GlobalRankRewrite has planned
   * global ranks), so no later rule collapses the projection back.
   * Idempotent: rewritten keys are bare attributes, which the
-  * expensive-key guard never matches. Scoped to regex-bearing keys —
-  * the only expensive-comparator shape this engine generates — so
+  * expensive-key guard never matches. Scoped to those two key shapes
+  * (a user-written regex key is the other expensive comparator), so
   * audited plans without affinity sorts are untouched. */
 object SortKeyMaterialization extends Rule[LogicalPlan] {
 
@@ -36,7 +38,7 @@ object SortKeyMaterialization extends Rule[LogicalPlan] {
     case _: Attribute => false
     case _ => e.exists {
       case _: RLike | _: RegExpReplace => true
-      case _ => false
+      case k => AffinityOrdering.isSortKey(k)
     }
   }
 

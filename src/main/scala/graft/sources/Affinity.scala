@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, lit}
 
@@ -43,8 +45,14 @@ object Affinity {
     if (Set("int", "integer", "text", "blob", "real")(t.toLowerCase)) t.toUpperCase else t
   }
 
-  private val intRe = """[+-]?\d+""".r
-  private val realRe = """[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?""".r
+  /** SQLite's integer and numeric text, whole-string: the one
+    * statement of "does this text hold a number" for the engine. */
+  val IntRe: Regex = """[+-]?\d+""".r
+  val NumRe: Regex = """[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?""".r
+
+  /** Integer or real text once trimmed like `String.trim`
+    * (`[\x00-\x20]`). */
+  def isNumeric(value: String): Boolean = NumRe.matches(value.trim)
 
   def hasAffinity(declared: String): String = {
     // SQLite's affinity-from-type-name rules, §3.1 of its datatype doc.
@@ -66,7 +74,7 @@ object Affinity {
         if (isNumeric(value)) formatReal(value.trim.toDouble) else value
       case _ => // INTEGER | NUMERIC
         val t = value.trim
-        if (intRe.matches(t)) {
+        if (IntRe.matches(t)) {
           try String.valueOf(t.toLong)
           catch { case _: NumberFormatException => formatReal(t.toDouble) }
         } else if (isNumeric(value)) {
@@ -96,8 +104,6 @@ object Affinity {
       val l = d.toLong
       if (l.toDouble == d) Some(l) else None
     } else None
-
-  private def isNumeric(value: String): Boolean = realRe.matches(value.trim)
 
   /** SQLite renders REAL storage with `%!.15g` — 15 significant
     * digits, trailing fraction zeros stripped, the decimal point

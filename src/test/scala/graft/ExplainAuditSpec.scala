@@ -59,7 +59,8 @@ class ExplainAuditSpec extends SparkSpec {
     "p44_simhash_neardup" -> (2, 1),
     // re-pinned (5,2) → (3,1) round 16: fixed-width class keys + the
     // single-pass nc/nh merge dropped two exchanges and a broadcast
-    // from the audited plan (plans/r16/p45_..._after.txt)
+    // from the audited plan (plans/r16/p45_bloom_decontaminate_after.txt,
+    // in git history up to commit 64e1f6d)
     "p45_bloom_decontaminate" -> (3, 1),
     "p46_cms_heavy_hitters" -> (2, 1),
     "p47_hll_distinct" -> (6, 4),

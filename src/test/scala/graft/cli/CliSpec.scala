@@ -237,6 +237,11 @@ class CliSpec extends SparkSpec {
     assert(sqawk("-noinput", "select date('not a date') as r") == (0, "\n"))
   }
 
+  test("a julian day number with an exponent reads as the number (sqlite3-pinned)") {
+    assert(sqawk("-noinput", "select date('2.4610005e6') as r, date('2461000.5') as s")
+      == (0, "2025-11-21 2025-11-21\n"))
+  }
+
   test("SQLite date/time modifiers (sqlite3-verified outputs)") {
     // calendar normalization, not clamping: Jan 31 + 1 month = Mar 2
     assert(sqawk("-noinput", "select date('2024-01-31','+1 month') as r") == (0, "2024-03-02\n"))
@@ -2260,6 +2265,13 @@ class CliSpec extends SparkSpec {
     freshTables("t2") {
       assert(sqawk("create table [t2](k, v); insert into [t2] values (1, 2); " +
         "select * from t2", tempFile(grid)) == (0, "1 2\n"))
+    }
+  }
+
+  test("a bracket-quoted table name in a plain query (sqlite3-pinned)") {
+    freshTables("t2") {
+      assert(sqawk("create table [t2](k, v); insert into [t2] values (1, 2); " +
+        "select * from [t2]", tempFile(grid)) == (0, "1 2\n"))
     }
   }
 

@@ -1,14 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** Pins the `graft_dot` kernel used by the ANN verify stages: value
   * parity with the higher-order-function spelling, null propagation,
-  * and the shorter-input length clamp; and, for all five static
-  * kernels, interpreted evaluation against generated code. */
+  * and the shorter-input length clamp; and, for the static kernels,
+  * interpreted evaluation against generated code. */
 class DotProductSpec extends SparkSpec {
 
   private def df = {
@@ -64,9 +64,23 @@ class DotProductSpec extends SparkSpec {
       StructField("a", ArrayType(DoubleType)), StructField("b", ArrayType(DoubleType)),
       StructField("toks", ArrayType(StringType))))
     val in = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    def run() = in.selectExpr("id", "graft_dot(a, b)", "graft_md5longs(s)",
-        "graft_md5min8(s)", "graft_rollhash_min(s)", "graft_kmr_emit(toks, 1, 3)")
-      .collect().sortBy(_.getLong(0)).toSeq
+    // the storage-class key is built by the AffinityOrdering rule, not
+    // called by name: build it over the frame's own `s` attribute
+    def sortKey(df: DataFrame) = GraftSqlShim.column(graft.plans.AffinityOrdering
+      .sortKeyFor(df.queryExecution.analyzed.output.find(_.name == "s").get))
+    def kernels(df: DataFrame, cols: Column*) =
+      df.select(cols :+ expr("graft_unique_key(s)") :+ sortKey(df): _*)
+        .collect().sortBy(_.getLong(0)).toSeq
+    // numeric-text edge cases, checked against the driver functions
+    val tricky = Seq("007", " 12 ", "+5", ".5", "5.", "1e2", "100.0", "-0",
+      "9223372036854775807", "9223372036854775808", "1e400", "x", "", null)
+    val trickyIn = spark.createDataFrame(spark.sparkContext.parallelize(
+      tricky.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 2),
+      StructType(Seq(StructField("id", LongType), StructField("s", StringType))))
+    def run() = (
+      kernels(in, Seq("id", "graft_dot(a, b)", "graft_md5longs(s)", "graft_md5min8(s)",
+        "graft_rollhash_min(s)", "graft_kmr_emit(toks, 1, 3)").map(expr): _*),
+      kernels(trickyIn, col("id")))
     val codegen = run()
     val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
     val saved = keys.map(k => spark.conf.getOption(k))
@@ -76,9 +90,22 @@ class DotProductSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-    assert(codegen.size === 400)
-    assert(codegen.exists(_.isNullAt(1)) && codegen.exists(r => !r.isNullAt(1)))
+    assert(codegen._1.size === 400)
+    assert(codegen._1.exists(_.isNullAt(1)) && codegen._1.exists(r => !r.isNullAt(1)))
     assert(interpreted === codegen)
+    // the unique-index key is the driver-side check's function; the
+    // sort key ranks trimmed numeric text 0 with its value, and any
+    // other text 1 with the text as is
+    val unique = codegen._2.map(_.getString(1))
+    assert(unique === tricky.map(v => if (v == null) null else Canonical.normNumText(v)))
+    assert(unique === Seq("7", " 12 ", "5", "0.5", "5", "100", "100", "0",
+      "9223372036854775807", "9.223372036854776E18", "Infinity", "x", "", null))
+    val Inf = Double.PositiveInfinity
+    assert(codegen._2.map(r => Option(r.getStruct(2))
+      .map(k => (k.getInt(0), k.getDouble(1), k.getString(2))).orNull) === Seq(
+      (0, 7.0, ""), (0, 12.0, ""), (0, 5.0, ""), (0, 0.5, ""), (0, 5.0, ""),
+      (0, 100.0, ""), (0, 100.0, ""), (0, -0.0, ""), (0, 9.223372036854776e18, ""),
+      (0, 9.223372036854776e18, ""), (0, Inf, ""), (1, 0.0, "x"), (1, 0.0, ""), null))
   }
 
   test("null input propagates to null") {

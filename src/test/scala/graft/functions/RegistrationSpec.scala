@@ -26,7 +26,8 @@ object RegistrationSpec {
     "sqlite_cast_integer", "sqlite_cast_real", "sqlite_cast_text",
     "sqlite_cast_numeric",
     "graft_md5longs", "graft_md5min8", "graft_rollhash_min", "graft_dot",
-    "graft_kmr_emit", "graft_canonical", "graft_affinity_value", "graft_fold_accents")
+    "graft_kmr_emit", "graft_canonical", "graft_unique_key", "graft_affinity_value",
+    "graft_fold_accents")
 
   /** The graft function names the session cannot resolve. */
   def unresolved(s: SparkSession): Seq[String] =

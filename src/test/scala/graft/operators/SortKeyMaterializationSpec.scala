@@ -3,10 +3,10 @@ package graft.operators
 import graft.SparkSpec
 
 /** Pins the expensive-sort-key materialization rule
-  * (graft.plans.SortKeyMaterialization): regex-bearing sort keys are
-  * computed once in a projection below the Sort/GlobalRank (the
-  * comparator then reads an attribute), results are unchanged, and
-  * plain-attribute sorts are untouched. */
+  * (graft.plans.SortKeyMaterialization): storage-class and regex sort
+  * keys are computed once in a projection below the Sort/GlobalRank
+  * (the comparator then reads an attribute), results are unchanged,
+  * and plain-attribute sorts are untouched. */
 class SortKeyMaterializationSpec extends SparkSpec {
 
   private def physical(df: org.apache.spark.sql.DataFrame): String =
@@ -56,6 +56,37 @@ class SortKeyMaterializationSpec extends SparkSpec {
       .sortBy { case (s, v) => (s.replace("k", ""), v) }
       .zipWithIndex.map { case ((s, v), i) => (s, v, i + 1) }
     assert(got.sortBy(_._3).toSeq == want)
+  }
+
+  test("affinity keys over a loaded table are kernel calls, materialized below the Sort") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, RLike, RegExpReplace}
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import spark.implicits._
+    val lines = Seq("r1 10 7", "r2 2 x", "r3 2500 3", "r4 x 12", "r5 2000 2.5")
+    graft.sources.AwkReader.parse(spark, spark.createDataset(lines),
+      graft.sources.AwkOptions(), graft.sources.TableOptions(nf = 3))
+      .createOrReplaceTempView("skm_awk")
+    try {
+      def run(sql: String) = {
+        val q = spark.sql(sql)
+        val plan = q.queryExecution.optimizedPlan
+        val regex = plan.flatMap(_.expressions).flatMap(_.collect {
+          case e: RLike => e
+          case e: RegExpReplace => e
+        })
+        assert(regex.isEmpty, s"$sql still builds regex nodes:\n$plan")
+        (plan, q.collect().map(_.getString(0)).toSeq)
+      }
+      val (sorted, order) = run("select a2 from skm_awk order by a2")
+      val sorts = sorted.collect { case s: Sort => s }
+      assert(sorts.nonEmpty && sorts.forall(_.order.forall(_.child match {
+        case a: Attribute => a.name.startsWith("__graft_sortkey")
+        case _ => false
+      })), s"the Sort does not read a materialized key:\n$sorted")
+      assert(order == Seq("2", "10", "2000", "2500", "x"))
+      assert(run("select max(a3) from skm_awk")._2 == Seq("x"))
+      assert(run("select a1 from skm_awk where a2 >= 2000")._2.sorted == Seq("r3", "r4", "r5"))
+    } finally spark.catalog.dropTempView("skm_awk")
   }
 
   test("plain-attribute sorts stay untouched") {

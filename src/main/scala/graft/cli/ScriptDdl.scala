@@ -1,6 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -2466,7 +2467,7 @@ object ScriptDdl {
         schema.fields.map(_.name).find(_.equalsIgnoreCase(c)).getOrElse(c)))
     }
     if (pkCols.isEmpty && notNullCols.isEmpty && uniqueKeys.isEmpty)
-      return (target.unionByName(aligned), aligned)
+      return (append(target, aligned), aligned)
 
     // align the batch to the stored schema's types so driver-side
     // assignment and key comparison see the canonical stored text
@@ -2507,7 +2508,7 @@ object ScriptDdl {
         (if (pkCols.nonEmpty) Seq(KeySpec.ofCols(name, pkCols)) else Nil) ++
           uniqueKeys, mode, order)
 
-    if (pkCols.isEmpty) return (order(target.unionByName(batch)), batch)
+    if (pkCols.isEmpty) return (order(append(target, batch)), batch)
 
     val keyNonNull = pkCols.map(c => col(s"`$c`").isNotNull).reduce(_ && _)
     // pk equality compares NORMALIZED keys (round-15 fuzz seed 32811's
@@ -2554,21 +2555,21 @@ object ScriptDdl {
                 .limit(1).count() > 0)
               throw new IllegalArgumentException(
                 s"UNIQUE constraint failed: $name.$rc")
-            (order(target.unionByName(batch)), batch)
+            (order(append(target, batch)), batch)
           case "ignore" =>
             val firstPer = onePerKey(keepLast = false)
             val existing = target
               .where(rcCol.isin(firstPer.map(_.get(rcIdx)).toIndexedSeq: _*))
               .select(rcCol).collect().map(_.get(0)).toSet
             val ins = localDf(firstPer.filterNot(r => existing(r.get(rcIdx))))
-            (order(target.unionByName(ins)), ins)
+            (order(append(target, ins)), ins)
           case "replace" =>
             val lastPer = onePerKey(keepLast = true)
             // stored rowid keys are never null, so the negated IN
             // cannot null-drop a kept row
-            (order(target
-              .where(!rcCol.isin(lastPer.map(_.get(rcIdx)).toIndexedSeq: _*))
-              .unionByName(localDf(lastPer))), batch)
+            (order(append(target
+              .where(!rcCol.isin(lastPer.map(_.get(rcIdx)).toIndexedSeq: _*)),
+              localDf(lastPer))), batch)
         }
       case _ => ()
     }
@@ -2584,7 +2585,7 @@ object ScriptDdl {
         if (dupExisting || dupInternal)
           throw new IllegalArgumentException(
             "UNIQUE constraint failed: " + pkCols.map(c => s"$name.$c").mkString(", "))
-        (order(target.unionByName(batch)), batch)
+        (order(append(target, batch)), batch)
 
       case "ignore" =>
         val withRid = batch.withColumn("__gr_rid", monotonically_increasing_id())
@@ -2596,7 +2597,7 @@ object ScriptDdl {
         val fresh = firstPer.join(target, cond(firstPer, target), "left_anti")
           .drop("__gr_rid")
         val nullKeyed = withRid.where(!keyNonNull).drop("__gr_rid")
-        (order(target.unionByName(fresh).unionByName(nullKeyed)),
+        (order(append(target, fresh.unionByName(nullKeyed))),
           fresh.unionByName(nullKeyed))
 
       case "replace" =>
@@ -2609,7 +2610,7 @@ object ScriptDdl {
           .drop("__gr_rn", "__gr_rid")
         val nullKeyed = withRid.where(!keyNonNull).drop("__gr_rid")
         val kept = target.join(lastPer, cond(target, lastPer), "left_anti")
-        (order(kept.unionByName(lastPer).unionByName(nullKeyed)), batch)
+        (order(append(kept, lastPer.unionByName(nullKeyed))), batch)
     }
   }
 
@@ -2706,7 +2707,7 @@ object ScriptDdl {
           if (s.contains(k)) uniqueErrText(ks.errText)
           s += k
         }
-        (order(target.unionByName(batchDf)), batchDf)
+        (order(append(target, batchDf)), batchDf)
       case "ignore" =>
         val seen = keysets.zip(batchKeys).map { case (ks, bk) =>
           bk -> storedKeys(ks, bk) }
@@ -2719,7 +2720,7 @@ object ScriptDdl {
           }
         }
         val ins = localDf(kept.toSeq)
-        (order(target.unionByName(ins)), ins)
+        (order(append(target, ins)), ins)
       case "replace" =>
         // every proposed row inserts at its turn; later rows displace
         // earlier batch inserts sharing a key on any keyset …
@@ -2753,7 +2754,7 @@ object ScriptDdl {
               keyMatch && covered, "left_anti"))
           }
         }
-        (order(stored.unionByName(localDf(kept.toSeq.map(rows(_))))), batchDf)
+        (order(append(stored, localDf(kept.toSeq.map(rows(_))))), batchDf)
     }
   }
 
@@ -2888,7 +2889,7 @@ object ScriptDdl {
       insParts += freshRows
       updRows.foreach(retParts += _)
     }
-    cur = cur.unionByName(nullKeyed)
+    cur = append(cur, nullKeyed)
     retParts += nullKeyed
     insParts += nullKeyed
     // post-assignment constraint surface: NN on updated rows, and
@@ -2937,7 +2938,7 @@ object ScriptDdl {
     val fresh = p.join(cur, joinCond(p, cur), "left_anti")
     up.set match {
       case None => // DO NOTHING: conflicting proposed rows drop
-        (cur.unionByName(fresh), fresh, None, Nil)
+        (append(cur, fresh), fresh, None, Nil)
       case Some((setText, whereText)) =>
         val assigns = splitTopLevel(setText).map(parseAssignment)
         for ((n, _) <- assigns if !schema.fields.exists(_.name.equalsIgnoreCase(n)))
@@ -2986,7 +2987,7 @@ object ScriptDdl {
             .map(r => (Some(Row.fromSeq((0 until n).map(r.get))),
                        Some(Row.fromSeq((n until 2 * n).map(r.get)))))
         }
-        (updatedStored.unionByName(fresh), fresh, Some(updRet), pairs)
+        (append(updatedStored, fresh), fresh, Some(updRet), pairs)
     }
   }
 
@@ -3039,6 +3040,18 @@ object ScriptDdl {
           throw new IllegalArgumentException("datatype mismatch") }
       }
     }
+
+  /** `stored ∪ rows` by name: a table's new binding after an INSERT.
+    * A stored plan that is one partition (a one-split loaded table)
+    * stays one: the union is coalesced, so a later aggregate or ORDER
+    * BY over the table still plans no Exchange. */
+  private def append(
+      stored: org.apache.spark.sql.DataFrame,
+      rows: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val all = stored.unionByName(rows)
+    if (stored.queryExecution.sparkPlan.outputPartitioning == SinglePartition) all.coalesce(1)
+    else all
+  }
 
   /** The rowid-alias autoassign walk, shared by INSERT and UPSERT
     * binding: each NULL key takes one more than the largest key seen

@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.util.regex.Pattern
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The default "awk" scan: regex record separator, regex field
@@ -13,7 +16,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *    per file (a non-'\n' RS is not splittable in general; documented
   *    limitation mirroring SURVEY.md §7.5 — same semantics as the
   *    reference's buffered scan, awk.tcl:170-193).
-  *  - Field splitting happens in executors via `Dataset.map`; the
+  *  - Field splitting happens in executors, in `mapPartitions` over
+  *    the scan's rows with FS compiled once per partition; the
   *    `-1` trick (`FS='x^'`, a never-matching regex) naturally skips
   *    split work because the regex never matches.
   */
@@ -26,35 +30,35 @@ final case class AwkOptions(
 object AwkReader {
 
   /** Path(s) → record stream. */
-  def records(spark: SparkSession, paths: Seq[String], rs: String): Dataset[String] = {
-    import spark.implicits._
+  def records(spark: SparkSession, paths: Seq[String], rs: String): RDD[String] = {
     if (rs == "\n") {
-      spark.read.textFile(paths: _*)
+      RecordPipeline.lines(spark.read.textFile(paths: _*))
     } else {
       SepSplit.validateSeparator(rs, "RS")
-      spark.read.option("wholetext", "true").textFile(paths: _*)
-        .flatMap(text => SepSplit.splitRecords(text, rs))
+      RecordPipeline.lines(spark.read.option("wholetext", "true").textFile(paths: _*))
+        .mapPartitions { texts =>
+          val rsP = Pattern.compile(rs)
+          texts.flatMap(SepSplit.splitRecords(_, rsP))
+        }
     }
   }
 
-  /** Record stream → parsed `(rawRecord, fields)` pairs. */
-  def parseRecords(
-      records: Dataset[String], awk: AwkOptions): Dataset[(String, Seq[String])] = {
-    val spark = records.sparkSession
-    import spark.implicits._
+  /** Record stream → parsed `(rawRecord, fields)` pairs; FS is
+    * compiled once per partition. */
+  def parseRecords(records: RDD[String], awk: AwkOptions): RDD[(String, Seq[String])] = {
     SepSplit.validateSeparator(awk.fs, "FS")
     val fm = FieldMap.parse(awk.fields)
+    val auto = fm == FieldMap.AutoOnly
     val fs = awk.fs
     val trimMode = awk.trim
-    if (fm == FieldMap.AutoOnly) {
-      records.map { rec =>
+    records.mapPartitions { recs =>
+      val fsP = Pattern.compile(fs)
+      recs.map { rec =>
         val r = SepSplit.trimRecord(rec, trimMode)
-        (r, SepSplit.sepsplit(r, fs, includeSeparators = false): Seq[String])
-      }
-    } else {
-      records.map { rec =>
-        val r = SepSplit.trimRecord(rec, trimMode)
-        (r, FieldMap.map(SepSplit.sepsplit(r, fs, includeSeparators = true), fm): Seq[String])
+        val fields =
+          if (auto) SepSplit.sepsplit(r, fsP, includeSeparators = false)
+          else FieldMap.map(SepSplit.sepsplit(r, fsP, includeSeparators = true), fm)
+        (r, fields: Seq[String])
       }
     }
   }
@@ -72,5 +76,5 @@ object AwkReader {
       lines: Dataset[String],
       awk: AwkOptions,
       table: TableOptions): DataFrame =
-    RecordPipeline.build(spark, parseRecords(lines, awk), table)
+    RecordPipeline.build(spark, parseRecords(RecordPipeline.lines(lines), awk), table)
 }

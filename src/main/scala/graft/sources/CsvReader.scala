@@ -2,6 +2,7 @@ package graft.sources
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Line-at-a-time CSV scan (reference: lib/parsers/csv.tcl; SURVEY.md
@@ -54,26 +55,21 @@ object CsvReader {
     out.toVector
   }
 
-  def parseRecords(
-      lines: Dataset[String], opts: CsvOptions): Dataset[(String, Seq[String])] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
+  def parseRecords(lines: RDD[String], opts: CsvOptions): RDD[(String, Seq[String])] =
     lines.map(line => (line, splitLine(line, opts): Seq[String]))
-  }
 
   def read(
       spark: SparkSession,
       paths: Seq[String],
       csv: CsvOptions,
-      table: TableOptions): DataFrame = {
-    import spark.implicits._
-    RecordPipeline.build(spark, parseRecords(spark.read.textFile(paths: _*), csv), table)
-  }
+      table: TableOptions): DataFrame =
+    RecordPipeline.build(spark,
+      parseRecords(RecordPipeline.lines(spark.read.textFile(paths: _*)), csv), table)
 
   def parse(
       spark: SparkSession,
       lines: Dataset[String],
       csv: CsvOptions,
       table: TableOptions): DataFrame =
-    RecordPipeline.build(spark, parseRecords(lines, csv), table)
+    RecordPipeline.build(spark, parseRecords(RecordPipeline.lines(lines), csv), table)
 }

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.functions.TclList
@@ -21,8 +22,9 @@ import graft.functions.TclList
   * Scale: `lines=1` uses `spark.read.textFile` (splittable, blank
   * lines filtered, tests.tcl:719-768). Whole-file arrays are read per
   * file (`wholetext`) — inherently one task per file, exactly the
-  * reference's full-buffer behavior. The kv=1 key union is a distinct
-  * aggregation over key sets (small), not a data collect.
+  * reference's full-buffer behavior. The kv=1 key union rides on
+  * [[RecordPipeline.buildKv]]'s stats job (key sets are small), not
+  * on a data collect.
   */
 final case class JsonOptions(kv: Boolean = true, lines: Boolean = false)
 
@@ -66,43 +68,33 @@ object JsonReader {
     } finally parser.close()
   }
 
-  /** Raw JSON element stream: one JsonNode per record. */
+  /** Raw JSON element stream: one JSON text per record. */
   private def elements(
-      spark: SparkSession, paths: Seq[String], lines: Boolean): Dataset[String] = {
-    import spark.implicits._
+      spark: SparkSession, paths: Seq[String], lines: Boolean): RDD[String] =
     if (lines)
-      spark.read.textFile(paths: _*).filter((l: String) => l.trim.nonEmpty)
+      nonBlank(RecordPipeline.lines(spark.read.textFile(paths: _*)))
     else
-      spark.read.option("wholetext", "true").textFile(paths: _*)
-        .flatMap { text =>
-          val root = mapper.readTree(text)
-          root.elements.asScala.map(_.toString).toVector
-        }
-  }
+      RecordPipeline.lines(spark.read.option("wholetext", "true").textFile(paths: _*))
+        .flatMap(text => mapper.readTree(text).elements.asScala.map(_.toString).toVector)
+
+  private def nonBlank(elems: RDD[String]): RDD[String] = elems.filter(_.trim.nonEmpty)
 
   /** kv=0 array records as `(a0, fields)`. The kv=1 object path goes
     * through [[RecordPipeline.buildKv]], which folds the key union
     * into its stats pass (single parse of the input). */
-  def parseRecords(
-      spark: SparkSession, elems: Dataset[String], opts: JsonOptions): Dataset[(String, Seq[String])] = {
-    import spark.implicits._
+  def parseRecords(elems: RDD[String]): RDD[(String, Seq[String])] =
     elems.map { e =>
       val fields = arrayRecord(mapper.readTree(e))
       (TclList.join(fields), fields)
     }
-  }
 
   private def buildFrom(
       spark: SparkSession,
-      elems: Dataset[String],
+      elems: RDD[String],
       json: JsonOptions,
-      table: TableOptions): DataFrame = {
-    import spark.implicits._
-    if (json.kv)
-      RecordPipeline.buildKv(spark, elems.map(e => objectRecord(e)), table)
-    else
-      RecordPipeline.build(spark, parseRecords(spark, elems, json), table)
-  }
+      table: TableOptions): DataFrame =
+    if (json.kv) RecordPipeline.buildKv(spark, elems.map(objectRecord), table)
+    else RecordPipeline.build(spark, parseRecords(elems), table)
 
   def read(
       spark: SparkSession,
@@ -117,9 +109,6 @@ object JsonReader {
       spark: SparkSession,
       elems: Dataset[String],
       json: JsonOptions,
-      table: TableOptions): DataFrame = {
-    import elems.sparkSession.implicits._
-    val nonBlank = elems.filter((l: String) => l.trim.nonEmpty)
-    buildFrom(spark, nonBlank, json, table)
-  }
+      table: TableOptions): DataFrame =
+    buildFrom(spark, nonBlank(RecordPipeline.lines(elems)), json, table)
 }

@@ -1,8 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.sql.types.{ArrayType, LongType, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Table-shaping options shared by every scan format
   * (reference: lib/classes/sqawk.tcl:139-147 defaults,
@@ -23,15 +27,27 @@ final case class TableOptions(
   * shape `[<p>nr, <p>nf, <p>0, <p>1..<p>N]`
   * (reference: lib/classes/table.tcl:59-149; SURVEY.md §1.2).
   *
+  * Every reader parses its input in `mapPartitions` over an RDD of
+  * text ([[lines]] reads a `Dataset[String]`'s rows straight off its
+  * scan, with no encoder round trip) and hands the parsed records to
+  * [[build]] or [[buildKv]]; these are the only two ways a table is
+  * made.
+  *
   * Scale design (this is the path EVERY scan takes, so it is sized for
   * 100 TB inputs):
   *  - exactly TWO passes over the input and nothing cached: one stats
-  *    pass collecting per-partition row counts, max field counts and
-  *    the first record (header), then the final pass assigning
-  *    contiguous 1-based `anr` from the partition offsets — the same
-  *    two-job shape as Spark's own `zipWithIndex`, with the max-nf
-  *    aggregate and header `take(1)` piggybacked onto the first pass
-  *    instead of running as extra jobs over a persisted copy;
+  *    job collecting per-partition row counts, max field counts and
+  *    the first record (header), then the table's own scan, which
+  *    numbers rows with contiguous 1-based `anr` from the partition
+  *    offsets (Spark's `zipWithIndex` scheme, with the max-nf
+  *    aggregate and header `take(1)` piggybacked onto the stats job
+  *    instead of running as extra jobs over a persisted copy);
+  *  - the table is one relation over `InternalRow`s
+  *    (`__nr`, `__a0`, `__fields`) that declares its partitioning
+  *    ([[org.apache.spark.sql.GraftSqlShim.rowsRelation]]): a one-split
+  *    input declares `SinglePartition`, so an aggregate, ORDER BY,
+  *    DISTINCT or window over it runs as one stage with no Exchange;
+  *    more splits declare unknown partitioning and plan as any RDD;
   *  - field values are canonicalized by [[Affinity.canonicalExpr]],
   *    one static kernel call per field — the whole projection stays
   *    inside whole-stage codegen (no per-value ScalaUDF);
@@ -44,18 +60,22 @@ object RecordPipeline {
   /** Metadata key carrying the table's row count on the nr column. */
   val RowCountKey = "graft.rowcount"
 
+  /** The text of a `Dataset[String]` as an RDD, read off the rows of
+    * its executed plan (`toRdd` reuses its row object; the String is
+    * a copy). Runs no job by itself. */
+  def lines(ds: Dataset[String]): RDD[String] =
+    ds.toDF("value").select(col("value").cast(StringType)).queryExecution.toRdd
+      .mapPartitions(_.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0).toString))
+
   def build(
       spark: SparkSession,
-      records: Dataset[(String, Seq[String])],
+      records: RDD[(String, Seq[String])],
       opts: TableOptions): DataFrame = {
-    if (!Set("expand", "crop", "error").contains(opts.mnf))
-      throw new IllegalArgumentException(s"invalid MNF value: ${opts.mnf}")
-
-    val rdd = records.rdd
+    checkMnf(opts)
 
     // Pass 1 — per-partition stats: (pid, rows, maxNf, maxNf excluding
     // the partition's first record, first record's fields).
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val stats = records.mapPartitionsWithIndex { (pid, it) =>
       var n = 0L
       var mxAll = 0
       var mxTail = 0
@@ -91,15 +111,16 @@ object RecordPipeline {
     // reference's load loop: table.tcl:102-132).
     val offsets = stats.scanLeft(0L)(_ + _._2).init
     val bcOffsets = spark.sparkContext.broadcast(offsets)
-    val indexed = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val header = opts.header
+    val rows = records.mapPartitionsWithIndex { (pid, it) =>
       var idx = bcOffsets.value(pid)
-      it.map { case (a0, fields) =>
+      tableRows(header, it.map { case (a0, fields) =>
         val cur = idx
         idx += 1
         (cur, a0, fields)
-      }
+      })
     }
-    shape(spark, indexed, headerNames, maxNf, totalRows, opts)
+    shape(spark, rows, headerNames, maxNf, totalRows, opts)
   }
 
   /** Key-value records (JSON objects / Tcl dicts, S6-S7): the key
@@ -108,21 +129,24 @@ object RecordPipeline {
     * pass that counts rows, so kv ingest parses the input exactly
     * twice like every other format (the r3 shape reparsed it ~4×:
     * separate first-record and key-distinct jobs). The synthesized
-    * key record (reference: lib/parsers/json.tcl:76-93) is prepended
-    * as global record 0 and doubles as the header when `header=1`.
-    * Missing keys → "". */
+    * key record (reference: lib/parsers/json.tcl:76-93) is global
+    * record 0, emitted at the head of partition 0 (so a one-split kv
+    * input stays one partition), and doubles as the header when
+    * `header=1`. Missing keys → "". */
   def buildKv(
       spark: SparkSession,
-      dicts: Dataset[Seq[(String, String)]],
+      parsed: RDD[Seq[(String, String)]],
       opts: TableOptions): DataFrame = {
-    if (!Set("expand", "crop", "error").contains(opts.mnf))
-      throw new IllegalArgumentException(s"invalid MNF value: ${opts.mnf}")
-
-    val rdd = dicts.rdd
+    checkMnf(opts)
+    // an input with no splits (an empty file) becomes one empty
+    // partition, so the key record has a partition 0 to lead
+    val dicts =
+      if (parsed.getNumPartitions > 0) parsed
+      else spark.sparkContext.parallelize(Seq.empty[Seq[(String, String)]], 1)
 
     // Pass 1 — per-partition stats: rows, first record's key order,
     // union of key sets (column names: small by construction).
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val stats = dicts.mapPartitionsWithIndex { (pid, it) =>
       var n = 0L
       var firstKeys: Seq[String] = null
       val keySet = scala.collection.mutable.HashSet.empty[String]
@@ -148,10 +172,11 @@ object RecordPipeline {
     val offsets = stats.scanLeft(1L)(_ + _._2).init
     val bcOffsets = spark.sparkContext.broadcast(offsets)
     val bcKeys = spark.sparkContext.broadcast(keys)
-    val body = rdd.mapPartitionsWithIndex { (pid, it) =>
+    val header = opts.header
+    val rows = dicts.mapPartitionsWithIndex { (pid, it) =>
       val ks = bcKeys.value
       var idx = bcOffsets.value(pid)
-      it.map { pairs =>
+      val body = it.map { pairs =>
         val m = pairs.toMap
         val cur = idx
         idx += 1
@@ -159,19 +184,40 @@ object RecordPipeline {
           graft.functions.TclList.join(pairs.flatMap(p => Seq(p._1, p._2))),
           ks.map(k => m.getOrElse(k, "")): Seq[String])
       }
+      tableRows(header,
+        if (pid == 0) Iterator.single((0L, graft.functions.TclList.join(ks), ks)) ++ body
+        else body)
     }
-    val keyRecord = spark.sparkContext.parallelize(
-      Seq((0L, graft.functions.TclList.join(keys), keys: Seq[String])), 1)
     val headerNames = if (opts.header) keys else Nil
-    shape(spark, keyRecord.union(body), headerNames, keys.length, totalRows, opts)
+    shape(spark, rows, headerNames, keys.length, totalRows, opts)
   }
 
-  /** Shared table shaping from globally-indexed records: header
-    * consumption (record 0), 1-based `nr`, MNF resolution, naming,
+  private def checkMnf(opts: TableOptions): Unit =
+    if (!Set("expand", "crop", "error").contains(opts.mnf))
+      throw new IllegalArgumentException(s"invalid MNF value: ${opts.mnf}")
+
+
+  /** Globally-indexed records → table rows: with `header=1` record 0
+    * is the header and is not loaded, and the body numbers from 1;
+    * otherwise `nr` is the index plus one. */
+  private def tableRows(
+      header: Boolean, it: Iterator[(Long, String, Seq[String])]): Iterator[InternalRow] =
+    it.collect { case (cur, a0, fields) if !(header && cur == 0L) =>
+      InternalRow(if (header) cur else cur + 1, UTF8String.fromString(a0),
+        new GenericArrayData(fields.map(f => UTF8String.fromString(f): Any).toArray))
+    }
+
+  /** The ingest relation's layout: `(__nr, __a0, __fields)`. */
+  private val RowSchema = StructType(Seq(
+    StructField("__nr", LongType, nullable = false),
+    StructField("__a0", StringType),
+    StructField("__fields", ArrayType(StringType))))
+
+  /** Shared table shaping from numbered rows: MNF resolution, naming,
     * affinity canonicalization. */
   private def shape(
       spark: SparkSession,
-      indexed: org.apache.spark.rdd.RDD[(Long, String, Seq[String])],
+      rows: RDD[InternalRow],
       headerNames: Seq[String],
       maxNf: Int,
       totalRows: Long,
@@ -185,13 +231,7 @@ object RecordPipeline {
       case _ => opts.nf
     }
 
-    val header = opts.header
-    val numbered = indexed.flatMap { case (cur, a0, fields) =>
-      if (header && cur == 0L) Iterator.empty
-      else Iterator.single((if (header) cur else cur + 1, a0, fields))
-    }
-    import spark.implicits._
-    val body = numbered.toDF("__nr", "__a0", "__fields")
+    val body = GraftSqlShim.rowsRelation(spark, RowSchema, rows)
 
     val cropped =
       if (opts.mnf == "crop") body.withColumn("__fields", slice(col("__fields"), 1, opts.nf))

@@ -31,11 +31,17 @@ object SepSplit {
     *
     * Empty input → no fields. Empty regex → one field per character.
     */
-  def sepsplit(str: String, regex: String, includeSeparators: Boolean): Vector[String] = {
+  def sepsplit(str: String, regex: String, includeSeparators: Boolean): Vector[String] =
+    if (str.isEmpty) Vector.empty
+    else sepsplit(str, Pattern.compile(regex), includeSeparators)
+
+  /** [[sepsplit]] over a compiled separator: a reader compiles FS once
+    * per partition, not once per record. */
+  def sepsplit(str: String, sep: Pattern, includeSeparators: Boolean): Vector[String] = {
     if (str.isEmpty) return Vector.empty
-    if (regex.isEmpty) return str.map(_.toString).toVector
+    if (sep.pattern.isEmpty) return str.map(_.toString).toVector
     val out = ArrayBuffer.empty[String]
-    val m = Pattern.compile(regex).matcher(str)
+    val m = sep.matcher(str)
     var offset = 0
     while (m.find(offset)) {
       out += str.substring(offset, m.start)
@@ -64,9 +70,13 @@ object SepSplit {
   /** Split a whole text into records on RS matches. A trailing
     * separator produces NO final empty record; interior empty records
     * are kept (reference: awk.tcl:183-192; tests.tcl:1002-1040). */
-  def splitRecords(text: String, rsRegex: String): Vector[String] = {
+  def splitRecords(text: String, rsRegex: String): Vector[String] =
+    splitRecords(text, Pattern.compile(rsRegex))
+
+  /** [[splitRecords]] over a compiled RS. */
+  def splitRecords(text: String, rs: Pattern): Vector[String] = {
     val out = ArrayBuffer.empty[String]
-    val m = Pattern.compile(rsRegex).matcher(text)
+    val m = rs.matcher(text)
     var offset = 0
     while (m.find(offset)) {
       out += text.substring(offset, m.start)

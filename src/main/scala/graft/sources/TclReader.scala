@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.functions.TclList
@@ -15,41 +16,31 @@ final case class TclOptions(kv: Boolean = false, lines: Boolean = false)
 object TclReader {
 
   private def elements(
-      spark: SparkSession, paths: Seq[String], lines: Boolean): Dataset[String] = {
-    import spark.implicits._
+      spark: SparkSession, paths: Seq[String], lines: Boolean): RDD[String] =
     if (lines)
-      spark.read.textFile(paths: _*).filter((l: String) => l.trim.nonEmpty)
+      RecordPipeline.lines(spark.read.textFile(paths: _*)).filter(_.trim.nonEmpty)
     else
-      spark.read.option("wholetext", "true").textFile(paths: _*)
+      RecordPipeline.lines(spark.read.option("wholetext", "true").textFile(paths: _*))
         .flatMap(text => TclList.split(text))
-  }
 
   /** kv=0 list records as `(a0, fields)`. The kv=1 dict path goes
     * through [[RecordPipeline.buildKv]], which folds the key union
     * into its stats pass (single parse of the input). */
-  def parseRecords(
-      spark: SparkSession, elems: Dataset[String], opts: TclOptions): Dataset[(String, Seq[String])] = {
-    import spark.implicits._
-    elems.map { e =>
-      val fields = TclList.split(e)
-      (e, fields: Seq[String])
-    }
-  }
+  def parseRecords(elems: RDD[String]): RDD[(String, Seq[String])] =
+    elems.map(e => (e, TclList.split(e): Seq[String]))
 
   private def buildFrom(
       spark: SparkSession,
-      elems: Dataset[String],
+      elems: RDD[String],
       tcl: TclOptions,
-      table: TableOptions): DataFrame = {
-    import spark.implicits._
+      table: TableOptions): DataFrame =
     if (tcl.kv)
       RecordPipeline.buildKv(spark,
         elems.map(e => TclList.split(e).grouped(2)
           .collect { case Vector(k, v) => (k, v) }.toVector: Seq[(String, String)]),
         table)
     else
-      RecordPipeline.build(spark, parseRecords(spark, elems, tcl), table)
-  }
+      RecordPipeline.build(spark, parseRecords(elems), table)
 
   def read(
       spark: SparkSession,
@@ -63,5 +54,5 @@ object TclReader {
       elems: Dataset[String],
       tcl: TclOptions,
       table: TableOptions): DataFrame =
-    buildFrom(spark, elems, tcl, table)
+    buildFrom(spark, RecordPipeline.lines(elems), tcl, table)
 }

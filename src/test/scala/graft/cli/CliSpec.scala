@@ -2292,6 +2292,17 @@ class CliSpec extends SparkSpec {
     assert(c == 0 && o.contains("Physical Plan"))
   }
 
+  test("a one-split file plans GROUP BY and ORDER BY with no Exchange, in two jobs") {
+    val f = tempFile((1 to 60).map(i => s"k${i % 7} $i").mkString("", "\n", "\n"))
+    val q = "select a1, count(*) from a group by a1 order by a1"
+    val (c, plan) = sqawk(s"explain $q", f)
+    assert(c == 0 && plan.contains("Physical Plan") && !plan.contains("Exchange"), plan)
+    // the stats job of the load, then the query itself
+    val (out, jobs) = org.apache.spark.JobCounter.count(spark.sparkContext)(sqawk(q, f))
+    assert(out == (0, "k0 8\nk1 9\nk2 9\nk3 9\nk4 9\nk5 8\nk6 8\n"))
+    assert(jobs == 2)
+  }
+
   test("EXPLAIN QUERY PLAN answers with the formatted plan") {
     val (c, o) = sqawk("explain query plan select a1 from a where a2 > 1", tempFile(grid))
     assert(c == 0 && o.contains("Physical Plan"))

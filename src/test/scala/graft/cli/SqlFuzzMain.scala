@@ -19,10 +19,12 @@ object SqlFuzzMain {
     args.toList match {
       case "seed" :: s :: Nil =>
         val script = SqlScriptFuzz.genScript(s.toLong)
+        val table = SqlScriptFuzz.genTable(s.toLong)
+        println(s"--- table a (seed $s) ---\n${table.mkString("\n")}")
         println(s"--- script (seed $s) ---\n$script")
-        val g = try SqlScriptFuzz.runGraft(spark, script)
+        val g = try SqlScriptFuzz.runGraft(spark, script, table)
                 catch { case e: Throwable => (true, s"SPEC-LEVEL: $e") }
-        val q = SqlScriptFuzz.runSqlite(script)
+        val q = SqlScriptFuzz.runSqlite(SqlScriptFuzz.mirrorDdl(table) + script)
         println(s"--- graft  errored=${g._1} ---\n${g._2.replace(SqlScriptFuzz.Sep, "|")}")
         println(s"--- sqlite errored=${q._1} ---\n${q._2.replace(SqlScriptFuzz.Sep, "|")}")
         // rerun graft with the exception surfaced for debugging
@@ -30,7 +32,7 @@ object SqlFuzzMain {
           val sw = new java.io.StringWriter
           val ser = ScriptRunner.makeSerializer("awk",
             GlobalOptions(ofs = SqlScriptFuzz.Sep), sw)
-          try ScriptRunner.run(spark, script, ser, None)
+          try SqlScriptFuzz.withTable(spark, table)(ScriptRunner.run(spark, script, ser, None))
           catch { case e: Throwable =>
             println(s"--- graft exception ---")
             e.printStackTrace(System.out)

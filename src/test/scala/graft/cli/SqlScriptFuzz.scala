@@ -71,6 +71,17 @@ import org.apache.spark.sql.SparkSession
   * draws come from a second Random seeded from the seed, so the
   * statements are those the seed drew before comments existed.
   *
+  * Loaded table: each seed also writes a small awk file of mixed
+  * integer, real and text fields (some lines short or empty) and
+  * loads it through `GraftSession.loadAll` as table `a`, the sqawk
+  * shape; sqlite3 gets the same table as `anr INTEGER PRIMARY KEY,
+  * anf INTEGER, a0 TEXT` plus the fields declared INTEGER (sqawk's
+  * default type) ahead of the script. One or two fully ordered
+  * SELECTs over `a` (GROUP BY/HAVING, ORDER BY + LIMIT, window,
+  * DISTINCT, or a join with t1) follow the t1 SELECTs. The file and
+  * those SELECTs draw from their own Randoms, so every other
+  * statement is the one the seed drew before `a` existed.
+  *
   * Not generated (documented gaps / nondeterminism): multi-row
   * RETURNING (row order is engine-private), group_concat (concatenation order),
   * random(), typeof() around arithmetic results, and numeric-looking
@@ -679,10 +690,94 @@ object SqlScriptFuzz {
       case _ =>
         stmts += s"SELECT count(*) FROM t1 WHERE ${cm(pred(rnd, cols))}"
     }
+    stmts ++= loadedSelects(new Random(seed ^ 0xa5e1ec7L), cols)
     if (hasTrigger) stmts += "SELECT id, v FROM alog ORDER BY id"
     if (hasViewTrigger) stmts += "SELECT w FROM vlog ORDER BY 1"
 
     stmts.result().mkString(";\n") + ";\n"
+  }
+
+  /** Field columns of the loaded table: sqawk's default NF. Lines
+    * carry at most [[LoadedFields]] fields, so the rest read NULL. */
+  private val LoadedNf = 10
+  private val LoadedFields = 4
+
+  private val loadedValues = Vector("0", "7", "007", "42", "-5", "100",
+    "2.5", "-1.25", "0.5", "1e2", "100.0", "x", "abc", "B", "zz", "12abc")
+
+  /** The lines of the seed's loaded table `a`: 4-12 lines of one to
+    * [[LoadedFields]] space-separated values, now and then empty. */
+  def genTable(seed: Long): Vector[String] = {
+    val r = new Random(seed ^ 0x7ab1e5L)
+    Vector.fill(4 + r.nextInt(9)) {
+      if (r.nextInt(12) == 0) ""
+      else Seq.fill(1 + r.nextInt(LoadedFields))(
+        loadedValues(r.nextInt(loadedValues.size))).mkString(" ")
+    }
+  }
+
+  /** sqlite3's copy of the loaded table, run ahead of the script. */
+  def mirrorDdl(lines: Vector[String]): String = {
+    val decl = (1 to LoadedNf).map(i => s"a$i INTEGER").mkString(", ")
+    val rows = lines.zipWithIndex.map { case (line, i) =>
+      val fields = if (line.isEmpty) Vector.empty[String] else line.split(" ").toVector
+      val vals = Seq((i + 1).toString, fields.size.toString, s"'$line'") ++
+        fields.map(f => s"'$f'") ++ Seq.fill(LoadedNf - fields.size)("NULL")
+      s"(${vals.mkString(", ")})"
+    }
+    s"CREATE TABLE a (anr INTEGER PRIMARY KEY, anf INTEGER, a0 TEXT, $decl);\n" +
+      s"INSERT INTO a VALUES ${rows.mkString(", ")};\n"
+  }
+
+  /** One or two fully ordered SELECTs over the loaded table `a`:
+    * GROUP BY/HAVING, ORDER BY + LIMIT, window, DISTINCT or a join
+    * with t1 on one of its declared columns (the equality rule of the
+    * t1 arms). Every `a` field has INTEGER affinity. */
+  private def loadedSelects(ld: Random, cols: Vector[Col]): Seq[String] = {
+    def f(): String = s"a${1 + ld.nextInt(LoadedFields)}"
+    val declared = cols.filter(_.decl.nonEmpty)
+    Seq.fill(1 + ld.nextInt(2)) {
+      ld.nextInt(5) match {
+        case 0 =>
+          val g = f()
+          val agg = ld.nextInt(5) match {
+            case 0 => "count(*)"
+            case 1 => s"sum(${f()})"
+            case 2 => s"total(${f()})"
+            case 3 => s"min(${f()})"
+            case _ => s"max(${f()})"
+          }
+          val having = ld.nextInt(3) match {
+            case 0 => " HAVING count(*) >= 2"
+            case 1 => " HAVING max(anr) > 3"
+            case _ => ""
+          }
+          s"SELECT $g, $agg FROM a GROUP BY $g$having ORDER BY 1"
+        case 1 =>
+          val k = f()
+          val mod = if (ld.nextBoolean()) " DESC" else ""
+          val off = if (ld.nextBoolean()) s" OFFSET ${ld.nextInt(3)}" else ""
+          s"SELECT anr, $k FROM a ORDER BY $k$mod, anr LIMIT ${1 + ld.nextInt(5)}$off"
+        case 2 =>
+          val k = f()
+          ld.nextInt(3) match {
+            case 0 => s"SELECT anr, row_number() OVER (PARTITION BY $k ORDER BY anr) " +
+              "FROM a ORDER BY 1"
+            case 1 => s"SELECT $k, rank() OVER (ORDER BY $k) FROM a ORDER BY 1, 2"
+            case _ => s"SELECT anr, sum(${f()}) OVER (PARTITION BY $k) FROM a ORDER BY 1"
+          }
+        case 3 =>
+          if (ld.nextBoolean()) s"SELECT DISTINCT ${f()} FROM a ORDER BY 1"
+          else s"SELECT DISTINCT anf, ${f()} FROM a ORDER BY 1, 2"
+        case _ if declared.nonEmpty =>
+          val c = declared(ld.nextInt(declared.size)).name
+          val k = f()
+          if (ld.nextBoolean()) s"SELECT count(*) FROM a l, t1 WHERE l.$k = t1.$c"
+          else s"SELECT l.anr, l.$k FROM a l JOIN t1 ON l.$k = t1.$c ORDER BY 1, 2"
+        case _ =>
+          s"SELECT count(*), count(DISTINCT ${f()}) FROM a"
+      }
+    }
   }
 
   /** Per-seed ATTACH target; [[runSqlite]] unlinks it before running
@@ -747,8 +842,21 @@ object SqlScriptFuzz {
   @volatile private var lastJanino: JaninoReport = JaninoReport(0, None)
   def lastJaninoReport: JaninoReport = lastJanino
 
-  /** (errored, stdout). Leaves no temp views behind. */
-  def runGraft(spark: SparkSession, script: String): (Boolean, String) = {
+  /** Runs `body` with `table`'s lines loaded as table `a` through the
+    * CLI's loader (a temp file in the default awk format, deleted
+    * after `body`). */
+  def withTable[T](spark: SparkSession, table: Vector[String])(body: => T): T = {
+    val f = java.nio.file.Files.createTempFile("graftfuzz_a", ".txt")
+    try {
+      java.nio.file.Files.writeString(f, table.map(_ + "\n").mkString)
+      GraftSession.loadAll(spark, Options.parse(Seq("select 1", f.toString)))
+      body
+    } finally java.nio.file.Files.delete(f)
+  }
+
+  /** (errored, stdout) of `script` over the loaded table `table`.
+    * Leaves no temp views behind. */
+  def runGraft(spark: SparkSession, script: String, table: Vector[String]): (Boolean, String) = {
     hookFallbackCounter()
     val sw = new StringWriter
     val ser = ScriptRunner.makeSerializer("awk",
@@ -764,14 +872,17 @@ object SqlScriptFuzz {
       seen = now
     }
     val r =
-      try { ScriptRunner.run(spark, script, ser, None, observe); (false, sw.toString) }
+      try {
+        withTable(spark, table)(ScriptRunner.run(spark, script, ser, None, observe))
+        (false, sw.toString)
+      }
       catch {
         case _: Throwable =>
           try ser.close() catch { case _: Throwable => () }
           (true, sw.toString)
       }
     lastJanino = JaninoReport(fallbackCount.get() - start, first)
-    for (t <- Seq("t1", "v1", "alog", "vlog", "t2", "graft_att_aux1_t2"))
+    for (t <- Seq("a", "t1", "v1", "alog", "vlog", "t2", "graft_att_aux1_t2"))
       spark.catalog.dropTempView(t)
     r
   }
@@ -806,7 +917,8 @@ object SqlScriptFuzz {
     while (i < n) {
       val seed = from + i
       val script = genScript(seed)
-      val g = runGraft(spark, script)
+      val table = genTable(seed)
+      val g = runGraft(spark, script, table)
       // janino attribution (VERDICT r13 #1): any codegen fallback is
       // reported per seed with the first statement that raised it, so
       // the collapse-bound estimator can be recalibrated on the
@@ -819,9 +931,9 @@ object SqlScriptFuzz {
         println(s"[fuzz] JANINO seed=$seed fallbacks=${jr.count}$at")
         Console.out.flush()
       }
-      val s = runSqlite(script)
+      val s = runSqlite(mirrorDdl(table) + script)
       if (g != s) {
-        bad += Divergence(seed, script, g, s)
+        bad += Divergence(seed, mirrorDdl(table) + script, g, s)
         // report immediately (and flush — stdout is block-buffered
         // when redirected to a file): long standalone sweeps get
         // killed on time budgets and must not lose findings. The

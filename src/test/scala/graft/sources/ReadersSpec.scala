@@ -220,4 +220,59 @@ class ReadersSpec extends SparkSpec {
     assert(df.columns.toSeq == Seq("anr", "anf", "a0", "foo", "bar", "baz"))
     assert(rows(df).map(_.drop(3)) == Seq(Seq("1", "2", ""), Seq("3", "4", "5")))
   }
+
+  test("one split plans no Exchange; several splits number contiguously and keep it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-splits")
+    def file(name: String, lines: Seq[String]): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, lines.mkString("", "\n", "\n"))
+      f.toFile.deleteOnExit()
+      f.toString
+    }
+    val awk = file("a.txt", "key val" +: (1 to 40).map(i => s"k${i % 5} $i"))
+    val json = file("a.json", (1 to 30).map(i => s"""{"id": $i, "name": "n$i"}"""))
+    def groupPlan(df: org.apache.spark.sql.DataFrame): String =
+      df.groupBy(df.columns(3)).count().queryExecution.executedPlan.toString
+    // read whole, each file is one split: the table is one partition
+    // (the kv key record included) and an aggregate plans no Exchange
+    for (df <- Seq(
+        AwkReader.read(spark, Seq(awk), AwkOptions(), TableOptions(nf = 2)),
+        JsonReader.read(spark, Seq(json), JsonOptions(kv = true, lines = true),
+          TableOptions(nf = 2)))) {
+      assert(df.rdd.getNumPartitions == 1)
+      assert(!groupPlan(df).contains("Exchange"), groupPlan(df))
+    }
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "64")
+    val (awk0, awk1, json0, json1) =
+      try (
+        AwkReader.read(spark, Seq(awk), AwkOptions(), TableOptions(nf = 2)),
+        AwkReader.read(spark, Seq(awk), AwkOptions(), TableOptions(nf = 2, header = true)),
+        JsonReader.read(spark, Seq(json), JsonOptions(kv = true, lines = true),
+          TableOptions(nf = 2)),
+        JsonReader.read(spark, Seq(json), JsonOptions(kv = true, lines = true),
+          TableOptions(nf = 2, header = true)))
+      finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    for (df <- Seq(awk0, awk1, json0, json1)) {
+      assert(df.rdd.getNumPartitions >= 3)
+      assert(groupPlan(df).contains("Exchange"), groupPlan(df))
+    }
+    // awk: anr follows file order; header=1 names the columns from
+    // the first line and numbers the body from 1
+    assert(rows(awk0).map(r => (r(0), r(4))) ==
+      ((1L, "val") +: (1 to 40).map(i => (i + 1L, i.toString))))
+    assert(awk1.columns.toSeq == Seq("anr", "anf", "a0", "key", "val"))
+    assert(rows(awk1).map(r => (r(0), r(4))) == (1 to 40).map(i => (i.toLong, i.toString)))
+    // json kv: the key record is row 1; with header=1 it names the
+    // columns and the body numbers from 1
+    assert(rows(json0).map(r => (r(0), r(3), r(4))) ==
+      ((1L, "id", "name") +: (1 to 30).map(i => (i + 1L, i.toString, s"n$i"))))
+    assert(json1.columns.toSeq == Seq("anr", "anf", "a0", "id", "name"))
+    assert(rows(json1).map(r => (r(0), r(3), r(4))) ==
+      (1 to 30).map(i => (i.toLong, i.toString, s"n$i")))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -25,7 +25,12 @@ import graft.sources.Affinity
   *    union type-widening mirrors affinity's permissiveness);
   *  - `INSERT INTO t [(cols)] VALUES …|SELECT …` → union-rebind;
   *    VALUES runs through `spark.sql` directly (Spark supports
-  *    top-level VALUES), omitted columns fill with NULL.
+  *    top-level VALUES), omitted columns fill with NULL. A table
+  *    with a PRIMARY KEY, a UNIQUE index or a NOT NULL column checks
+  *    the batch on the driver: [[propose]] collects it once (rowid
+  *    datatype, NOT NULL, autoassign) and [[insertWalk]] resolves
+  *    its key conflicts in statement order against one probe of the
+  *    stored table.
   *    `… ON CONFLICT [(pk)] DO NOTHING | DO UPDATE SET … [WHERE …]`
   *    (SQLite UPSERT) rebinds via [[applyUpsert]], and a trailing
   *    `RETURNING expr, …` (SQLite 3.35) makes the DML statement emit
@@ -55,7 +60,7 @@ import graft.sources.Affinity
   *    constraints in CREATE TABLE, registered as auto-indexes) is a
   *    real enforced constraint: creation checks the existing rows,
   *    and INSERT / UPDATE / UPSERT honor it with sqlite3's
-  *    statement-order conflict semantics (see [[applyInsertRowwise]]).
+  *    statement-order conflict semantics (see [[insertWalk]]).
   *    Expression / COLLATE / partial UNIQUE indexes are enforced
   *    through evaluated keysets (the indexed expressions / WHERE
   *    predicate run through the same evaluator as the DML);
@@ -1272,9 +1277,7 @@ object ScriptDdl {
         // round-14 fuzz seed 10946: a WHEN NEW.a IS NOT NULL gate must
         // fire on the -1, not skip on NULL). The actual insert still
         // autoassigns.
-        val rowidIdx = tgt.schema.fields.indexWhere(f =>
-          f.metadata.contains(Affinity.PkKey) &&
-            f.metadata.getString(Affinity.PkKey) == "rowid")
+        val rowidIdx = rowidOf(tgt.schema).fold(-1)(tgt.schema.fieldIndex)
         def beforeRow(r: Row): Row =
           if (rowidIdx < 0 || !r.isNullAt(rowidIdx)) r
           else {
@@ -1377,9 +1380,7 @@ object ScriptDdl {
       // so building every intermediate state from the pre-statement
       // stage is observably exact for defined programs.
       val rowidScanCol: org.apache.spark.sql.Column =
-        target.schema.fields.find(f => f.metadata.contains(Affinity.PkKey) &&
-            f.metadata.getString(Affinity.PkKey) == "rowid")
-          .map(f => col(s"`${f.name}`").cast("long"))
+        rowidOf(target.schema).map(rc => col(s"`$rc`").cast("long"))
           .getOrElse(org.apache.spark.sql.functions.monotonically_increasing_id())
       val withTrig = anyTriggers(state, name, "UPDATE", assignedCols)
       val staged: Option[org.apache.spark.sql.DataFrame] =
@@ -1473,8 +1474,7 @@ object ScriptDdl {
         val schemaF = rebindTarget.schema
         val pkColsT = schemaF.fields
           .filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
-        val rowidT = schemaF.fields.find(f => f.metadata.contains(Affinity.PkKey) &&
-          f.metadata.getString(Affinity.PkKey) == "rowid").map(_.name)
+        val rowidT = rowidOf(schemaF)
         def touched(ks: Seq[String]) =
           ks.exists(c => assignedCols.exists(_.equalsIgnoreCase(c)))
         val keysets: Seq[Seq[String]] =
@@ -1646,9 +1646,7 @@ object ScriptDdl {
       // affected rows are UNDEFINED in sqlite, so the frozen
       // pre-statement stage is observably exact for defined programs.
       val delScanCol: org.apache.spark.sql.Column =
-        target.schema.fields.find(f => f.metadata.contains(Affinity.PkKey) &&
-            f.metadata.getString(Affinity.PkKey) == "rowid")
-          .map(f => col(s"`${f.name}`").cast("long"))
+        rowidOf(target.schema).map(rc => col(s"`$rc`").cast("long"))
           .getOrElse(org.apache.spark.sql.functions.monotonically_increasing_id())
       val stagedDel: Option[org.apache.spark.sql.DataFrame] =
         if (!anyTriggers(state, name, "DELETE", Nil)) None
@@ -2307,9 +2305,7 @@ object ScriptDdl {
         throw new IllegalArgumentException(s"NOT NULL constraint failed: $name.$c")
     val pkCols = schema.fields.filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
     if (pkCols.nonEmpty && pkCols.exists(isAssigned)) {
-      val rowid = schema.fields.find(f => f.metadata.contains(Affinity.PkKey) &&
-        f.metadata.getString(Affinity.PkKey) == "rowid").map(_.name)
-      for (rc <- rowid if isAssigned(rc))
+      for (rc <- rowidOf(schema) if isAssigned(rc))
         if (updated.where(col(s"`$rc`").isNull ||
             !col(s"`$rc`").cast("string").rlike(s"^${Affinity.IntRe}$$")).limit(1).count() > 0)
           throw new IllegalArgumentException("datatype mismatch")
@@ -2426,19 +2422,23 @@ object ScriptDdl {
     *    values with running-max semantics — VALUES (NULL),(100),(NULL)
     *    gets max+1, 100, 101 (sqlite3-pinned) — and rejects
     *    non-integral values with sqlite3's "datatype mismatch";
-    *  - pk duplicates error ("UNIQUE constraint failed: t.k"), or are
-    *    skipped (OR IGNORE: first batch occurrence wins) or displace
-    *    the stored row (REPLACE: last batch occurrence wins). NULL
-    *    keys never conflict on non-rowid pks (SQLite treats NULLs as
-    *    distinct);
+    *  - duplicates on the PRIMARY KEY or a UNIQUE index error
+    *    ("UNIQUE constraint failed: t.k"), or are skipped (OR IGNORE)
+    *    or displace the earlier holder (REPLACE), in statement order
+    *    ([[insertWalk]]). NULL key components never conflict (SQLite
+    *    treats them as distinct);
     *  - tables with a rowid alias rebind ordered by it: SQLite scans
     *    rowid tables in rowid order, so a SELECT without ORDER BY
     *    shows displaced/out-of-order keys in key order.
     *
-    * Constraint checks and autoassign run driver-side on the batch —
-    * the script DML surface is CLI-scoped (ScriptRunner already pumps
-    * every result through the driver), so the batch is bounded; tables
-    * with no declared constraints keep the pure-union fast path.
+    * Tables with no declared constraint keep the pure-union path.
+    * Every other batch takes one path: [[propose]] collects it to the
+    * driver once, and [[insertWalk]] walks it against one probe of the
+    * stored table. So every keyed table — rowid alias, TEXT or
+    * composite PRIMARY KEY, UNIQUE index — and every NOT NULL table
+    * holds its batch on the driver: the script DML surface is
+    * CLI-scoped (ScriptRunner already pumps every result through the
+    * driver).
     *
     * Returns (new table plan, inserted rows — what a RETURNING clause
     * reports: the full batch for plain INSERT and REPLACE — sqlite3
@@ -2446,315 +2446,259 @@ object ScriptDdl {
     * duplicate displaces it — but only actually-inserted rows under
     * OR IGNORE, both pinned). */
   private def applyInsert(
-      spark: SparkSession, name: String, target: org.apache.spark.sql.DataFrame,
-      aligned: org.apache.spark.sql.DataFrame, mode: String, state: State,
-      nnOverride: Option[String] = None)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{count => fCount, monotonically_increasing_id, row_number}
+      spark: SparkSession, name: String, target: DataFrame,
+      aligned: DataFrame, mode: String, state: State): (DataFrame, DataFrame) = {
+    val keysets = keysetsOf(state, name, target.schema)
+    if (keysets.isEmpty && !target.schema.exists(_.metadata.contains(Affinity.NotNullKey)))
+      (append(target, aligned), aligned)
+    else insertWalk(spark, name, target, propose(spark, name, target, aligned, mode),
+      keysets, mode)
+  }
 
+  /** Every enforced uniqueness keyset of `name`: its PRIMARY KEY, then
+    * one per UNIQUE index / constraint, plain column lists resolved to
+    * the schema's field case. */
+  private def keysetsOf(state: State, name: String, schema: StructType): Seq[KeySpec] = {
+    val pk = schema.fields.filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
+    def field(c: String) = schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(c)
+    (if (pk.nonEmpty) Seq(KeySpec.ofCols(name, pk)) else Nil) ++
+      uniqueKeysFor(state, name).map(ks =>
+        if (ks.isPlain) KeySpec.ofCols(name, ks.display.map(field)) else ks)
+  }
+
+  /** The table's `INTEGER PRIMARY KEY` rowid alias, if it has one. */
+  private def rowidOf(schema: StructType): Option[String] =
+    schema.fields.find(f => f.metadata.contains(Affinity.PkKey) &&
+      f.metadata.getString(Affinity.PkKey) == "rowid").map(_.name)
+
+  /** `df` in rowid order when the table has a rowid alias. */
+  private def ordered(schema: StructType, df: DataFrame): DataFrame =
+    rowidOf(schema).fold(df)(rc => df.orderBy(col(s"`$rc`").cast("long")))
+
+  /** Driver rows as a local relation of the stored schema; `withMeta`
+    * keeps the columns' declared-type metadata. */
+  private def localDf(spark: SparkSession, schema: StructType, rows: Seq[Row],
+      withMeta: Boolean = false): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(schema.fields.map(f =>
+      StructField(f.name, f.dataType, nullable = true,
+        if (withMeta) f.metadata else org.apache.spark.sql.types.Metadata.empty))))
+
+  private def withValue(r: Row, i: Int, v: Any): Row =
+    Row.fromSeq(r.toSeq.updated(i, v))
+
+  /** A proposed batch on the driver ([[propose]]): rows in the stored
+    * schema's types, and which rows had their rowid autoassigned. */
+  private final case class Proposed(rows: Array[Row], assigned: Array[Boolean])
+
+  /** The prelude of INSERT and UPSERT binding. The batch is collected
+    * once, aligned to the stored schema's types, and then:
+    *
+    *  - the rowid alias's datatype is checked on EVERY proposed row,
+    *    before the NOT NULL policy can drop one (round-14 fuzz seed
+    *    3316: OR IGNORE does not cover datatype mismatch — '12abc'
+    *    into an INTEGER PRIMARY KEY hard-errors even when the row
+    *    would also be NN-skipped); explicit keys store canonical
+    *    ("2.0" stores as 2);
+    *  - the NOT NULL policy applies ([[applyNotNullPolicy]]; the
+    *    rowid alias is exempt, its NULLs autoassign);
+    *  - each NULL rowid takes one more than the largest rowid so far,
+    *    stored or earlier in the batch, even when that largest is
+    *    negative (-5 → -4), 1 only when the table is empty
+    *    (sqlite3-pinned, fuzz seed 10). The stored-max scan runs only
+    *    when some rowid is NULL. */
+  private def propose(spark: SparkSession, name: String, target: DataFrame,
+      aligned: DataFrame, nnMode: String): Proposed = {
+    import org.apache.spark.sql.functions.{max => fMax}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
     val schema = target.schema
-    val pkCols = schema.fields.filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
-    val rowid = schema.fields
-      .find(f => f.metadata.contains(Affinity.PkKey) && f.metadata.getString(Affinity.PkKey) == "rowid")
-      .map(_.name)
-    val notNullCols = schema.fields.filter(_.metadata.contains(Affinity.NotNullKey)).map(_.name).toSeq
-    // UNIQUE-index keysets, resolved to the schema's field case
-    val uniqueKeys: Seq[KeySpec] = uniqueKeysFor(state, name).map { ks =>
-      if (!ks.isPlain) ks
-      else KeySpec.ofCols(name, ks.display.map(c =>
-        schema.fields.map(_.name).find(_.equalsIgnoreCase(c)).getOrElse(c)))
+    val rowid = rowidOf(schema)
+    val rcIdx = rowid.fold(-1)(schema.fieldIndex)
+    // the rowid column is LongType on ingest tables (anr) and
+    // StringType on script-created ones — store back in kind
+    def keyValue(n: Long): Any = schema(rcIdx).dataType match {
+      case LongType => java.lang.Long.valueOf(n)
+      case IntegerType => java.lang.Integer.valueOf(n.toInt)
+      case _ => n.toString
     }
-    if (pkCols.isEmpty && notNullCols.isEmpty && uniqueKeys.isEmpty)
-      return (append(target, aligned), aligned)
-
-    // align the batch to the stored schema's types so driver-side
-    // assignment and key comparison see the canonical stored text
-    val alignedT = aligned.select(
-      schema.fields.map(f => col(s"`${f.name}`").cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-
-    // sqlite validates the rowid alias's datatype BEFORE any conflict
-    // policy can drop the row (round-14 fuzz seed 3316: OR IGNORE
-    // does not cover datatype mismatch — '12abc' into an INTEGER
-    // PRIMARY KEY hard-errors even when the row would also be
-    // NN-skipped), so every proposed key is checked upfront
-    rowid.foreach(rc => validateRowidDatatype(alignedT, rc))
-
-    // rowid NULLs autoassign instead of NN-checking
-    val alignedNN = applyNotNullPolicy(
-      name, schema, alignedT, notNullCols.filterNot(rowid.contains),
-      nnOverride.getOrElse(mode))
-
-    var localRows: Option[Array[Row]] = None
-    val batch: DataFrame = rowid match {
-      case Some(rc) =>
-        val (df, rows) = autoassignRowid(spark, target, schema, rc, alignedNN)
-        localRows = Some(rows)
-        df
-      case _ => alignedNN
+    val collected = aligned.select(schema.fields.map(f =>
+      col(s"`${f.name}`").cast(f.dataType).as(f.name)).toIndexedSeq: _*).collect()
+    val checked = if (rcIdx < 0) collected else collected.map { r =>
+      if (r.isNullAt(rcIdx)) r
+      else {
+        val canon = Affinity.canonicalize(r.get(rcIdx).toString, "INTEGER")
+        val n = try java.lang.Long.parseLong(canon)
+          catch { case _: NumberFormatException =>
+            throw new IllegalArgumentException("datatype mismatch") }
+        withValue(r, rcIdx, keyValue(n))
+      }
     }
-
-    def order(df: DataFrame): DataFrame = rowid match {
-      case Some(rc) => df.orderBy(col(s"`$rc`").cast("long"))
-      case None => df
-    }
-
-    // UNIQUE indexes demand SQLite's statement-order semantics (a row
-    // skipped by one constraint never blocks a later row on another),
-    // which per-keyset set passes cannot reproduce — walk the batch
-    if (uniqueKeys.nonEmpty)
-      return applyInsertRowwise(spark, name, target, schema, batch,
-        (if (pkCols.nonEmpty) Seq(KeySpec.ofCols(name, pkCols)) else Nil) ++
-          uniqueKeys, mode, order)
-
-    if (pkCols.isEmpty) return (order(append(target, batch)), batch)
-
-    val keyNonNull = pkCols.map(c => col(s"`$c`").isNotNull).reduce(_ && _)
-    // pk equality compares NORMALIZED keys (round-15 fuzz seed 32811's
-    // class): int and real renderings of one numeric value are ONE
-    // key to sqlite on a no-affinity pk column
-    def cond(b: DataFrame, t: DataFrame) =
-      pkCols.map(c => uniqueKeyCol(b(c), schema(c)) === uniqueKeyCol(t(c), schema(c)))
-        .reduce(_ && _)
-
-    // Driver-resident fast path: the rowid walk above already pulled
-    // the batch onto the driver (and autoassign makes every key
-    // non-null), so pk enforcement needs no window/anti-join
-    // machinery — in-memory dup handling plus at most ONE probe of
-    // the stored table through a pushed-down IN filter — and the
-    // rebound plan stays filter+union over the previous binding
-    // instead of growing a join per statement (compounding: every
-    // later statement re-analyzes this plan). Batches past the
-    // threshold fall back to the set-based path below, whose jobs
-    // they amortize.
-    (localRows, rowid) match {
-      case (Some(rows), Some(rc))
-          if pkCols == Seq(rc) && rows.length <= MaxDriverProbeKeys =>
-        if (rows.isEmpty) return (order(target), batch.limit(0))
-        val rcIdx = schema.fieldIndex(rc)
-        val rcCol = col(s"`$rc`")
-        def localDf(rs: Array[Row]): DataFrame = spark.createDataFrame(
-          java.util.Arrays.asList(rs: _*),
-          StructType(schema.fields.map(f => StructField(f.name, f.dataType))))
-        /** keep one row per key: first occurrence (ignore) or last
-          * (replace) — sqlite3's in-batch resolution order */
-        def onePerKey(keepLast: Boolean): Array[Row] = {
-          val m = scala.collection.mutable.LinkedHashMap.empty[Any, Row]
-          for (r <- rows; k = r.get(rcIdx))
-            if (keepLast || !m.contains(k)) m(k) = r
-          m.values.toArray
+    val rows = applyNotNullPolicy(name, schema, checked, nnMode,
+      schema.fields.filter(_.metadata.contains(Affinity.NotNullKey))
+        .map(_.name).toSeq.filterNot(rowid.contains))
+    val assigned = rows.map(r => rcIdx >= 0 && r.isNullAt(rcIdx))
+    if (assigned.contains(true)) {
+      var max: Option[Long] =
+        target.select(fMax(col(s"`${rowid.get}`").cast("long"))).first() match {
+          case r if r.isNullAt(0) => None
+          case r => Some(r.getLong(0))
         }
-        return mode match {
-          case "abort" =>
-            val seen = scala.collection.mutable.HashSet.empty[Any]
-            for (r <- rows if !seen.add(r.get(rcIdx)))
-              throw new IllegalArgumentException(
-                s"UNIQUE constraint failed: $name.$rc")
-            if (target.where(rcCol.isin(rows.map(_.get(rcIdx)).toIndexedSeq: _*))
-                .limit(1).count() > 0)
-              throw new IllegalArgumentException(
-                s"UNIQUE constraint failed: $name.$rc")
-            (order(append(target, batch)), batch)
-          case "ignore" =>
-            val firstPer = onePerKey(keepLast = false)
-            val existing = target
-              .where(rcCol.isin(firstPer.map(_.get(rcIdx)).toIndexedSeq: _*))
-              .select(rcCol).collect().map(_.get(0)).toSet
-            val ins = localDf(firstPer.filterNot(r => existing(r.get(rcIdx))))
-            (order(append(target, ins)), ins)
-          case "replace" =>
-            val lastPer = onePerKey(keepLast = true)
-            // stored rowid keys are never null, so the negated IN
-            // cannot null-drop a kept row
-            (order(append(target
-              .where(!rcCol.isin(lastPer.map(_.get(rcIdx)).toIndexedSeq: _*)),
-              localDf(lastPer))), batch)
-        }
-      case _ => ()
+      for (i <- rows.indices) {
+        val n =
+          if (assigned(i)) max.fold(1L)(_ + 1L)
+          else rows(i).get(rcIdx).toString.toLong
+        if (assigned(i)) rows(i) = withValue(rows(i), rcIdx, keyValue(n))
+        max = Some(max.fold(n)(math.max(_, n)))
+      }
     }
+    Proposed(rows, assigned)
+  }
 
-    mode match {
-      case "abort" =>
-        val dupExisting = batch.where(keyNonNull)
-          .join(target, cond(batch, target), "left_semi").limit(1).count() > 0
-        val dupInternal = batch.where(keyNonNull)
-          .groupBy(pkCols.map(c =>
-            uniqueKeyCol(col(s"`$c`"), schema(c))): _*).agg(fCount(lit(1)).as("__n"))
-          .where(col("__n") > 1).limit(1).count() > 0
-        if (dupExisting || dupInternal)
-          throw new IllegalArgumentException(
-            "UNIQUE constraint failed: " + pkCols.map(c => s"$name.$c").mkString(", "))
-        (order(append(target, batch)), batch)
-
-      case "ignore" =>
-        val withRid = batch.withColumn("__gr_rid", monotonically_increasing_id())
-        val w = Window.partitionBy(pkCols.map(c =>
-          uniqueKeyCol(col(s"`$c`"), schema(c))): _*).orderBy(col("__gr_rid"))
-        val firstPer = withRid.where(keyNonNull)
-          .withColumn("__gr_rn", row_number().over(w)).where(col("__gr_rn") === 1)
-          .drop("__gr_rn")
-        val fresh = firstPer.join(target, cond(firstPer, target), "left_anti")
-          .drop("__gr_rid")
-        val nullKeyed = withRid.where(!keyNonNull).drop("__gr_rid")
-        (order(append(target, fresh.unionByName(nullKeyed))),
-          fresh.unionByName(nullKeyed))
-
-      case "replace" =>
-        val withRid = batch.withColumn("__gr_rid", monotonically_increasing_id())
-        val w = Window.partitionBy(pkCols.map(c =>
-          uniqueKeyCol(col(s"`$c`"), schema(c))): _*)
-          .orderBy(col("__gr_rid").desc)
-        val lastPer = withRid.where(keyNonNull)
-          .withColumn("__gr_rn", row_number().over(w)).where(col("__gr_rn") === 1)
-          .drop("__gr_rn", "__gr_rid")
-        val nullKeyed = withRid.where(!keyNonNull).drop("__gr_rid")
-        val kept = target.join(lastPer, cond(target, lastPer), "left_anti")
-        (order(append(kept, lastPer.unionByName(nullKeyed))), batch)
+  /** One keyset's key of a driver row, for a plain column keyset:
+    * the normalized texts ([[normKeyVal]]), None when a component is
+    * NULL. */
+  private def plainKey(schema: StructType, ks: KeySpec): Row => Option[Seq[String]] = {
+    val idx = ks.display.map(schema.fieldIndex)
+    val text = ks.exprs.indices.map(keyTextAffinity(schema, ks, _))
+    r => {
+      val k = idx.zip(text).map { case (i, t) => normKeyVal(r.get(i), t) }
+      if (k.contains(null)) None else Some(k)
     }
   }
 
-  /** Row-at-a-time INSERT enforcement for tables with UNIQUE indexes
-    * (plus their pk as one more keyset): exact SQLite semantics are
-    * statement-ordered — under OR IGNORE a row skipped by one
-    * constraint never enters any index, so it cannot block a later
-    * row on a different constraint, and under REPLACE every proposed
-    * row displaces stored/earlier rows on EVERY keyset at its turn —
-    * orderings that per-keyset set passes cannot reproduce. The batch
-    * is driver-resident (CLI-scoped like the rest of the DML
-    * constraint surface); storage is touched by ONE bounded key probe
-    * per keyset (single-column keys as a pushed-down IN filter,
-    * multi-column as a broadcast semi-join) plus, under REPLACE, one
-    * broadcast anti-join per keyset displacing stored conflictors.
-    * NULL keys never conflict (SQLite treats index NULLs as
-    * distinct). RETURNING rows: the inserted subset under OR IGNORE,
-    * the full proposed batch under REPLACE (both sqlite3-pinned). */
-  private def applyInsertRowwise(
-      spark: SparkSession, name: String, target: org.apache.spark.sql.DataFrame,
-      schema: StructType, batchDf: org.apache.spark.sql.DataFrame,
-      keysets: Seq[KeySpec], mode: String,
-      order: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.broadcast
-    val rows = batchDf.collect()
-    if (rows.isEmpty) return (order(target), batchDf.limit(0))
+  /** Each keyset's key of each proposed row: None when the row is not
+    * in the index (a NULL key component, or a partial index's WHERE
+    * excludes it), else the normalized key texts (numeric storage
+    * collapses: 100 == 100.0). Plain column keysets read the driver
+    * rows; expression, COLLATE and partial keysets evaluate together
+    * in one select over the batch. */
+  private def proposedKeys(spark: SparkSession, schema: StructType,
+      keysets: Seq[KeySpec], rows: Array[Row]): IndexedSeq[Array[Option[Seq[String]]]] = {
+    val evaluated = keysets.filterNot(_.isPlain)
     // metadata rides along so the affinity machinery sees the batch
     // side exactly like the stored side: a partial index's WHERE
     // (`a > 0` under INTEGER affinity) must rank a TEXT-storage 'x'
     // ABOVE the numerics — sqlite's comparison matrix — not coerce it
     // to NULL (round-10 fuzz seed 5141: the second 'x' row must hit
     // the partial UNIQUE index)
-    def localDf(rs: Seq[Row]): DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(rs: _*),
-      StructType(schema.fields.map(f =>
-        StructField(f.name, f.dataType, nullable = true, f.metadata))))
-    // Evaluate each keyset ONCE for the whole batch (round 7: keysets
-    // may be expressions / COLLATE folds / partial WHERE filters, not
-    // only columns): per row, None = the row is NOT in the index (a
-    // NULL key component, or the partial WHERE excludes it), else the
-    // normalized key texts (numeric storage collapses: 100 == 100.0).
-    val batchKeys: Seq[Array[Option[Seq[String]]]] = keysets.map { ks =>
-      val keyCols = ks.exprs.map(t => expr(t))
-      val wCol = ks.where.map(w => expr(w)).getOrElse(lit(true))
-      val sel = SqliteArith.fixup(spark,
-        localDf(rows.toSeq).select((keyCols :+ wCol).toIndexedSeq: _*))
-      sel.collect().map { r =>
-        val n = ks.exprs.size
-        val included = !r.isNullAt(n) && (r.get(n) match {
-          case b: Boolean => b
-          case other => // SQLite truthiness on a non-boolean WHERE
-            graft.functions.SqliteSum
-              .coerce(ScriptRunner.renderValue(other))._1 != 0.0
-        })
-        if (!included) None
-        else {
-          val vs = (0 until n).map(i =>
-            normKeyVal(r.get(i), keyTextAffinity(schema, ks, i)))
-          if (vs.contains(null)) None else Some(vs)
+    val evalRows =
+      if (evaluated.isEmpty) Array.empty[Row]
+      else SqliteArith.fixup(spark, localDf(spark, schema, rows.toSeq, withMeta = true)
+        .select(evaluated.flatMap(ks => ks.exprs.map(expr) :+ covered(ks)): _*)).collect()
+    val start = evaluated.zip(evaluated.scanLeft(0)(_ + _.exprs.size + 1)).toMap
+    keysets.map { ks =>
+      if (ks.isPlain) rows.map(plainKey(schema, ks))
+      else {
+        val (b, n) = (start(ks), ks.exprs.size)
+        val text = ks.exprs.indices.map(keyTextAffinity(schema, ks, _))
+        evalRows.map { r =>
+          val included = !r.isNullAt(b + n) && (r.get(b + n) match {
+            case bool: Boolean => bool
+            case other => // SQLite truthiness on a non-boolean WHERE
+              graft.functions.SqliteSum
+                .coerce(ScriptRunner.renderValue(other))._1 != 0.0
+          })
+          val k: Seq[String] = (0 until n).map(i => normKeyVal(r.get(b + i), text(i)))
+          if (!included || k.contains(null)) None else Some(k)
         }
       }
+    }.toIndexedSeq
+  }
+
+  /** The rows a keyset's index covers (a partial index's WHERE). */
+  private def covered(ks: KeySpec): org.apache.spark.sql.Column =
+    ks.where.map(expr).getOrElse(lit(true))
+
+  /** A stored row's normalized key on `ks`, as an array of texts. */
+  private def storedKey(schema: StructType, ks: KeySpec): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.array(ks.exprs.zipWithIndex.map { case (t, i) =>
+      normKeyCol(expr(t), keyTextAffinity(schema, ks, i)) }: _*)
+
+  /** True for a stored row the index of `ks` holds under one of `keys`. */
+  private def storedHit(schema: StructType, ks: KeySpec,
+      keys: Seq[Seq[String]]): org.apache.spark.sql.Column =
+    covered(ks) && storedKey(schema, ks).isin(keys.map(k =>
+      org.apache.spark.sql.functions.array(k.map(lit): _*)): _*)
+
+  /** One scan of `target` answering every keyset's collisions: per
+    * keyset `j`, the stored keys equal to one of `probe(j)`. No job
+    * when nothing is probed. */
+  private def storedKeys(spark: SparkSession, target: DataFrame,
+      keysets: Seq[KeySpec], probe: IndexedSeq[Seq[Seq[String]]])
+      : IndexedSeq[collection.mutable.Set[Seq[String]]] = {
+    val out = keysets.map(_ => collection.mutable.HashSet.empty[Seq[String]]).toIndexedSeq
+    val live = keysets.indices.filter(probe(_).nonEmpty)
+    if (live.isEmpty) return out
+    val hits = live.map(j => when(storedHit(target.schema, keysets(j), probe(j)),
+      storedKey(target.schema, keysets(j))).as(s"__p$j"))
+    val sel = SqliteArith.fixup(spark, target.select(hits: _*)
+      .where(live.map(j => col(s"__p$j").isNotNull).reduce(_ || _)))
+    // codegen-size policy: the key expressions stack on the stored
+    // chain (see checkExistingUniqueSpec)
+    for (r <- withCodegenPolicy(spark, sel)(sel.collect()); (j, c) <- live.zipWithIndex
+        if !r.isNullAt(c))
+      out(j) += r.getSeq[String](c).toVector
+    out
+  }
+
+  /** The statement-order conflict walk of a keyed INSERT (and of a
+    * multi-constraint UPSERT DO NOTHING) over `keysets` ([[keysetsOf]]).
+    * SQLite checks each proposed row against every keyset at its turn:
+    * under OR IGNORE a row skipped by one constraint never enters any
+    * index, so it cannot block a later row on another, and under
+    * REPLACE every proposed row displaces stored and earlier rows on
+    * EVERY keyset — orderings per-keyset set passes cannot reproduce.
+    * Storage is touched by one probe ([[storedKeys]]) for the explicit
+    * keys: an autoassigned rowid is larger than every stored one, so a
+    * plain keyset holding the rowid never probes that row. Under
+    * REPLACE one filter over the stored plan drops the rows the probe
+    * found. RETURNING rows: the full batch under plain INSERT and
+    * REPLACE, the inserted subset under OR IGNORE (sqlite3-pinned). */
+  private def insertWalk(spark: SparkSession, name: String, target: DataFrame,
+      p: Proposed, keysets: Seq[KeySpec], mode: String): (DataFrame, DataFrame) = {
+    val schema = target.schema
+    val rows = p.rows
+    val batch = localDf(spark, schema, rows.toSeq)
+    if (rows.isEmpty) return (ordered(schema, target), batch)
+    val keys = proposedKeys(spark, schema, keysets, rows)
+    val rowid = rowidOf(schema)
+    val probe = keysets.indices.map { j =>
+      val skipAssigned = keysets(j).isPlain && rowid.exists(keysets(j).display.contains)
+      rows.indices.filterNot(i => skipAssigned && p.assigned(i)).flatMap(keys(j)(_)).distinct
     }
-    /** batch keys already present in storage, one bounded probe per
-      * keyset (partial indexes filter the stored side by their WHERE
-      * before probing) */
-    def storedKeys(ks: KeySpec, bk: Array[Option[Seq[String]]])
-        : collection.mutable.Set[Seq[String]] = {
-      val out = collection.mutable.HashSet.empty[Seq[String]]
-      val keys = bk.flatten.distinct
-      if (keys.isEmpty) return out
-      var df = target
-      ks.where.foreach(w => df = df.where(expr(w)))
-      val keyCols = ks.exprs.zipWithIndex.map { case (t, i) =>
-        normKeyCol(expr(t), keyTextAffinity(schema, ks, i)).as(s"__k$i") }
-      var sel = SqliteArith.fixup(spark, df.select(keyCols.toIndexedSeq: _*))
-      if (ks.exprs.lengthCompare(1) == 0)
-        sel = sel.where(col("__k0").isin(keys.map(_.head).toIndexedSeq: _*))
-      // codegen-size policy: the key expressions stack on the stored
-      // chain (see checkExistingUniqueSpec)
-      out ++= withCodegenPolicy(spark, sel)(sel.collect()).flatMap { r =>
-        val vs = ks.exprs.indices.map(i =>
-          Option(r.get(i)).map(_.toString).orNull)
-        if (vs.contains(null)) None else Some(vs)
-      }.filter(keys.toSet)
-      out
-    }
+    val stored = storedKeys(spark, target, keysets, probe)
+    def rowKeys(i: Int) = keysets.indices.flatMap(j => keys(j)(i).map(j -> _))
     mode match {
       case "abort" =>
-        val seen = keysets.zip(batchKeys).map { case (ks, bk) =>
-          (ks, bk, storedKeys(ks, bk)) }
-        for (i <- rows.indices; (ks, bk, s) <- seen; k <- bk(i)) {
-          if (s.contains(k)) uniqueErrText(ks.errText)
-          s += k
+        for (i <- rows.indices; (j, k) <- rowKeys(i)) {
+          if (stored(j).contains(k)) uniqueErrText(keysets(j).errText)
+          stored(j) += k
         }
-        (order(append(target, batchDf)), batchDf)
+        (ordered(schema, append(target, batch)), batch)
       case "ignore" =>
-        val seen = keysets.zip(batchKeys).map { case (ks, bk) =>
-          bk -> storedKeys(ks, bk) }
-        val kept = collection.mutable.ArrayBuffer.empty[Row]
-        for (i <- rows.indices) {
-          val keys = seen.map { case (bk, s) => (bk(i), s) }
-          if (!keys.exists { case (k, s) => k.exists(s.contains) }) {
-            kept += rows(i)
-            for ((k, s) <- keys; kk <- k) s += kk
-          }
+        val kept = rows.indices.filter { i =>
+          val fresh = rowKeys(i).forall { case (j, k) => !stored(j).contains(k) }
+          if (fresh) for ((j, k) <- rowKeys(i)) stored(j) += k
+          fresh
         }
-        val ins = localDf(kept.toSeq)
-        (order(append(target, ins)), ins)
+        val ins = localDf(spark, schema, kept.map(rows(_)))
+        (ordered(schema, append(target, ins)), ins)
       case "replace" =>
-        // every proposed row inserts at its turn; later rows displace
-        // earlier batch inserts sharing a key on any keyset …
-        val kept = collection.mutable.ArrayBuffer.empty[Int]
-        for (i <- rows.indices) {
-          val keys = batchKeys.map(bk => bk(i))
-          kept.filterInPlace(pi => !keys.zip(batchKeys).exists {
-            case (Some(k), bk) => bk(pi).contains(k)
-            case _ => false
-          })
-          kept += i
-        }
-        // … and stored rows conflicting with ANY proposed row were
-        // displaced at that row's turn (even when the proposed row
-        // was itself displaced later in the batch). Partial indexes
-        // displace only rows their WHERE covers.
-        var stored = target
-        for ((ks, bk) <- keysets.zip(batchKeys)) {
-          val keys = bk.flatten.distinct
-          if (keys.nonEmpty) {
-            val kSchema = StructType(ks.exprs.indices.map(i =>
-              StructField(s"__k$i", StringType)))
-            val kdf = spark.createDataFrame(
-              java.util.Arrays.asList(keys.map(Row.fromSeq): _*), kSchema)
-            val keyMatch = ks.exprs.zipWithIndex
-              .map { case (t, i) =>
-                normKeyCol(expr(t), keyTextAffinity(schema, ks, i)) === kdf(s"__k$i") }
-              .reduce(_ && _)
-            val covered = ks.where.map(w => expr(w)).getOrElse(lit(true))
-            stored = SqliteArith.fixup(spark, stored.join(broadcast(kdf),
-              keyMatch && covered, "left_anti"))
-          }
-        }
-        (order(append(stored, localDf(kept.toSeq.map(rows(_))))), batchDf)
+        // every proposed row inserts at its turn and displaces the
+        // earlier holder of each of its keys, on any keyset …
+        val displaced = new Array[Boolean](rows.length)
+        val holder = keysets.map(_ => collection.mutable.HashMap.empty[Seq[String], Int])
+        for (i <- rows.indices; (j, k) <- rowKeys(i))
+          holder(j).put(k, i).foreach(displaced(_) = true)
+        // … and stored rows holding a key of ANY proposed row were
+        // displaced at that row's turn (even when the proposed row was
+        // itself displaced later in the batch)
+        val hit = keysets.indices.filter(stored(_).nonEmpty)
+          .map(j => storedHit(schema, keysets(j), stored(j).toSeq))
+        val survivors =
+          if (hit.isEmpty) target
+          else SqliteArith.fixup(spark, target.where(!coalesce(hit.reduce(_ || _), lit(false))))
+        (ordered(schema, append(survivors,
+          localDf(spark, schema, rows.indices.filterNot(displaced).map(rows(_))))), batch)
     }
   }
 
@@ -2783,81 +2727,51 @@ object ScriptDdl {
     * conflict rows actually updated — DO-NOTHING skips excluded,
     * sqlite3-pinned). */
   private def applyUpsert(
-      spark: SparkSession, name: String, target: org.apache.spark.sql.DataFrame,
-      aligned: org.apache.spark.sql.DataFrame, up: UpsertSpec, nnMode: String,
-      state: State)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame, Seq[(Option[Row], Option[Row])],
-         Seq[String]) = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{max => fMax, monotonically_increasing_id, row_number}
-
+      spark: SparkSession, name: String, target: DataFrame,
+      aligned: DataFrame, up: UpsertSpec, nnMode: String, state: State)
+      : (DataFrame, DataFrame, DataFrame, Seq[(Option[Row], Option[Row])], Seq[String]) = {
     val schema = target.schema
-    val pkColsAll = schema.fields.filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
-    val uniqueKeys: Seq[Seq[String]] =
-      uniqueKeysFor(state, name).filter(_.isPlain).map(_.display.map(c =>
-        schema.fields.map(_.name).find(_.equalsIgnoreCase(c)).getOrElse(c)))
-    val allKs = (if (pkColsAll.nonEmpty) Seq(pkColsAll) else Nil) ++ uniqueKeys
+    val keysets = keysetsOf(state, name, schema)
+    val allKs = keysets.filter(_.isPlain).map(_.display)
     def noPkMatch: Nothing = throw new IllegalArgumentException(
       "ON CONFLICT clause does not match any PRIMARY KEY or UNIQUE constraint")
     if (allKs.isEmpty) noPkMatch
     // resolve the conflict target to ONE uniqueness keyset; with no
     // target, sqlite3 handles any constraint — exact when only one
     // exists; multi-constraint DO NOTHING ≡ OR-IGNORE uniqueness
-    // (routed to the row-at-a-time walk), multi-constraint DO UPDATE
-    // is rejected (which stored row to update is per-row ambiguous)
+    // (the statement-order walk), multi-constraint DO UPDATE is
+    // rejected (which stored row to update is per-row ambiguous)
     val pkCols: Seq[String] = up.targetCols match {
       case Some(tc) =>
         allKs.find(ks => tc.map(_.toLowerCase).toSet == ks.map(_.toLowerCase).toSet)
           .getOrElse(noPkMatch)
       case None if allKs.lengthCompare(1) == 0 => allKs.head
       case None if up.set.isEmpty =>
-        val (t, a) = applyInsert(spark, name, target, aligned, "ignore", state,
-          nnOverride = Some(nnMode))
+        val (t, a) = insertWalk(spark, name, target,
+          propose(spark, name, target, aligned, nnMode), keysets, "ignore")
         return (t, a, a, Nil, Nil)
       case None => throw new UnsupportedOperationException(
         "ON CONFLICT DO UPDATE without a conflict target is not supported " +
           "when multiple uniqueness constraints exist")
     }
-    val rowid = schema.fields
-      .find(f => f.metadata.contains(Affinity.PkKey) && f.metadata.getString(Affinity.PkKey) == "rowid")
-      .map(_.name)
-    val alignedT = aligned.select(
-      schema.fields.map(f => col(s"`${f.name}`").cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    // upfront rowid datatype check, before the NN policy can drop the
-    // row (round-14 fuzz seed 3316 — see applyInsert)
-    rowid.foreach(rc => validateRowidDatatype(alignedT, rc))
-    val alignedNN = applyNotNullPolicy(
-      name, schema, alignedT,
-      schema.fields.filter(_.metadata.contains(Affinity.NotNullKey)).map(_.name).toSeq
-        .filterNot(rowid.contains),
-      nnMode)
-    val batch: DataFrame = rowid match {
-      case Some(rc) => autoassignRowid(spark, target, schema, rc, alignedNN)._1
-      case _ => alignedNN
+    // occurrence rounds: the k-th occurrence of each key goes to round
+    // k. Keys compare NORMALIZED (seed 32811's class): batch rows
+    // proposing 100 and 100.0 for a no-affinity key are ONE key. NULL
+    // keys never conflict (SQLite treats NULLs as distinct) — those
+    // rows always insert fresh.
+    val keyOf = plainKey(schema, KeySpec.ofCols(name, pkCols))
+    val seen = collection.mutable.HashMap.empty[Seq[String], Int]
+    val rounds = collection.mutable.ArrayBuffer.empty[collection.mutable.ArrayBuffer[Row]]
+    val nullRows = collection.mutable.ArrayBuffer.empty[Row]
+    for (r <- propose(spark, name, target, aligned, nnMode).rows) keyOf(r) match {
+      case None => nullRows += r
+      case Some(k) =>
+        val occ = seen.getOrElse(k, 0)
+        seen(k) = occ + 1
+        if (rounds.length == occ) rounds += collection.mutable.ArrayBuffer.empty[Row]
+        rounds(occ) += r
     }
-    def order(df: DataFrame): DataFrame = rowid match {
-      case Some(rc) => df.orderBy(col(s"`$rc`").cast("long"))
-      case None => df
-    }
-    val keyNonNull = pkCols.map(c => col(s"`$c`").isNotNull).reduce(_ && _)
-    // NULL pks never conflict (SQLite treats NULLs as distinct) —
-    // those rows always insert fresh
-    val withRid = batch.withColumn("__gr_rid", monotonically_increasing_id())
-    val nullKeyed = withRid.where(!keyNonNull).drop("__gr_rid")
-    val keyed = withRid.where(keyNonNull)
-    // occupancy groups by NORMALIZED key (seed 32811's class): batch
-    // rows proposing 100 and 100.0 for a no-affinity key are ONE key
-    val w = Window.partitionBy(pkCols.map(c =>
-      uniqueKeyCol(col(s"`$c`"), schema(c))): _*).orderBy(col("__gr_rid"))
-    val withOcc = keyed.withColumn("__gr_occ", row_number().over(w))
-    // one small driver-side agg per statement — CLI-scoped, like the
-    // rest of the DML constraint surface
-    val maxOcc: Int = withOcc.agg(fMax(col("__gr_occ"))).first() match {
-      case r if r.isNullAt(0) => 0
-      case r => r.getInt(0)
-    }
+    val nullKeyed = localDf(spark, schema, nullRows.toSeq)
     // DO-UPDATE rows fire the UPDATE trigger chain (round-13 fuzz
     // seed 1856 — sqlite treats the upsert's update arm as an UPDATE
     // for trigger purposes; BEFORE INSERT already fired for every
@@ -2875,10 +2789,9 @@ object ScriptDdl {
     val insParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val updPairs =
       scala.collection.mutable.ArrayBuffer.empty[(Option[Row], Option[Row])]
-    for (round <- 1 to maxOcc) {
-      val p = withOcc.where(col("__gr_occ") === round).drop("__gr_occ", "__gr_rid")
-      val (next, freshRows, updRows, pairs) =
-        upsertRound(name, cur, p, up, schema, pkCols, wantUpdTrig)
+    for (round <- rounds) {
+      val (next, freshRows, updRows, pairs) = upsertRound(name, cur,
+        localDf(spark, schema, round.toSeq), up, schema, pkCols, wantUpdTrig)
       if (pairs.nonEmpty) {
         fireTriggers(spark, state, name, "BEFORE", "UPDATE", updAssigned,
           schema, pairs)
@@ -2909,9 +2822,8 @@ object ScriptDdl {
     // (the conflict target can only resolve to a PLAIN keyset here,
     // so evaluated keysets are never the absorbing target)
     for (ks <- allKs if ks != pkCols) checkExistingUnique(cur, name, ks)
-    for (ks <- uniqueKeysFor(state, name) if !ks.isPlain)
-      checkExistingUniqueSpec(spark, cur, ks)
-    (order(cur), retParts.reduce(_ unionByName _),
+    for (ks <- keysets if !ks.isPlain) checkExistingUniqueSpec(spark, cur, ks)
+    (ordered(schema, cur), retParts.reduce(_ unionByName _),
       insParts.reduce(_ unionByName _), updPairs.toSeq, updAssigned)
   }
 
@@ -2991,55 +2903,34 @@ object ScriptDdl {
     }
   }
 
-  /** Per-mode NOT NULL policy over an incoming batch (sqlite3-pinned):
+  /** Per-mode NOT NULL policy over a proposed batch (sqlite3-pinned):
     * plain INSERT aborts on a NULL in a NOT NULL column; OR IGNORE
     * silently drops the violating row; OR REPLACE substitutes the
     * column's DEFAULT and aborts only when the column has none. The
     * check runs on the PROPOSED row before any conflict handling
     * (also pinned: an upsert errors even when the row's pk conflict
-    * would have been resolved by DO NOTHING). */
-  private def applyNotNullPolicy(
-      name: String, schema: StructType, alignedT: org.apache.spark.sql.DataFrame,
-      nnCheck: Seq[String], mode: String): org.apache.spark.sql.DataFrame = {
-    if (nnCheck.isEmpty) return alignedT
-    def abortOnNull(cols: Seq[String]): Unit = if (cols.nonEmpty) {
-      val bad = alignedT
-        .where(cols.map(c => col(s"`$c`").isNull).reduce(_ || _)).limit(1).collect()
-      if (bad.nonEmpty) {
-        val c = cols.find(c => bad(0).isNullAt(alignedT.columns.indexOf(c))).get
-        throw new IllegalArgumentException(s"NOT NULL constraint failed: $name.$c")
-      }
-    }
+    * would have been resolved by DO NOTHING). NOT NULL columns are
+    * declared ones (CREATE TABLE, ADD COLUMN), stored as text, so a
+    * DEFAULT fills as its text. */
+  private def applyNotNullPolicy(name: String, schema: StructType, rows: Array[Row],
+      mode: String, nnCheck: Seq[String]): Array[Row] = {
+    val idx = nnCheck.map(schema.fieldIndex)
+    def abortOnNull(cols: Seq[Int]): Unit =
+      rows.iterator.flatMap(r => cols.find(r.isNullAt)).nextOption().foreach(i =>
+        throw new IllegalArgumentException(s"NOT NULL constraint failed: $name.${schema(i).name}"))
     mode match {
-      case "ignore" =>
-        alignedT.where(nnCheck.map(c => col(s"`$c`").isNotNull).reduce(_ && _))
+      case "ignore" => rows.filterNot(r => idx.exists(r.isNullAt))
       case "replace" =>
-        val (withDflt, noDflt) =
-          nnCheck.partition(c => schema(c).metadata.contains(DefaultKey))
+        val (withDflt, noDflt) = idx.partition(schema(_).metadata.contains(DefaultKey))
         abortOnNull(noDflt)
-        withDflt.foldLeft(alignedT)((df, c) => df.withColumn(c,
-          coalesce(col(s"`$c`"),
-            lit(schema(c).metadata.getString(DefaultKey)).cast(schema(c).dataType))))
+        rows.map(r => withDflt.foldLeft(r)((acc, i) =>
+          if (acc.isNullAt(i)) withValue(acc, i, schema(i).metadata.getString(DefaultKey))
+          else acc))
       case _ =>
-        abortOnNull(nnCheck)
-        alignedT
+        abortOnNull(idx)
+        rows
     }
   }
-
-  /** sqlite's upfront rowid-alias datatype check: every non-NULL
-    * proposed key must canonicalize to an integer, under EVERY
-    * conflict mode and before any row-dropping policy runs (round-14
-    * fuzz seed 3316 — see the applyInsert call site). */
-  private def validateRowidDatatype(
-      batch: org.apache.spark.sql.DataFrame, rc: String): Unit =
-    batch.select(col(s"`$rc`")).collect().foreach { r =>
-      if (!r.isNullAt(0)) {
-        val canon = Affinity.canonicalize(r.get(0).toString, "INTEGER")
-        try java.lang.Long.parseLong(canon)
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException("datatype mismatch") }
-      }
-    }
 
   /** `stored ∪ rows` by name: a table's new binding after an INSERT.
     * A stored plan that is one partition (a one-split loaded table)
@@ -3051,64 +2942,6 @@ object ScriptDdl {
     val all = stored.unionByName(rows)
     if (stored.queryExecution.sparkPlan.outputPartitioning == SinglePartition) all.coalesce(1)
     else all
-  }
-
-  /** The rowid-alias autoassign walk, shared by INSERT and UPSERT
-    * binding: each NULL key takes one more than the largest key seen
-    * so far (stored or earlier in the batch — sqlite3-pinned);
-    * explicit keys are canonicalized ("2.0" stores as 2) and
-    * validated integral ("datatype mismatch" otherwise, under EVERY
-    * conflict mode — pinned). The stored-max scan is lazy: a batch
-    * with no NULL keys never pays the job. Driver-side by design —
-    * the script DML surface is CLI-scoped. */
-  private def autoassignRowid(
-      spark: SparkSession, target: org.apache.spark.sql.DataFrame,
-      schema: StructType, rc: String, alignedNN: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Array[Row]) = {
-    import org.apache.spark.sql.functions.{max => fMax}
-    val rcIdx = schema.fieldIndex(rc)
-    // the rowid column is LongType on ingest tables (anr) and
-    // StringType on script-created ones — store back in kind
-    def keyValue(n: Long): Any = schema(rcIdx).dataType match {
-      case org.apache.spark.sql.types.LongType => java.lang.Long.valueOf(n)
-      case org.apache.spark.sql.types.IntegerType => java.lang.Integer.valueOf(n.toInt)
-      case _ => n.toString
-    }
-    lazy val storedMax: Option[Long] =
-      target.select(fMax(col(s"`$rc`").cast("long"))).first() match {
-        case r if r.isNullAt(0) => None
-        case r => Some(r.getLong(0))
-      }
-    // max over stored rowids (once needed) + keys from this batch
-    var batchMax: Option[Long] = None
-    def note(n: Long): Unit =
-      batchMax = Some(batchMax.fold(n)(math.max(_, n)))
-    val out = alignedNN.collect().map { r =>
-      val vals = Array.tabulate[Any](schema.length)(r.get)
-      vals(rcIdx) match {
-        case null =>
-          // sqlite3-pinned (fuzz seed 10): one more than the LARGEST
-          // rowid currently in the table — stored or earlier in this
-          // batch — even when that largest is NEGATIVE (-5 → -4);
-          // 1 only when the table is truly empty
-          val next = (batchMax.toSeq ++ storedMax.toSeq)
-            .reduceOption(math.max(_: Long, _: Long))
-            .map(_ + 1L).getOrElse(1L)
-          note(next); vals(rcIdx) = keyValue(next)
-        case v =>
-          val canon = Affinity.canonicalize(v.toString, "INTEGER")
-          val n =
-            try java.lang.Long.parseLong(canon)
-            catch { case _: NumberFormatException =>
-              throw new IllegalArgumentException("datatype mismatch") }
-          vals(rcIdx) = keyValue(n)
-          note(n)
-      }
-      Row.fromSeq(vals.toIndexedSeq)
-    }
-    (spark.createDataFrame(
-      java.util.Arrays.asList(out: _*),
-      StructType(schema.fields.map(f => StructField(f.name, f.dataType)))), out)
   }
 
   /** Rewrite an inline `VALUES (…),(…)` body with every scalar cast
@@ -3314,9 +3147,7 @@ object ScriptDdl {
       target: org.apache.spark.sql.DataFrame,
       rows: org.apache.spark.sql.DataFrame,
       text: String): org.apache.spark.sql.DataFrame = {
-    val rowidAlias = target.schema.fields
-      .find(f => f.metadata.contains(Affinity.PkKey) &&
-        f.metadata.getString(Affinity.PkKey) == "rowid").map(_.name)
+    val rowidAlias = rowidOf(target.schema)
     val AsRe = """(?is)^(.+?)\s+as\s+[`"]?(\w+)[`"]?\s*$""".r
     val cols = splitTopLevel(text).map(_.trim).filter(_.nonEmpty).flatMap {
       case "*" => target.columns.toSeq.map(c => col(s"`$c`"))

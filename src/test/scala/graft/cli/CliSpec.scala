@@ -2275,13 +2275,17 @@ class CliSpec extends SparkSpec {
     }
   }
 
-  test("an error prints as one line, without the analyzed plan") {
+  /** [[sqawk]] plus the lines it printed to stderr. */
+  private def sqawkErr(args: String*): (Int, String, Seq[String]) = {
     val buf = new java.io.ByteArrayOutputStream
     val saved = System.err
     System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-    val code = try sqawk("select nosuch from a", tempFile(grid))._1
-      finally System.setErr(saved)
-    val lines = buf.toString("UTF-8").linesIterator.toSeq
+    val (code, out) = try sqawk(args: _*) finally System.setErr(saved)
+    (code, out, buf.toString("UTF-8").linesIterator.toSeq)
+  }
+
+  test("an error prints as one line, without the analyzed plan") {
+    val (code, _, lines) = sqawkErr("select nosuch from a", tempFile(grid))
     assert(code == 1)
     assert(lines.size == 1, lines.mkString("\n"))
     assert(lines.head.startsWith("error: [UNRESOLVED_COLUMN"), lines.head)
@@ -2303,6 +2307,25 @@ class CliSpec extends SparkSpec {
     assert(jobs == 2)
   }
 
+  test("a one-row INSERT into a loaded table collects its batch once and probes storage once") {
+    val f = tempFile("id\tname\tqty\tprice\n" +
+      (1 to 3000).map(i => s"$i\tn${i % 17}\t${i % 50}\t${i % 999 + 1}\n").mkString)
+    def jobs(script: String): Int = {
+      val (out, n) = org.apache.spark.JobCounter.count(spark.sparkContext)(
+        sqawk(script, "header=1", "FS=\t", f))
+      assert(out == (0, "3001\n"), script)
+      n
+    }
+    val ins = "insert into a (id, name, qty, price) values (3001, 'zz', 7, 1000); "
+    // the load's stats job, then the count: 2 jobs without the INSERT.
+    // The INSERT adds the batch collect and the stored max(anr) for
+    // its autoassigned rowid; the rowid is never probed.
+    assert(jobs(ins + "select count(*) from a") == 4)
+    // CREATE UNIQUE INDEX checks the stored rows (1 job); the INSERT
+    // adds one probe of the stored ids on top of the two above
+    assert(jobs(s"create unique index i on a(id); ${ins}select count(*) from a") == 6)
+  }
+
   test("EXPLAIN QUERY PLAN answers with the formatted plan") {
     val (c, o) = sqawk("explain query plan select a1 from a where a2 > 1", tempFile(grid))
     assert(c == 0 && o.contains("Physical Plan"))
@@ -2316,5 +2339,51 @@ class CliSpec extends SparkSpec {
       md5, "FS=\t", du)
     assert(c == 0)
     assert(o == "d41d8cd98f00b204e9800998ecf8427e 0\nc157a79031e1c40f85931829bc5fc552 4096\n")
+  }
+
+  test("keyed INSERT … SELECT of 1200 rows with duplicate keys (sqlite3-pinned)") {
+    // a1 = i, a2 = 'r' || i for i in 1..1200; the proposed keys repeat
+    // (and hold NULLs on the TEXT and composite keys), and each table
+    // stores one row that the batch conflicts with
+    val f = tempFile((1 to 1200).map(i => s"$i r$i\n").mkString)
+    val fin = "select count(*), count(distinct v), sum(substr(v, 2)), min(v), max(v) from t"
+    // (setup, proposed key columns, error key, rows OR IGNORE inserts,
+    //  final contents after OR IGNORE, after OR REPLACE)
+    val cases = Seq(
+      ("create table t (k integer primary key, v); " +
+        "insert into t values (5, 'r9005'), (1150, 'r9150')",
+        "a1 % 1100", "t.k", (i: Int) => i <= 1100 && i != 5,
+        "1101 1101 623700 r1 r999", "1101 1101 724700 r1000 r999"),
+      ("create table t (k text primary key, v); " +
+        "insert into t values ('k5', 'r9005'), (NULL, 'r9000')",
+        "case when a1 % 100 = 0 then null else 'k' || (a1 % 1100) end", "t.k",
+        (i: Int) => i % 100 == 0 || (i < 1100 && i != 5),
+        "1102 1102 624750 r1 r999", "1102 1102 724650 r100 r999"),
+      ("create table t (a, b, v, primary key (a, b)); " +
+        "insert into t values (3, 10, 'r9003'), (1, NULL, 'r9001')",
+        "a1 % 7, case when a1 % 50 = 0 then null else a1 % 150 end", "t.a, t.b",
+        (i: Int) => i % 50 == 0 || (i <= 1050 && i != 10),
+        "1054 1054 573219 r1 r999", "1054 1054 718576 r100 r999"))
+    for ((setup, keys, errKey, ignored, afterIgnore, afterReplace) <- cases) {
+      val ins = s"into t select $keys, a2 from a"
+      def returned(script: String): (Seq[Int], String) = {
+        val (c, o) = sqawk(s"$setup; insert $script returning v; $fin", f)
+        assert(c == 0, script)
+        val lines = o.linesIterator.toSeq
+        (lines.init.map(_.stripPrefix("r").toInt).sorted, lines.last)
+      }
+      freshTables("t") {
+        assert(returned(s"or ignore $ins") ==
+          ((1 to 1200).filter(ignored), afterIgnore), setup)
+      }
+      freshTables("t") {
+        assert(returned(s"or replace $ins") == ((1 to 1200), afterReplace), setup)
+      }
+      // the stored conflict and, on a fresh table, the in-batch one
+      for (pre <- Seq(setup, setup.takeWhile(_ != ';'))) freshTables("t") {
+        assert(sqawkErr(s"$pre; insert $ins; select 1", f) ==
+          ((1, "", Seq(s"error: UNIQUE constraint failed: $errKey"))), pre)
+      }
+    }
   }
 }

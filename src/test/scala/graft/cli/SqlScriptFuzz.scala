@@ -71,6 +71,10 @@ import org.apache.spark.sql.SparkSession
   * draws come from a second Random seeded from the seed, so the
   * statements are those the seed drew before comments existed.
   *
+  * Non-rowid primary keys: a quarter of the tables without an
+  * `INTEGER PRIMARY KEY` declare a composite `PRIMARY KEY (a, b)`
+  * table constraint, drawn from a third Random for the same reason.
+  *
   * Loaded table: each seed also writes a small awk file of mixed
   * integer, real and text fields (some lines short or empty) and
   * loads it through `GraftSession.loadAll` as table `a`, the sqawk
@@ -287,7 +291,17 @@ object SqlScriptFuzz {
       if (pkIdx.isEmpty && rnd.nextInt(5) == 0)
         s", UNIQUE (${cols(1 + rnd.nextInt(cols.size - 1)).name})"
       else ""
-    stmts += s"${cm("CREATE TABLE t1")} (${cm(colDefs.mkString(", ") + tableConstraint)})"
+    // a composite PRIMARY KEY (a, b): a non-rowid key whose components
+    // may be NULL and may hold any affinity. Its draw comes from its
+    // own stream, so the statements `rnd` yields are those the seed
+    // drew before the arm existed; the seed is spread first, since the
+    // first draws of java.util.Random for nearby seeds agree. The
+    // ALTER arm below only drops or renames the last column (index
+    // >= 2), never a key column.
+    val compositePk =
+      pkIdx.isEmpty && new Random(seed * 0x9e3779b97f4a7c15L).nextInt(4) == 0
+    val pkConstraint = if (compositePk) ", PRIMARY KEY (a, b)" else ""
+    stmts += s"${cm("CREATE TABLE t1")} (${cm(colDefs.mkString(", ") + tableConstraint)}$pkConstraint)"
 
     // --- initial INSERTs -------------------------------------------
     val nIns = 2 + rnd.nextInt(3)

@@ -45,7 +45,10 @@ import graft.sources.Affinity
   *    every assignment evaluates against the OLD row (sqlite3-pinned:
   *    `SET a = a+100, b = a+1` uses the pre-update `a` in both), which
   *    a single SELECT projection gives for free. When one column is
-  *    assigned twice, the rightmost assignment wins (SQLite rule);
+  *    assigned twice, the rightmost assignment wins (SQLite rule). An
+  *    UPDATE that can change a key, or that triggers observe, collects
+  *    its rows' old and new values once; [[updateWalk]] checks every
+  *    keyset over them in rowid scan order, as sqlite does;
   *  - `CREATE [TEMP] VIEW v AS select` → a SQL-created temp view.
   *    Unlike CTAS, views RE-EVALUATE on every reference (Spark stores
   *    the view text for SQL-created temp views and re-resolves it),
@@ -586,12 +589,6 @@ object ScriptDdl {
     total
   }
 
-  /** Batch-size bound for [[applyInsert]]'s driver-resident pk fast
-    * path: below it, key probes ship as a pushed-down IN filter over
-    * the stored table; above it, the plan-safe set-based joins run
-    * instead (and their per-statement jobs amortize over the batch). */
-  private val MaxDriverProbeKeys = 1000
-
   /** Above this estimate, a plan EXECUTION runs with whole-stage
     * codegen off (round 14, VERDICT r13 #1 — the janino tail): the
     * r13 sweep's ~12 interpreted fallbacks were all executions of an
@@ -950,10 +947,13 @@ object ScriptDdl {
             .putString(Affinity.DeclKey, Affinity.declaredTypeText(cd.declType))
           affinityTag(cd.declType).foreach(a =>
             metaB.putString(graft.plans.AffinityOrdering.AffinityKey, a))
-          val isPk = cd.pk || tablePk.exists(_.equalsIgnoreCase(cd.name))
-          if (isPk) {
+          // a key member records its 1-based position in the key:
+          // `PRIMARY KEY (b, a)` lists b first in its errors and in
+          // table_info
+          val keyPos = if (cd.pk) 1 else tablePk.indexWhere(_.equalsIgnoreCase(cd.name)) + 1
+          if (keyPos > 0) {
             val rowid = pkCount == 1 && cd.declType.trim.equalsIgnoreCase("integer")
-            metaB.putString(Affinity.PkKey, if (rowid) "rowid" else "pk")
+            metaB.putString(Affinity.PkKey, if (rowid) "rowid" else keyPos.toString)
           }
           if (cd.notNull) metaB.putString(Affinity.NotNullKey, "1")
           cd.defaultVal.foreach(v => metaB.putString(DefaultKey, v))
@@ -1356,62 +1356,80 @@ object ScriptDdl {
       for ((n, _) <- assigns if !target.columns.exists(_.equalsIgnoreCase(n)))
         throw new IllegalArgumentException(s"no such column: $n")
       // rightmost assignment to a column wins (SQLite rule); the
-      // unconditional new value, shared by the rebind projection and
-      // the RETURNING row set
+      // unconditional new value, shared by the rebind projection, the
+      // key walk's frame and the RETURNING row set
       def newValue(c: String): Option[org.apache.spark.sql.Column] =
         assigns.reverse.find(_._1.equalsIgnoreCase(c))
           .map { case (_, exprText) => storeCanonical(target, target, c, expr(exprText)) }
-      // UPDATE triggers: per matched row, OLD = current values, NEW =
-      // the assignments applied (computed in ONE positional
-      // projection so the pair stays aligned)
       val assignedCols = assigns.map(_._1)
+      def isAssigned(c: String) = assignedCols.exists(_.equalsIgnoreCase(c))
+      // every row of `t` with its scan handle — the rowid alias when
+      // the table has one; stored order via monotonically_increasing_id
+      // otherwise, the documented hidden-rowid approximation — and its
+      // evaluated WHERE flag
+      def scanned(t: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+        val scan = rowidOf(t.schema).map(rc => col(s"`$rc`").cast("long"))
+          .getOrElse(org.apache.spark.sql.functions.monotonically_increasing_id())
+        val hit = whereOpt.map(w => when(expr(w), lit(true)).otherwise(lit(false)))
+          .getOrElse(lit(true))
+        SqliteArith.fixup(spark, t.select((t.columns.map(c =>
+          col(s"`$c`").as(c, t.schema(c).metadata)).toSeq :+
+          scan.as("__scan") :+ hit.as("__hit")).toIndexedSeq: _*))
+      }
       // ROW-MAJOR trigger interleave (round 15, VERDICT r14 #3):
       // sqlite completes one matched row's BEFORE → apply → AFTER
       // chain before visiting the next row, in rowid scan order. When
-      // triggers observe the statement, the matched set is STAGED
-      // once — a localCheckpoint freezing the scan handle (the rowid
-      // alias when the table has one; stored order via
-      // monotonically_increasing_id otherwise, the documented
-      // hidden-rowid approximation), the evaluated WHERE flag and the
-      // pre-statement values — and each visited row's intermediate
+      // triggers observe the statement, the scanned table is STAGED
+      // once (a localCheckpoint freezing scan handles, WHERE flags and
+      // pre-statement values) and each visited row's intermediate
       // state projects from that frozen frame (assignments applied to
       // rows with __scan ≤ the visit point). sqlite declares a BEFORE
       // UPDATE/DELETE body that mutates the affected rows UNDEFINED,
       // so building every intermediate state from the pre-statement
       // stage is observably exact for defined programs.
-      val rowidScanCol: org.apache.spark.sql.Column =
-        rowidOf(target.schema).map(rc => col(s"`$rc`").cast("long"))
-          .getOrElse(org.apache.spark.sql.functions.monotonically_increasing_id())
       val withTrig = anyTriggers(state, name, "UPDATE", assignedCols)
       val staged: Option[org.apache.spark.sql.DataFrame] =
         if (!withTrig) None
         else {
-          val hitCol = whereOpt
-            .map(w => when(expr(w), lit(true)).otherwise(lit(false)))
-            .getOrElse(lit(true))
-          val plan = SqliteArith.fixup(spark, target.select(
-            (target.columns.map(c => col(s"`$c`").as(c, target.schema(c).metadata))
-              .toSeq :+ rowidScanCol.as("__scan") :+ hitCol.as("__hit"))
-              .toIndexedSeq: _*))
+          val plan = scanned(target)
           Some(withCodegenPolicy(spark, plan)(plan.localCheckpoint()))
         }
-      // visit-ordered (scan, OLD, NEW) triples of the matched rows
-      val updVisits: Seq[(Long, Row, Row)] = staged match {
-        case None => Nil
-        case Some(st) =>
-          val oldCols = target.columns.map(c => col(s"`$c`"))
-          val newCols = target.columns.map(c => newValue(c).getOrElse(col(s"`$c`")))
-          val n = target.columns.length
-          val pairsDf = SqliteArith.fixup(spark, st.where(col("__hit"))
-            .select((Seq(col("__scan")) ++ oldCols ++ newCols).toIndexedSeq: _*))
-          withCodegenPolicy(spark, pairsDf)(pairsDf.collect()).toSeq
-            .map(r => (if (r.isNullAt(0)) Long.MinValue else r.getLong(0),
-              Row.fromSeq((1 to n).map(r.get)),
-              Row.fromSeq((n + 1 to 2 * n).map(r.get))))
-            .sortBy(_._1)
+      // the keysets this statement can change: the PRIMARY KEY or a
+      // plain UNIQUE keyset with an assigned column, and every
+      // evaluated (expression / COLLATE / partial) keyset, whose
+      // referenced columns are not statically known
+      val walkSets = keysetsOf(state, name, target.schema)
+        .filter(ks => !ks.isPlain || ks.display.exists(isAssigned))
+      // one collect of the rows' (scan, hit, OLD, NEW) for the key
+      // walk and the trigger visits; the trigger-only frame holds just
+      // the hit rows
+      def frameOf(base: org.apache.spark.sql.DataFrame): UpdFrame = {
+        val cols = target.columns.toSeq
+        val news = cols.map(c => newValue(c).getOrElse(col(s"`$c`")))
+        // old values in the new values' types (an assigned column
+        // stores text), so both generations key in one schema
+        val types = base.select(news: _*).schema.fields.map(_.dataType).toSeq
+        val olds = cols.zip(types).map { case (c, t) => col(s"`$c`").cast(t) }
+        val sel = SqliteArith.fixup(spark,
+          (if (walkSets.isEmpty) base.where(col("__hit")) else base)
+            .select((Seq(col("__scan"), col("__hit")) ++ olds ++ news).toIndexedSeq: _*))
+        val n = cols.length
+        val rows = withCodegenPolicy(spark, sel)(sel.collect()).toSeq.map(r => UpdRow(
+          if (r.isNullAt(0)) Long.MinValue else r.getLong(0),
+          !r.isNullAt(1) && r.getBoolean(1),
+          Row.fromSeq((2 until 2 + n).map(r.get)),
+          Row.fromSeq((2 + n until 2 + 2 * n).map(r.get))))
+        UpdFrame(rows.sortBy(_.scan), StructType(target.schema.fields.zip(types)
+          .map { case (f, t) => f.copy(dataType = t) }))
       }
+      val frame =
+        if (walkSets.isEmpty && !withTrig) None
+        else Some(frameOf(staged.getOrElse(scanned(target))))
+      // visit-ordered matched rows, for the trigger chain
+      val updVisits: Seq[UpdRow] =
+        if (withTrig) frame.get.rows.filter(_.hit) else Nil
       val updPairs: Seq[(Option[Row], Option[Row])] =
-        updVisits.map { case (_, o, nw) => (Some(o), Some(nw)) }
+        updVisits.map(v => (Some(v.old), Some(v.nw)))
       val rowMajor = updVisits.length > 1
       // phase-major only for the 0/1-row case (identical interleave);
       // a BEFORE body may have mutated this table there, so the
@@ -1421,11 +1439,8 @@ object ScriptDdl {
       // a BEFORE body may have mutated this table: rebuild the rebind
       // over the current view (the WHERE/SET texts re-resolve there)
       val rebindTarget = if (firedBefore) spark.table(name) else target
-      def newValue2(c: String): Option[org.apache.spark.sql.Column] =
-        assigns.reverse.find(_._1.equalsIgnoreCase(c))
-          .map { case (_, t) => storeCanonical(rebindTarget, rebindTarget, c, expr(t)) }
-      val proj2 = rebindTarget.columns.map { c =>
-        newValue2(c) match {
+      val proj = rebindTarget.columns.map { c =>
+        newValue(c) match {
           case Some(assigned) =>
             (whereOpt match {
               case Some(w) => when(expr(w), assigned).otherwise(col(s"`$c`"))
@@ -1434,150 +1449,28 @@ object ScriptDdl {
           case None => col(s"`$c`")
         }
       }
-      // Collapse BEFORE the constraint probes (round 14, VERDICT r13
-      // #1): a key-laden WHERE duplicated per rebind column can jump
-      // this one statement's plan past janino's 64 KB, and the probes
-      // would each pay the failed compile; collapsing first (with the
-      // codegen-off materialization past NoCodegenBytes) hands them a
-      // leaf instead.
+      // Collapse BEFORE the NOT NULL probe: a key-laden WHERE
+      // duplicated per rebind column can jump this one statement's
+      // plan past janino's 64 KB, and the probe would pay the failed
+      // compile; collapsing first (with the codegen-off
+      // materialization past NoCodegenBytes) hands it a leaf instead.
       val updated = collapseIfDeep(SqliteArith.fixup(spark,
-        rebindTarget.select(proj2.toIndexedSeq: _*)))
-      // sqlite applies UPDATE row-at-a-time in rowid scan order with
-      // no deferred uniqueness, so a TRANSIENT key collision errors
-      // even when the final state is consistent (round-14 fuzz seed
-      // 1905: pk values {0, 7, 42}, SET a = b turns 0 into 7 while
-      // row 7 is still pending). Simulated driver-side per reassigned
-      // PLAIN keyset: the live set holds keys of not-yet-visited and
-      // already-updated rows; each matched row swaps old → new and
-      // errors on a live-set hit (removing first, so key = key never
-      // self-conflicts — sqlite's own exclusion of the row's current
-      // entry). Scan order is the old rowid where the table has a
-      // rowid alias; stored order otherwise (hidden rowids aren't
-      // tracked through rebind chains — same documented family as the
-      // min/max tie-order deviation). DOCUMENTED DEVIATION (ADVICE
-      // r14 #4): sqlite's actual visit order follows the CHOSEN SCAN
-      // — an index-driven WHERE can visit rows in index order, which
-      // changes WHICH transient collision (if any) fires; this walk
-      // always pins rowid order. A fuzz divergence on an
-      // indexed-WHERE UPDATE whose transient outcome depends on visit
-      // order belongs to this family. Evaluated keysets (expression /
-      // COLLATE / partial) walk too — round-14 fuzz seed 16808: with
-      // a NOCASE index on c, `SET c = length(b)` turned row 1's ''
-      // into 0 while row 4 still held its old 0, and sqlite errors on
-      // that transient hit. Their old keys are computed in the same
-      // projection that applies the assignments (expressions see the
-      // OLD row; outputs carry the NEW values under the original
-      // column names), and a second projection on top evaluates the
-      // key expressions against the new values — so both key
-      // generations stay row-aligned in one plan.
-      def transientUniqueWalk(): Unit = {
-        val schemaF = rebindTarget.schema
-        val pkColsT = schemaF.fields
-          .filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
-        val rowidT = rowidOf(schemaF)
-        def touched(ks: Seq[String]) =
-          ks.exists(c => assignedCols.exists(_.equalsIgnoreCase(c)))
-        val keysets: Seq[Seq[String]] =
-          (if (pkColsT.nonEmpty && touched(pkColsT)) Seq(pkColsT) else Nil) ++
-            uniqueKeysFor(state, name).filter(_.isPlain).map(_.display.map(c =>
-              schemaF.fields.map(_.name).find(_.equalsIgnoreCase(c)).getOrElse(c)))
-              .filter(touched)
-        keysets.foreach { (ks: Seq[String]) =>
-          val n = ks.size
-          val matchedCol = whereOpt
-            .map(w => when(expr(w), lit(true)).otherwise(lit(false)))
-            .getOrElse(lit(true))
-          val proj: Seq[org.apache.spark.sql.Column] =
-            Seq(rowidT.map(rc => col(s"`$rc`").cast("long"))
-                  .getOrElse(org.apache.spark.sql.functions
-                    .monotonically_increasing_id()).as("__scan"),
-                matchedCol.as("__hit")) ++
-              ks.zipWithIndex.map { case (c, i) =>
-                uniqueKeyCol(col(s"`$c`"), schemaF(c)).as(s"__o$i") } ++
-              ks.zipWithIndex.map { case (c, i) =>
-                uniqueKeyCol(newValue2(c).getOrElse(col(s"`$c`")), schemaF(c))
-                  .as(s"__n$i") }
-          val frame = SqliteArith.fixup(spark,
-            rebindTarget.select(proj.toIndexedSeq: _*))
-          val rows = withCodegenPolicy(spark, frame)(frame.collect())
-            .sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
-          def keyOf(r: Row, base: Int): Option[Seq[String]] = {
-            val vs = (0 until n).map(i => r.get(base + i))
-            if (vs.contains(null)) None
-            else Some(vs.map(v => ScriptRunner.renderValue(v)))
-          }
-          val live = scala.collection.mutable.Map.empty[Seq[String], Int]
-          rows.foreach(r =>
-            keyOf(r, 2).foreach(k => live(k) = live.getOrElse(k, 0) + 1))
-          rows.foreach { r =>
-            if (!r.isNullAt(1) && r.getBoolean(1)) {
-              keyOf(r, 2).foreach { k =>
-                val c = live(k) - 1
-                if (c == 0) live.remove(k) else live(k) = c
-              }
-              keyOf(r, 2 + n).foreach { k =>
-                if (live.contains(k)) uniqueErr(name, ks)
-                live(k) = live.getOrElse(k, 0) + 1
-              }
-            }
-          }
-        }
-        // evaluated keysets (expression / COLLATE / partial): any
-        // assignment re-walks (referenced columns aren't statically
-        // known — same rule as checkExistingUniqueSpec)
-        for (ks <- uniqueKeysFor(state, name) if !ks.isPlain) {
-          val n = ks.exprs.size
-          val matchedCol = whereOpt
-            .map(w => when(expr(w), lit(true)).otherwise(lit(false)))
-            .getOrElse(lit(true))
-          def keyCols(tag: String) = ks.exprs.zipWithIndex.map { case (t, i) =>
-            normKeyCol(expr(t), keyTextAffinity(schemaF, ks, i)).as(s"__$tag$i") }
-          def whereCol(tag: String) = ks.where
-            .map(w => when(expr(w), lit(true)).otherwise(lit(false)))
-            .getOrElse(lit(true)).as(s"__$tag")
-          val newCols = schemaF.fields.map(f =>
-            newValue2(f.name).getOrElse(col(s"`${f.name}`")).as(f.name)).toSeq
-          val step1 = rebindTarget.select(
-            (Seq(rowidT.map(rc => col(s"`$rc`").cast("long"))
-                  .getOrElse(org.apache.spark.sql.functions
-                    .monotonically_increasing_id()).as("__scan"),
-                matchedCol.as("__hit"), whereCol("ow")) ++
-              keyCols("o") ++ newCols).toIndexedSeq: _*)
-          val step2 = step1.select(
-            (Seq(col("__scan"), col("__hit"), col("__ow")) ++
-              (0 until n).map(i => col(s"__o$i")) ++
-              keyCols("n") :+ whereCol("nw")).toIndexedSeq: _*)
-          val frame = SqliteArith.fixup(spark, step2)
-          val rows = withCodegenPolicy(spark, frame)(frame.collect())
-            .sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
-          // columns: 0 __scan, 1 __hit, 2 __ow, 3.. old keys,
-          // 3+n.. new keys, 3+2n __nw
-          def keyOf2(r: Row, base: Int): Option[Seq[String]] = {
-            val vs = (0 until n).map(i => r.get(base + i))
-            if (vs.contains(null)) None
-            else Some(vs.map(v => ScriptRunner.renderValue(v)))
-          }
-          def flag(r: Row, i: Int) = !r.isNullAt(i) && r.getBoolean(i)
-          val live = scala.collection.mutable.Map.empty[Seq[String], Int]
-          rows.foreach(r => if (flag(r, 2))
-            keyOf2(r, 3).foreach(k => live(k) = live.getOrElse(k, 0) + 1))
-          rows.foreach { r =>
-            if (flag(r, 1)) {
-              if (flag(r, 2)) keyOf2(r, 3).foreach { k =>
-                val c = live(k) - 1
-                if (c == 0) live.remove(k) else live(k) = c
-              }
-              if (flag(r, 3 + 2 * n)) keyOf2(r, 3 + n).foreach { k =>
-                if (live.contains(k)) uniqueErrText(ks.errText)
-                live(k) = live.getOrElse(k, 0) + 1
-              }
-            }
-          }
-        }
-      }
-      transientUniqueWalk()
-      enforceUpdateConstraints(spark, name, rebindTarget, updated,
-        assigns.map(_._1), state)
+        rebindTarget.select(proj.toIndexedSeq: _*)))
+      // constraints, in this precedence: the key walk, NOT NULL on the
+      // assigned columns (one probe), the rowid alias's datatype. An
+      // assigned rowid touches the PRIMARY KEY, so the frame holds
+      // every row then. A BEFORE body that ran may have changed the
+      // table, so the walk reads it again.
+      val walked =
+        if (firedBefore && walkSets.nonEmpty) Some(frameOf(scanned(rebindTarget)))
+        else frame
+      if (walkSets.nonEmpty) updateWalk(spark, walkSets, walked.get)
+      checkNotNull(name, rebindTarget.schema, updated, assignedCols)
+      for (rc <- rowidOf(target.schema) if isAssigned(rc);
+           i = target.schema.fieldIndex(rc); v <- walked.get.rows if v.hit)
+        if (v.nw.isNullAt(i) ||
+            !Affinity.IntRe.matches(ScriptRunner.renderValue(v.nw.get(i))))
+          throw new IllegalArgumentException("datatype mismatch")
       if (!rowMajor) {
         commitTable(spark, name, updated)
         fireTriggers(spark, state, name, "AFTER", "UPDATE", assignedCols,
@@ -1587,18 +1480,18 @@ object ScriptDdl {
         // assignments applied through this row → AFTER, so an AFTER
         // body querying the table sees the partial application
         // exactly where sqlite's walk would. Constraints were checked
-        // on the final state above, BEFORE any firing — an erroring
-        // statement leaves the table untouched, like sqlite's
-        // statement rollback. CLI-batch-sized driver loop, same class
-        // as the INSERT sub-batches.
+        // above, BEFORE any firing — an erroring statement leaves the
+        // table untouched, like sqlite's statement rollback.
+        // CLI-batch-sized driver loop, same class as the INSERT
+        // sub-batches.
         val st = staged.get
-        for ((scanJ, o, nw) <- updVisits) {
+        for (v <- updVisits) {
           fireTriggers(spark, state, name, "BEFORE", "UPDATE", assignedCols,
-            target.schema, Seq((Some(o), Some(nw))))
+            target.schema, Seq((Some(v.old), Some(v.nw))))
           val projJ = target.columns.map { c =>
             newValue(c) match {
               case Some(assigned) =>
-                when(col("__hit") && col("__scan") <= lit(scanJ), assigned)
+                when(col("__hit") && col("__scan") <= lit(v.scan), assigned)
                   .otherwise(col(s"`$c`")).as(c, target.schema(c).metadata)
               case None => col(s"`$c`")
             }
@@ -1606,7 +1499,7 @@ object ScriptDdl {
           val stateJ = SqliteArith.fixup(spark, st.select(projJ.toIndexedSeq: _*))
           commitTable(spark, name, stateJ)
           fireTriggers(spark, state, name, "AFTER", "UPDATE", assignedCols,
-            target.schema, Seq((Some(o), Some(nw))))
+            target.schema, Seq((Some(v.old), Some(v.nw))))
         }
       }
       // RETURNING sees the NEW values of exactly the rows the WHERE
@@ -1708,7 +1601,7 @@ object ScriptDdl {
       // UNIQUE index is different: it constrains every later INSERT /
       // UPDATE, so it parses its column list, checks the EXISTING
       // rows, and registers as an enforced keyset (read by
-      // applyInsert / applyUpsert / enforceUpdateConstraints).
+      // insertWalk / updateWalk / applyUpsert through keysetsOf).
       // Expression, COLLATE and partial (WHERE) UNIQUE indexes
       // enforce through evaluated keysets (round 7); plain indexes
       // keep accepting any column-list text as a pure no-op.
@@ -2281,49 +2174,20 @@ object ScriptDdl {
     else Affinity.canonicalExpr(rendered, aff)
   }
 
-  /** UPDATE-time constraint surface, only when the table declares
-    * constraints and the statement assigns a constrained column
-    * (sqlite3-pinned): an assigned NOT NULL column rejects NULL, an
-    * assigned rowid alias rejects NULL and non-integral values with
-    * "datatype mismatch" (the NUMERIC canonicalization upstream
-    * already stores '2.0' as 2), and an assigned pk rejects duplicate
-    * FINAL states. The final-state uniqueness check is deliberately
-    * set-based: sqlite3's row-at-a-time scan can also fail on
-    * transient dups (`SET k = k+1` over dense keys) — this engine is
-    * strictly more permissive there, which set semantics make the
-    * honest choice. */
-  private def enforceUpdateConstraints(
-      spark: SparkSession, name: String, target: org.apache.spark.sql.DataFrame,
-      updated: org.apache.spark.sql.DataFrame, assigned: Seq[String],
-      state: State): Unit = {
-    val schema = target.schema
-    def isAssigned(c: String) = assigned.exists(_.equalsIgnoreCase(c))
-    val nn = schema.fields
-      .filter(f => f.metadata.contains(Affinity.NotNullKey) && isAssigned(f.name)).map(_.name)
-    for (c <- nn)
-      if (updated.where(col(s"`$c`").isNull).limit(1).count() > 0)
-        throw new IllegalArgumentException(s"NOT NULL constraint failed: $name.$c")
-    val pkCols = schema.fields.filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
-    if (pkCols.nonEmpty && pkCols.exists(isAssigned)) {
-      for (rc <- rowidOf(schema) if isAssigned(rc))
-        if (updated.where(col(s"`$rc`").isNull ||
-            !col(s"`$rc`").cast("string").rlike(s"^${Affinity.IntRe}$$")).limit(1).count() > 0)
-          throw new IllegalArgumentException("datatype mismatch")
-      checkExistingUnique(updated, name, pkCols)
-    }
-    // UNIQUE indexes whose keyset an assignment touches: final-state
-    // dup check, same set-based transient-dup permissiveness as pk
-    for (ks <- uniqueKeysFor(state, name)) {
-      if (ks.isPlain) {
-        if (ks.display.exists(isAssigned))
-          checkExistingUnique(updated, name, ks.display)
-      } else {
-        // expression/partial keysets: referenced columns are not
-        // statically known, so any assignment re-checks (bounded:
-        // CLI-scoped tables)
-        checkExistingUniqueSpec(spark, updated, ks)
+  /** NOT NULL over the columns an UPDATE or DO UPDATE assigns
+    * (sqlite3-pinned): one probe of `updated` for a row holding a NULL
+    * in any of them, reported by its first such column. */
+  private def checkNotNull(name: String, schema: StructType,
+      updated: DataFrame, assigned: Seq[String]): Unit = {
+    val nn = schema.fieldNames.toSeq.filter(c =>
+      schema(c).metadata.contains(Affinity.NotNullKey) && assigned.exists(_.equalsIgnoreCase(c)))
+    if (nn.isEmpty) return
+    val nulls = nn.map(c => col(s"`$c`").isNull)
+    updated.where(nulls.reduce(_ || _)).select(nulls: _*).limit(1).collect()
+      .headOption.foreach { r =>
+        throw new IllegalArgumentException(
+          s"NOT NULL constraint failed: $name.${nn(r.toSeq.indexOf(true))}")
       }
-    }
   }
 
   /** The PRAGMA surface (reference forwards PRAGMA statements to
@@ -2395,9 +2259,9 @@ object ScriptDdl {
       .toDF("cid", "name", "type", "notnull", "dflt_value", "pk")
     if (!spark.catalog.tableExists(table)) return empty
     val view = isView(spark, table)
-    val fields = spark.table(table).schema.fields
-    var pkOrd = 0L
-    val rows = fields.zipWithIndex.map { case (f, i) =>
+    val schema = spark.table(table).schema
+    val pk = pkColumns(schema)
+    val rows = schema.fields.zipWithIndex.map { case (f, i) =>
       val m = f.metadata
       val declOpt = if (m.contains(Affinity.DeclKey)) Some(m.getString(Affinity.DeclKey)) else None
       val decl =
@@ -2406,9 +2270,8 @@ object ScriptDdl {
       val notNull = if (!view && m.contains(Affinity.NotNullKey)) 1L else 0L
       val dflt =
         if (!view && m.contains(DefaultSqlKey)) m.getString(DefaultSqlKey) else null
-      val pk =
-        if (!view && m.contains(Affinity.PkKey)) { pkOrd += 1; pkOrd } else 0L
-      (i.toLong, f.name, decl, notNull, dflt, pk)
+      val keyPos = if (view) 0L else pk.indexOf(f.name) + 1L
+      (i.toLong, f.name, decl, notNull, dflt, keyPos)
     }
     rows.toSeq.toDF("cid", "name", "type", "notnull", "dflt_value", "pk")
   }
@@ -2459,12 +2322,18 @@ object ScriptDdl {
     * one per UNIQUE index / constraint, plain column lists resolved to
     * the schema's field case. */
   private def keysetsOf(state: State, name: String, schema: StructType): Seq[KeySpec] = {
-    val pk = schema.fields.filter(_.metadata.contains(Affinity.PkKey)).map(_.name).toSeq
+    val pk = pkColumns(schema)
     def field(c: String) = schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(c)
     (if (pk.nonEmpty) Seq(KeySpec.ofCols(name, pk)) else Nil) ++
       uniqueKeysFor(state, name).map(ks =>
         if (ks.isPlain) KeySpec.ofCols(name, ks.display.map(field)) else ks)
   }
+
+  /** The table's PRIMARY KEY columns in key order (the rowid alias
+    * stores "rowid" and is the key's only column). */
+  private def pkColumns(schema: StructType): Seq[String] =
+    schema.fields.toSeq.filter(_.metadata.contains(Affinity.PkKey))
+      .sortBy(_.metadata.getString(Affinity.PkKey).toIntOption.getOrElse(0)).map(_.name)
 
   /** The table's `INTEGER PRIMARY KEY` rowid alias, if it has one. */
   private def rowidOf(schema: StructType): Option[String] =
@@ -2702,6 +2571,55 @@ object ScriptDdl {
     }
   }
 
+  /** One row of an UPDATE's frame: its scan handle, whether the WHERE
+    * matched it, its stored values and the values the assignments
+    * give it. */
+  private final case class UpdRow(scan: Long, hit: Boolean, old: Row, nw: Row)
+
+  /** An UPDATE's rows in scan order, and the schema of their values,
+    * old and new alike (an assigned column stores text). */
+  private final case class UpdFrame(rows: Seq[UpdRow], schema: StructType)
+
+  /** The key check of an UPDATE over `keysets`, row at a time like
+    * sqlite's. SQLite applies UPDATE in rowid scan order with no
+    * deferred uniqueness, so a TRANSIENT collision errors even when
+    * the final state would be consistent (fuzz seed 1905: pk
+    * values {0, 7, 42}, `SET a = b` turns 0 into 7 while row 7 is
+    * still pending; seed 16808: with a NOCASE index on c,
+    * `SET c = length(b)` turns row 1's '' into 0 while row 4 still
+    * holds its old 0). Every row's old key starts live; each matched
+    * row, in scan order, removes its old key, errors on a live hit and
+    * adds its new key, keyset by keyset (removing first, so `k = k`
+    * never conflicts with itself). That also decides the final state:
+    * an unmatched row's key stays live throughout and a matched row
+    * adds its new key at its turn, so the second holder of any final
+    * key errors when its turn comes. Keys are [[proposedKeys]]': plain
+    * keysets read the driver rows, evaluated keysets take one select
+    * over the old rows and the matched rows' new ones.
+    *
+    * DOCUMENTED DEVIATION: sqlite's visit order follows the CHOSEN
+    * SCAN — an index-driven WHERE can visit rows in index order, which
+    * changes WHICH transient collision (if any) fires; this walk
+    * always pins rowid order (stored order without a rowid alias). */
+  private def updateWalk(spark: SparkSession, keysets: Seq[KeySpec], f: UpdFrame): Unit = {
+    val n = f.rows.length
+    val hits = f.rows.indices.filter(f.rows(_).hit)
+    // keys(j)(i): row i's old key for i < n, the h-th matched row's
+    // new key at n + h
+    val keys = proposedKeys(spark, f.schema, keysets,
+      (f.rows.map(_.old) ++ hits.map(f.rows(_).nw)).toArray)
+    val live = keysets.map(_ => collection.mutable.HashMap.empty[Seq[String], Int])
+    for (j <- keysets.indices; k <- keys(j).take(n).flatten)
+      live(j)(k) = live(j).getOrElse(k, 0) + 1
+    for ((i, h) <- hits.zipWithIndex; j <- keysets.indices) {
+      keys(j)(i).foreach(k => if (live(j)(k) == 1) live(j).remove(k) else live(j)(k) -= 1)
+      keys(j)(n + h).foreach { k =>
+        if (live(j).contains(k)) uniqueErrText(keysets(j).errText)
+        live(j)(k) = 1
+      }
+    }
+  }
+
   /** Bind one `INSERT … ON CONFLICT` batch (SQLite UPSERT, 3.24+
     * dialect). The conflict target must name the table's PRIMARY KEY
     * or a UNIQUE index's keyset; anything else gets
@@ -2805,24 +2723,28 @@ object ScriptDdl {
     cur = append(cur, nullKeyed)
     retParts += nullKeyed
     insParts += nullKeyed
-    // post-assignment constraint surface: NN on updated rows, and
-    // final-state pk uniqueness when DO UPDATE reassigns the key
-    // (sqlite3 allows `do update set k = …`; a duplicate final state
-    // errors)
-    up.set.foreach { case (setText, _) =>
-      enforceUpdateConstraints(spark, name, target, cur,
-        splitTopLevel(setText).map(parseAssignment).map(_._1), state)
-    }
-    // the upsert clause only absorbs conflicts on ITS keyset: a fresh
-    // insert (or DO-UPDATE result) violating a different uniqueness
-    // constraint still errors, like sqlite3. Evaluated (expression /
-    // COLLATE / partial) keysets too — round-15 fuzz seed 23660: an
+    // post-assignment constraint surface: NOT NULL and the rowid
+    // alias's datatype on the assigned columns, then every keyset at
+    // most once, distributed like CREATE UNIQUE INDEX's check. The
+    // conflict target only when DO UPDATE assigns into it: its
+    // conflicts are the ones the clause absorbs (sqlite3 allows
+    // `do update set k = …`; a duplicate final state errors). Every
+    // other keyset, plain or evaluated, can be broken by a fresh
+    // insert or an updated row, like sqlite3 (fuzz seed 23660: an
     // `ON CONFLICT (a) DO NOTHING` insert whose fresh row collided on
-    // a `lower(c)` unique index sailed through while sqlite errors
-    // (the conflict target can only resolve to a PLAIN keyset here,
-    // so evaluated keysets are never the absorbing target)
-    for (ks <- allKs if ks != pkCols) checkExistingUnique(cur, name, ks)
-    for (ks <- keysets if !ks.isPlain) checkExistingUniqueSpec(spark, cur, ks)
+    // a `lower(c)` unique index sailed through while sqlite errors;
+    // the conflict target only resolves to a PLAIN keyset, so an
+    // evaluated keyset never absorbs).
+    def isAssigned(c: String) = updAssigned.exists(_.equalsIgnoreCase(c))
+    checkNotNull(name, schema, cur, updAssigned)
+    for (rc <- rowidOf(schema) if isAssigned(rc))
+      if (cur.where(col(s"`$rc`").isNull ||
+          !col(s"`$rc`").cast("string").rlike(s"^${Affinity.IntRe}$$")).limit(1).count() > 0)
+        throw new IllegalArgumentException("datatype mismatch")
+    for (ks <- keysets)
+      if (!ks.isPlain) checkExistingUniqueSpec(spark, cur, ks)
+      else if (ks.display != pkCols || ks.display.exists(isAssigned))
+        checkExistingUnique(cur, name, ks.display)
     (ordered(schema, cur), retParts.reduce(_ unionByName _),
       insParts.reduce(_ unionByName _), updPairs.toSeq, updAssigned)
   }

@@ -28,8 +28,9 @@ object Affinity {
     *  - [[DeclKey]]: the declared type text, sqlite3-normalized (see
     *    [[declaredTypeText]]); "" for an untyped column.
     *  - [[PkKey]]: "rowid" for SQLite's `INTEGER PRIMARY KEY` rowid
-    *    alias (autoassigns on NULL/omitted INSERT), "pk" for any other
-    *    PRIMARY KEY member (uniqueness only, NULLs allowed).
+    *    alias (autoassigns on NULL/omitted INSERT); for any other
+    *    PRIMARY KEY member (uniqueness only, NULLs allowed) its 1-based
+    *    position in the key, as text.
     *  - [[NotNullKey]]: present when declared NOT NULL. */
   val DeclKey = "graft.decl.type"
   val PkKey = "graft.decl.pk"

@@ -2189,7 +2189,7 @@ class CliSpec extends SparkSpec {
   }
 
   /** Runs `body` with the named script tables absent before and after. */
-  private def freshTables(names: String*)(body: => Unit): Unit = {
+  private def freshTables[T](names: String*)(body: => T): T = {
     names.foreach(spark.catalog.dropTempView)
     try body finally names.foreach(spark.catalog.dropTempView)
   }
@@ -2324,6 +2324,64 @@ class CliSpec extends SparkSpec {
     // CREATE UNIQUE INDEX checks the stored rows (1 job); the INSERT
     // adds one probe of the stored ids on top of the two above
     assert(jobs(s"create unique index i on a(id); ${ins}select count(*) from a") == 6)
+  }
+
+  test("a keyed UPDATE checks its keys from one collected frame; an UPSERT probes each keyset once") {
+    val f = tempFile(grid)
+    val setup = "create table t (k integer primary key, b, c); create unique index i1 on t(b); " +
+      "create unique index i2 on t(lower(c)); insert into t values (1,1,'x'),(2,5,'y'),(3,9,'z')"
+    def run(script: String): ((Int, String), Int) = freshTables("t") {
+      org.apache.spark.JobCounter.count(spark.sparkContext)(sqawk(script, f))
+    }
+    // the load's stats job, the two index checks and the keyed INSERT
+    assert(run(setup) == ((0, ""), 6))
+    // the frame collect (3 jobs: the stored plan sorts by rowid) and
+    // one select keying lower(c) for old and new rows alike
+    for ((stmt, rows) <- Seq(
+        "update t set b = b + 1 where k > 1" -> "1 1 x\n2 6 y\n3 10 z\n",
+        "update t set k = k + 10 where k > 1" -> "1 1 x\n12 5 y\n13 9 z\n")) {
+      assert(run(s"$setup; $stmt") == ((0, ""), 10), stmt)
+      assert(run(s"$setup; $stmt; select * from t")._1 == ((0, rows)), stmt)
+    }
+    // the batch collect, the rounds and one probe each of b and
+    // lower(c); the conflict target k is not assigned, so it is not
+    // probed
+    val upsert = "insert into t values (2, 7, 'q') on conflict(k) " +
+      "do update set b = excluded.b, c = excluded.c"
+    assert(run(s"$setup; $upsert") == ((0, ""), 21))
+    assert(run(s"$setup; $upsert; select * from t")._1 == ((0, "1 1 x\n2 7 q\n3 9 z\n")))
+    // an UPDATE that touches no keyset runs no constraint job
+    val awk = tempFile("x 1\ny 2\nz 3\n")
+    def awkJobs(script: String): ((Int, String), Int) =
+      org.apache.spark.JobCounter.count(spark.sparkContext)(sqawk(script, awk))
+    val sums = "select count(*), sum(a2) from a"
+    assert(awkJobs(sums) == ((0, "3 6\n"), 2))
+    assert(awkJobs(s"update a set a2 = a2 + 1 where a1 = 'x'; $sums") == ((0, "3 7\n"), 2))
+  }
+
+  test("UPDATE key errors: a transient collision, a BEFORE trigger's row (sqlite3-pinned)") {
+    for (script <- Seq(
+        "insert into t values (1, 1), (2, 2), (3, 3); update t set b = b + 1 where k >= 2",
+        "insert into t values (1, 1); " +
+          "create trigger tr before update on t begin insert into t values (9, 5); end; " +
+          "update t set b = 5 where k = 1")) freshTables("t") {
+      assert(sqawkErr("create table t (k integer primary key, b unique); " +
+        s"$script; select b from t", tempFile(grid)) ==
+        ((1, "", Seq("error: UNIQUE constraint failed: t.b"))), script)
+    }
+  }
+
+  test("a composite PRIMARY KEY keeps key order in table_info and its errors (sqlite3-pinned)") {
+    freshTables("t") {
+      assert(sqawkErr("create table t (a, b, primary key (b, a)); pragma table_info(t); " +
+        "insert into t values (1, 2); insert into t values (1, 2)", tempFile(grid)) ==
+        ((1, "0 a  0  2\n1 b  0  1\n", Seq("error: UNIQUE constraint failed: t.b, t.a"))))
+    }
+    freshTables("t") {
+      assert(sqawkErr("create table t (a, b, v, primary key (b, a)); " +
+        "insert into t values (1, 2, 'p'), (2, 2, 'q'); update t set a = 3 - a", tempFile(grid)) ==
+        ((1, "", Seq("error: UNIQUE constraint failed: t.b, t.a"))))
+    }
   }
 
   test("EXPLAIN QUERY PLAN answers with the formatted plan") {

@@ -291,16 +291,20 @@ object SqlScriptFuzz {
       if (pkIdx.isEmpty && rnd.nextInt(5) == 0)
         s", UNIQUE (${cols(1 + rnd.nextInt(cols.size - 1)).name})"
       else ""
-    // a composite PRIMARY KEY (a, b): a non-rowid key whose components
-    // may be NULL and may hold any affinity. Its draw comes from its
-    // own stream, so the statements `rnd` yields are those the seed
-    // drew before the arm existed; the seed is spread first, since the
-    // first draws of java.util.Random for nearby seeds agree. The
-    // ALTER arm below only drops or renames the last column (index
-    // >= 2), never a key column.
-    val compositePk =
-      pkIdx.isEmpty && new Random(seed * 0x9e3779b97f4a7c15L).nextInt(4) == 0
-    val pkConstraint = if (compositePk) ", PRIMARY KEY (a, b)" else ""
+    // a composite PRIMARY KEY (a, b) or (b, a): a non-rowid key whose
+    // components may be NULL and may hold any affinity, listed in
+    // schema order or against it (key order names the columns in its
+    // errors). Its draws come from their own stream, so the statements
+    // `rnd` yields are those the seed drew before the arm existed; the
+    // seed is spread first, since the first draws of java.util.Random
+    // for nearby seeds agree. The ALTER arm below only drops or
+    // renames the last column (index >= 2), never a key column.
+    val pkRnd = new Random(seed * 0x9e3779b97f4a7c15L)
+    val compositePk = pkIdx.isEmpty && pkRnd.nextInt(4) == 0
+    val pkConstraint =
+      if (!compositePk) ""
+      else if (pkRnd.nextBoolean()) ", PRIMARY KEY (b, a)"
+      else ", PRIMARY KEY (a, b)"
     stmts += s"${cm("CREATE TABLE t1")} (${cm(colDefs.mkString(", ") + tableConstraint)}$pkConstraint)"
 
     // --- initial INSERTs -------------------------------------------
